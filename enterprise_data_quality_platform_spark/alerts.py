@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .checks.definitions import CheckResult
+from .session import local_frame
 
 ALERT_SCHEMA = T.StructType(
     [
@@ -65,11 +66,11 @@ class AlertSink:
         # cheap local-path check first (avoids a logged AnalysisException on
         # the first write); the try/except stays for non-local filesystems
         if "://" not in self.path and not os.path.exists(self.path):
-            return self.spark.createDataFrame([], ALERT_SCHEMA)
+            return local_frame(self.spark, [], ALERT_SCHEMA)
         try:
             return self.spark.read.parquet(self.path)
         except Exception:
-            return self.spark.createDataFrame([], ALERT_SCHEMA)
+            return local_frame(self.spark, [], ALERT_SCHEMA)
 
     def open_incidents(self) -> DataFrame:
         """Incidents with a trigger not followed by a resolve."""
@@ -116,7 +117,7 @@ class AlertSink:
         ]
         if not rows:
             return 0
-        new = self.spark.createDataFrame(rows, ALERT_SCHEMA)
+        new = local_frame(self.spark, rows, ALERT_SCHEMA)
         deduped = new.join(self.open_incidents(), on="incident_key", how="left_anti")
         n = deduped.count()
         if n:
@@ -131,7 +132,7 @@ class AlertSink:
             return 0
         now = datetime.now(timezone.utc).replace(tzinfo=None)
         row = [(key, "resolve", channel, self.service, check_name, None, None, now)]
-        self.spark.createDataFrame(row, ALERT_SCHEMA).write.mode("append").parquet(
+        local_frame(self.spark, row, ALERT_SCHEMA).write.mode("append").parquet(
             self.path
         )
         return 1

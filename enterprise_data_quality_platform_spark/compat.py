@@ -53,6 +53,9 @@ class DataValidationPipeline:
                 if k not in cols:
                     cols.append(k)
         rows = [Row(**{c: rec.get(c) for c in cols}) for rec in data]
+        # the one createDataFrame(list) left: there is no schema to build
+        # an Arrow table from (session.local_frame) — it is inferred from
+        # the caller's row-dicts
         return self.spark.createDataFrame(rows)
 
     @staticmethod

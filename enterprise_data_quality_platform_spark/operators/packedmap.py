@@ -190,10 +190,12 @@ def _footer_col_minmax(
     """Exact (min, max) of an integral column from parquet column-chunk
     statistics only — metadata, no scan. Returns ``None`` when the stats
     cannot prove the bound: any value-bearing chunk without exact min/max,
-    a non-parquet path, or more than ``max_files`` files (the cap keeps
-    this a bounded driver-side read at 100 TB — callers fall back to an
-    in-plan guard). Returns ``(None, None)`` for an empty / all-null
-    column (vacuously in any range: no values exist to violate it)."""
+    a min/max that is not an ``int`` (a string, float or decimal column
+    has no integral bound to prove), a non-parquet path, or more than
+    ``max_files`` files (the cap keeps this a bounded driver-side read at
+    100 TB — callers fall back to an in-plan guard). Returns
+    ``(None, None)`` for an empty / all-null column (vacuously in any
+    range: no values exist to violate it)."""
     import os
 
     import pyarrow.parquet as pq
@@ -230,7 +232,9 @@ def _footer_col_minmax(
                     if st is None and ch.num_values:
                         return None
                     continue
-                if not st.has_min_max:
+                if not st.has_min_max or not all(
+                    type(v) is int for v in (st.min, st.max)
+                ):
                     return None
                 mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)

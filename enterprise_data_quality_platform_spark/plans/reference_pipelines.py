@@ -43,7 +43,9 @@ def validation_pipeline(
     )
 
     def validate_raw(ctx: Ctx):
-        tables = load_tables(spark, sf_dir)
+        # only the tables the DAG reads: each one costs a schema-inference
+        # job on a cold session
+        tables = load_tables(spark, sf_dir, ("orders", "customer", "nation", "region"))
         ctx["tables"] = tables
         results = run_suite(
             tables,
@@ -184,7 +186,9 @@ def etl_pipeline(spark: SparkSession, sf_dir: str) -> Pipeline:
     validation (Glue-etl-pipeline.py:64-129), natively."""
 
     def load(ctx: Ctx):
-        ctx["tables"] = load_tables(spark, sf_dir)
+        ctx["tables"] = load_tables(
+            spark, sf_dir, ("part", "customer", "nation", "region", "lineitem", "orders")
+        )
         return True
 
     def product_master(ctx: Ctx) -> DataFrame:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..checks import Check, run_suite
 from ..functions.numeric import fx_avg, fx_round, fx_sum, sql_avg, sql_round, sql_sum
+from ..session import local_frame
 from .registry import register
 
 # Whitelist deliberately excludes NATION_20..24 to create violations, the
@@ -589,8 +590,8 @@ def dq_expression_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     r = results[0]
-    return spark.createDataFrame(
-        [(r.total, r.violations)], "total bigint, rule_violations bigint"
+    return local_frame(
+        spark, [(r.total, r.violations)], "total bigint, rule_violations bigint"
     )
 
 
@@ -626,8 +627,8 @@ def dq_monotonic_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     r = results[0]
-    return spark.createDataFrame(
-        [(r.total, r.violations)], "total bigint, monotonic_violations bigint"
+    return local_frame(
+        spark, [(r.total, r.violations)], "total bigint, monotonic_violations bigint"
     )
 
 
@@ -650,8 +651,8 @@ def dq_json_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         [Check("props parse", "json_parseable", "events", column="props")],
     )
     r = results[0]
-    return spark.createDataFrame(
-        [(r.total, r.violations)], "total bigint, invalid_json bigint"
+    return local_frame(
+        spark, [(r.total, r.violations)], "total bigint, invalid_json bigint"
     )
 
 
@@ -683,7 +684,8 @@ def dq_distinct_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     r = results[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r.violations, int(r.observed["distinct_count"]))],
         "missing_values bigint, distinct_count bigint",
     )
@@ -717,7 +719,8 @@ def dq_rowcount_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     r = results[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(r.observed["row_count"]), int(r.observed["other_row_count"]))],
         "orders_count bigint, customer_count bigint",
     )
@@ -850,7 +853,7 @@ def dq_suite_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     results = run_suite(tables, _SUITE)
     rows = [(r.check_name, r.status, r.violations) for r in results]
-    return spark.createDataFrame(rows, "check_name string, status string, violations bigint")
+    return local_frame(spark, rows, "check_name string, status string, violations bigint")
 
 
 @register(
@@ -1784,8 +1787,8 @@ def dq_freq_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r.user_id), int(r.exact_count), estimate(int(r.user_id)))
         for r in top
     ]
-    return spark.createDataFrame(
-        rows, "user_id long, exact_count long, cms_estimate long"
+    return local_frame(
+        spark, rows, "user_id long, exact_count long, cms_estimate long"
     )
 
 
@@ -1897,7 +1900,8 @@ def dq_schema_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((name, f.name, want, got, status))
         for col, got in actual.items():
             rows.append((name, col, None, got, "unexpected"))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, column_name string, expected_type string, "
         "actual_type string, status string",
@@ -2002,7 +2006,8 @@ def dq_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(max_group > 200_000),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, n_files int, total_compressed_bytes long, "
         "total_uncompressed_bytes long, n_rows long, "
@@ -2095,7 +2100,8 @@ def dq_column_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 None if actual_type is None else actual_type == want_type,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "pos long, col_name string, want_type string, actual_name string, "
         "actual_type string, name_ok boolean, type_ok boolean",
@@ -2511,6 +2517,6 @@ def dq_suite_report_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     results = run_suite(tables, approx_suite)
     rows = [(r.check_name, r.status, r.violations) for r in results]
-    return spark.createDataFrame(
-        rows, "check_name string, status string, violations bigint"
+    return local_frame(
+        spark, rows, "check_name string, status string, violations bigint"
     )

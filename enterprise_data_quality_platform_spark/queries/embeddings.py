@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions import vectors as V
+from ..session import local_frame
 from .registry import register
 
 PROBE_IDS = (0, 1, 2)
@@ -528,7 +529,8 @@ def embed_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(len(model["explained_variance"]))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "component int, explained_variance double, explained_ratio double,"
         " n_vectors int, mean_abs_c1 double",

@@ -14,6 +14,7 @@ from ..operators.packedmap import (
     packed_map_worthwhile,
     words_fit_broadcast,
 )
+from ..session import local_frame
 from .registry import register
 
 from ..functions.numeric import fx_round, fx_sum, sql_avg, sql_round, sql_sum
@@ -2720,7 +2721,8 @@ def mart_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["p_brand"], r["p_size"])
         for r in part.select("p_brand", "p_size").distinct().collect()
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [(b, s, i) for i, (b, s) in enumerate(dim_rows)],
         "p_brand string, p_size int, gid long",
     )

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..checks import Check
+from ..session import local_frame
 from ..streaming import run_streaming_dq_gate
 from .registry import register
 
@@ -189,7 +190,8 @@ def streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for s in summaries
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "batch_id bigint, rows bigint, checks_total bigint, "
         "checks_passed bigint, checks_failed bigint, overall_status string",

@@ -11,8 +11,10 @@ the pandas boundary.
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Runtime-settable confs applied to *any* session handed to us (see
 # ``configure_session``) — safe after JVM start.
@@ -163,3 +165,40 @@ def configure_session(spark: SparkSession, force: bool = False) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built frame (report rows, alert rows, broadcast
+    dims) that plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` goes through ``parallelize``
+    into a ``PipelinedRDD``, so its first action forks ``pyspark.daemon``
+    and Python workers (~2 s on a cold session, ~0.4 s after). Handing
+    Spark a ``pyarrow.Table`` instead ships the rows to the JVM once; the
+    frame then needs no job and no Python worker to read. ``schema`` is a
+    ``StructType`` or a DDL string. Each row is checked against it first,
+    as ``createDataFrame`` does: pyarrow would coerce e.g. an ``int`` into
+    a ``double`` field, and it builds a non-nullable field holding
+    ``None``, which Spark only rejects later with a bare Arrow cast error.
+    Each row is then converted with ``schema.toInternal``, so dates and
+    timestamps (naive ones in the process's local time) land on the same
+    values the list path stored."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*internal)) if internal else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

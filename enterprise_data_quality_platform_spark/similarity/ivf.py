@@ -41,6 +41,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .knn import _topk_per_probe
 from ..functions.vectors import cosine_batch, to_double
+from ..session import local_frame
 
 
 def train_centroids(
@@ -166,7 +167,8 @@ def write_ivf_index(
         corpus, num_centroids, sample_size, iters, seed, vec_col
     )
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, c.tolist()) for i, c in enumerate(centroids)],
         "centroid_id int, centroid array<double>",
     )

@@ -116,6 +116,75 @@ def test_report_df(spark, sample):
     assert set(report.columns) >= {"check_name", "status", "violations", "run_ts"}
 
 
+def test_local_frame_is_a_local_relation_read_without_a_job(spark):
+    from enterprise_data_quality_platform_spark.session import local_frame
+
+    df = local_frame(spark, [("a", 1), ("b", None)], "k string, v bigint")
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup()
+    assert [tuple(r) for r in df.collect()] == [("a", 1), ("b", None)]
+    assert tracker.getJobIdsForGroup() == before
+
+
+@pytest.mark.parametrize(
+    "row",
+    [(None, 1.0), (1, 2)],
+    ids=["none-in-non-nullable", "int-in-double"],
+)
+def test_local_frame_rejects_rows_that_break_the_schema(spark, row):
+    from enterprise_data_quality_platform_spark.session import local_frame
+
+    with pytest.raises((TypeError, ValueError)):
+        local_frame(spark, [row], "k int not null, v double")
+
+
+def test_local_frame_empty_rows_keep_the_schema(spark):
+    from enterprise_data_quality_platform_spark.checks import REPORT_SCHEMA
+    from enterprise_data_quality_platform_spark.session import local_frame
+
+    df = local_frame(spark, [], REPORT_SCHEMA)
+    assert df.schema == REPORT_SCHEMA
+    assert df.collect() == []
+
+
+def test_report_row_round_trips_exactly(spark):
+    from datetime import datetime
+
+    from enterprise_data_quality_platform_spark.checks import REPORT_SCHEMA
+    from enterprise_data_quality_platform_spark.checks.definitions import (
+        CheckResult,
+    )
+
+    result = CheckResult(
+        check_name="region whitelist",
+        table="metrics",
+        column="region",
+        status="fail",
+        violations=1,
+        total=5,
+        observed={"distinct_count": "4", "unexpected": None},
+        error_message="1 violating record(s)",
+        run_ts=datetime(2025, 9, 19, 14, 9, 0, 123456),
+    )
+    report = suite_report_df(spark, [result])
+    assert report.schema == REPORT_SCHEMA
+    assert [tuple(r) for r in report.collect()] == [
+        (
+            "region whitelist",
+            "metrics",
+            "region",
+            "fail",
+            1,
+            5,
+            {"distinct_count": "4", "unexpected": None},
+            "1 violating record(s)",
+            datetime(2025, 9, 19, 14, 9, 0, 123456),
+        )
+    ]
+
+
 def test_metric_checks(spark, sample):
     results = run_suite(
         sample,

@@ -101,3 +101,17 @@ def test_alert_idempotent_trigger_and_resolve(spark):
         assert alerts.count() == 3  # trigger, resolve, trigger
         key = incident_key("test-svc", "neg values")
         assert alerts.filter(F.col("incident_key") == key).count() == 3
+
+
+def test_alert_event_ts_reads_back_as_the_written_utc_wall_time(spark):
+    from datetime import datetime, timezone
+
+    results = _failing_results(spark)
+    with tempfile.TemporaryDirectory(prefix="edqp-alerts-") as d:
+        sink = AlertSink(spark, f"{d}/alerts", service="test-svc")
+        before = datetime.now(timezone.utc).replace(tzinfo=None)
+        assert sink.trigger_for_failures(results, channels=("pagerduty",)) == 1
+        after = datetime.now(timezone.utc).replace(tzinfo=None)
+        (row,) = spark.read.parquet(f"{d}/alerts").collect()
+        assert row.event_ts.tzinfo is None
+        assert before <= row.event_ts <= after

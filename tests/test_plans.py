@@ -607,6 +607,38 @@ def test_part_affinity_guard_fallback_without_footer_stats(spark, tmp_path):
     assert top[(3, 5)] == 2 and top[(3, 9)] == 1 and top[(5, 9)] == 1
 
 
+def test_part_affinity_string_partkey_falls_back_to_in_plan_guard(spark, tmp_path):
+    """A footer whose l_partkey min/max is not an int (here a string
+    column) proves no pack range: the footer check reports "no stats" and
+    the query builds with the in-plan guard instead of raising a bare
+    TypeError from comparing a string bound with an int."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from enterprise_data_quality_platform_spark.operators.packedmap import (
+        _footer_col_minmax,
+    )
+    from enterprise_data_quality_platform_spark.queries.relational import (
+        mart_part_affinity,
+    )
+
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1, 1, 2, 2, 2], pa.int64()),
+                "l_partkey": pa.array(["3", "5", "3", "5", "9"], pa.string()),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    assert _footer_col_minmax(str(tmp_path), "lineitem", "l_partkey") is None
+    df = mart_part_affinity(spark, str(tmp_path))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "raise_error" in plan  # fallback guard attached
+
+
 def test_part_affinity_empty_input_returns_empty(spark, tmp_path):
     """An empty lineitem yields an empty result — the pack-range guard's
     NULL min/max (no rows) must not trip the raise."""
@@ -772,3 +804,29 @@ def test_user_gini_rank_window_over_distinct_count_frame(spark):
     assert "Window" in ops, plan
     aggs_before = [o for o in ops[: ops.index("Window")] if o == "HashAggregate"]
     assert len(aggs_before) >= 4, plan  # partial+final per-user, partial+final per-cnt
+
+
+
+def test_driver_frames_only_built_through_local_frame():
+    """``createDataFrame(<list>)`` plans a PipelinedRDD whose first action
+    forks Python workers; driver-built frames go through
+    ``session.local_frame`` (an Arrow-backed LocalRelation) instead. The
+    only other caller is ``compat.py``, whose schema is inferred from the
+    caller's row-dicts."""
+    import inspect
+    from pathlib import Path
+
+    from enterprise_data_quality_platform_spark import session
+
+    root = Path(session.__file__).parent
+    body, start = inspect.getsourcelines(session.local_frame)
+    inside_local_frame = range(start, start + len(body))
+    stray = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "compat.py" or path.parent != root
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if ".createDataFrame(" in line
+        and not (path == root / "session.py" and i in inside_local_frame)
+    ]
+    assert not stray, stray
