@@ -39,7 +39,6 @@ from .compiler import (
     SAMPLE_CAP,
     SAMPLEABLE_TYPES,
     CompiledAggCheck,
-    PackedCounterCarry,
     compile_agg_check,
     evaluate_ri,
     ri_frame,
@@ -141,17 +140,8 @@ def run_suite(
             if compiled.frame_builder is None:
                 continue
             try:
-                # fallback_builder (packed-counter unique) doubles as the
-                # solo retry: if the guarded fast-path frame fails at
-                # runtime or its evaluator raises PackedCounterCarry, the
-                # plain-plan twin re-runs with the same output aliases
-                solo = (
-                    None
-                    if compiled.fallback_builder is None
-                    else (lambda c=compiled, d=df: c.fallback_builder(d))
-                )
                 jobs.append(
-                    (compiled.frame_builder(df), [_agg_member(i, compiled, solo)])
+                    (compiled.frame_builder(df), [_agg_member(i, compiled, None)])
                 )
             except Exception as exc:  # noqa: BLE001
                 results[i] = _error_result(compiled.check, exc)
@@ -248,10 +238,6 @@ def run_suite(
         for i, check, evaluate, _solo in members:
             try:
                 results[i] = evaluate(outcome)
-            except PackedCounterCarry:
-                # guarded fast path saw a per-key count > 127: re-run the
-                # plain-plan twin (never an error — the fallback is exact)
-                retry.append((i, check, evaluate, _solo))
             except Exception as exc:  # noqa: BLE001
                 results[i] = _error_result(check, exc)
     # isolation retry: a shared table-factor died at runtime; rerun each of

@@ -29,6 +29,9 @@ Safety is enforced, not assumed (the r7/r8 guard discipline):
   as a broadcast, never riding the fact-cardinality hot path (the
   ``mart_large_volume_customers`` guard-placement A/B).
 
+The 1-bit case without a probe, ``distinct_presence``, is the engine's
+exact distinct count for integral keys.
+
 Reference parity: the reference's own mart joins are generic BigQuery
 SQL (``/root/reference/airflow/dags/pager-workflow.py:120-126``); this
 module is a Spark-side physical strategy for the same logical joins.
@@ -40,6 +43,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 
 @dataclass(frozen=True)
@@ -157,6 +161,56 @@ def packed_code_map(
         slot_bits=slot_bits,
         key_mask=key_mask,
         shift=shift,
+    )
+
+
+_INTEGRAL_TYPES = (LongType, IntegerType, ShortType, ByteType)
+
+
+def is_integral(df: DataFrame, col: str) -> bool:
+    """True when ``col`` is a byte/short/int/long column of ``df``."""
+    return isinstance(df.schema[col].dataType, _INTEGRAL_TYPES)
+
+
+def distinct_presence(df: DataFrame, col: str) -> DataFrame:
+    """One row ``(rows, non_null, distinct)`` for an integral key column:
+    ``COUNT(*)``, ``COUNT(col)`` and ``COUNT(DISTINCT col)``.
+
+    Plan: a 64-bit PRESENCE BITMAP per ``key >> 6`` word —
+    ``bit_or(1L << (key & 63))`` — so the shuffle carries one row per 64
+    keys instead of one per key, and ``distinct = Σ bit_count(bits)``.
+    Exactness: always exact for every byte/short/int/long domain, with no
+    guard. ``bit_or`` is idempotent, so a key repeated any number of times
+    sets its bit once (nothing to carry); ``word * 64 + (key & 63)`` is a
+    two's-complement identity, so negative keys and ``Long.MIN/MAX`` land
+    in distinct bits; the hot path is bit ops and counts, so nothing can
+    ANSI-overflow. NULL keys fall into the NULL word, whose ``bit_or`` is
+    NULL: they count in ``rows`` only. Empty input answers ``(0, 0, 0)``.
+
+    Distinct counts only: per-key COUNTS need the packed 7-bit counter of
+    ``dq_key_skew``, whose slots can carry."""
+    if not is_integral(df, col):
+        raise TypeError(
+            f"distinct_presence needs an integral key; {col} is "
+            f"{df.schema[col].dataType.simpleString()}"
+        )
+    key = F.col(col).cast("long")
+    # F.shiftleft only takes a literal bit count: call the SQL function
+    # with a Column one
+    bit = F.call_function(
+        "shiftleft", F.lit(1).cast("long"), key.bitwiseAND(F.lit(63)).cast("int")
+    )
+    words = df.groupBy(F.shiftright(key, 6).alias("__w")).agg(
+        F.bit_or(bit).alias("__bits"),
+        F.count(key).alias("__nn"),
+        F.count(F.lit(1)).alias("__all"),
+    )
+    return words.agg(
+        F.coalesce(F.sum("__all"), F.lit(0)).alias("rows"),
+        F.coalesce(F.sum("__nn"), F.lit(0)).alias("non_null"),
+        F.coalesce(
+            F.sum(F.bit_count(F.col("__bits")).cast("long")), F.lit(0)
+        ).alias("distinct"),
     )
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..checks import Check, run_suite
 from ..functions.numeric import fx_avg, fx_round, fx_sum, sql_avg, sql_round, sql_sum
+from ..operators.packedmap import distinct_presence
 from ..session import local_frame
 from .registry import register
 
@@ -110,76 +111,18 @@ def dq_range_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables=("orders",),
 )
 def dq_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4: uniqueness as count - count_distinct (excess rows). r11: PACKED
-    COUNTERS (the dq_key_skew trick, also deployed in the check compiler's
-    unique path): group by ``o_orderkey >> 3`` and sum
-    ``1 << ((o_orderkey & 7) * 7)`` — 8 keys per 64-bit word in 7-bit
-    slots, so the per-key shuffle carries 8× fewer rows than the r8
-    two-level groupBy this replaces.
-    distinct_keys = Σ nonzero slots; duplicate_rows = Σ non-null rows −
-    distinct_keys — exactly COUNT − COUNT(DISTINCT), value-identical to
-    the oracle. EXACTNESS GUARD (same argument as dq_key_skew): valid
-    while every per-key count ≤ 127; a slot carry strictly shrinks the
-    recovered slot sum vs the true row count carried through the same
-    aggregate, so carries cannot pass undetected.
-
-    r12 (VERDICT r11 item 6): the guard no longer raises — the carry case
-    now DEGRADES in-plan. The result is a union of two gated branches:
-    the packed 1-row result filtered to the no-carry case, and the plain
-    per-key twin whose input is cross-joined against a broadcast 1-row
-    gate that is EMPTY unless a carry was detected. AQE's empty-relation
-    propagation collapses the gated-off twin (scan included) to an
-    EmptyRelation at runtime, so the PK-domain cost is the packed plan
-    alone (the gate's 1-row aggregate rides the packed exchange via
-    ReusedExchange), while a genuinely duplicated domain (count > 127)
-    answers exactly through the per-key plan instead of erroring. Exactly
-    one branch ever emits its row (the gate conditions are complements).
-    At 100 TB swap in approx_count_distinct via the checks' approx
-    switch."""
-    orders = table(spark, sf_dir, "orders")
-    contrib = F.expr(
-        "shiftleft(CAST(1 AS BIGINT), CAST((o_orderkey & 7) * 7 AS INT))"
+    """G4: uniqueness as count - count_distinct (excess rows), from 64-bit
+    presence bitmaps (``operators.packedmap.distinct_presence``): the
+    per-key shuffle carries one row per 64 keys, distinct_keys =
+    Σ bit_count(word bits) and duplicate_rows = non-null rows −
+    distinct_keys — value-identical to the oracle. Always exact for an
+    integral key: a bit set by a key seen any number of times is set
+    once, so there is no carry, no guard and no second plan. At 100 TB
+    swap in approx_count_distinct via the checks' approx switch."""
+    return distinct_presence(table(spark, sf_dir, "orders"), "o_orderkey").select(
+        (F.col("non_null") - F.col("distinct")).alias("duplicate_rows"),
+        F.col("distinct").alias("distinct_keys"),
     )
-    words = (
-        orders.filter(F.col("o_orderkey").isNotNull())
-        .groupBy(F.shiftright(F.col("o_orderkey"), 3).alias("__w"))
-        .agg(F.sum(contrib).alias("__p"), F.count(F.lit(1)).alias("__t"))
-    )
-    slots = [F.expr(f"(__p >> {s * 7}) & 127") for s in range(8)]
-    distinct_word = sum(
-        (F.when(s > 0, 1).otherwise(0) for s in slots), F.lit(0)
-    )
-    recovered_word = sum(slots[1:], slots[0])
-    stats = words.agg(
-        F.sum("__t").alias("__true_total"),
-        F.sum(distinct_word).cast("long").alias("distinct_keys"),
-        F.sum(recovered_word).alias("__recovered"),
-    )
-    no_carry = F.col("__recovered").isNull() | (
-        F.col("__recovered") == F.col("__true_total")
-    )
-    fast_row = stats.filter(no_carry).select(
-        F.coalesce(
-            F.col("__true_total") - F.col("distinct_keys"), F.lit(0)
-        ).alias("duplicate_rows"),
-        F.coalesce(F.col("distinct_keys"), F.lit(0)).alias("distinct_keys"),
-    )
-    gate = stats.filter(~no_carry).select(F.lit(1).alias("__g"))
-    per_key = (
-        orders.crossJoin(F.broadcast(gate))
-        .filter(F.col("o_orderkey").isNotNull())
-        .groupBy("o_orderkey", "__g")
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    plain_row = (
-        per_key.groupBy("__g")
-        .agg(
-            (F.sum("__n") - F.count(F.lit(1))).alias("duplicate_rows"),
-            F.count(F.lit(1)).alias("distinct_keys"),
-        )
-        .select("duplicate_rows", "distinct_keys")
-    )
-    return fast_row.unionByName(plain_row)
 
 
 @register(
@@ -903,51 +846,42 @@ def dq_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     — NOT 8 — so the maximally-loaded valid word sums to 2^56−1 and can
     NEVER trip ANSI overflow on valid data (8-bit slots would: a slot-7
     key with a legitimate count in [128, 255] contributes ≥ 2^63).
-    EXACTNESS GUARD: valid while every per-key count ≤ 127; a slot carry
-    cannot be silent because it moves 128 units out of a slot and adds 1
-    to the next — strictly shrinking the recovered total — so the 1-row
-    stats filter compares Σ(recovered counts) against the true COUNT(*)
-    carried through the same aggregate and raises on any mismatch (an
-    extreme top-slot pile-up ANSI-throws in the same stage: also loud;
-    no silent path exists). Counts beyond 127 ⇒ fall back to the plain
-    per-key groupBy this replaced.
-    Measured sf10: 2.88 → 1.56 s (alternating medians of 3, quiet box);
-    value-identical output, same oracle. Top-5 via TakeOrderedAndProject
-    — the key-count frame never sorts globally and never collects.
+    EXACTNESS: a word's slots are exact while each of its keys counts
+    ≤ 127. A slot carry moves 128 units out of a slot and adds 1 to the
+    next, strictly shrinking the recovered slot sum, so a word is CLEAN
+    iff Σ(its slots) equals its true COUNT(*) carried through the same
+    aggregate. ``try_sum`` turns an extreme top-slot pile-up (a slot-7
+    key counted ≥ 2^14 times reaches 2^63) into a NULL word sum instead
+    of an ANSI overflow, and the NULL-key word has a NULL sum by
+    construction: both compare as not clean. Clean words posexplode;
+    every other word is RECOUNTED in-plan — a left-semi join of lineitem
+    against the broadcast carried words on ``l_orderkey >> 3`` (null-safe,
+    so the NULL key keeps its oracle group), then a plain per-key
+    groupBy. On a carry-free domain the carried side is empty and AQE
+    drops the recount branch, scan included. The query never raises and
+    is exact for every long key domain.
+    Measured sf10 before the recount branch: 2.88 → 1.56 s (alternating
+    medians of 3, quiet box); value-identical output, same oracle. Top-5
+    via TakeOrderedAndProject — the key-count frame never sorts globally
+    and never collects.
     Arithmetic is two IEEE-exact divisions (share, then count over the
     precomputed mean), so the DuckDB oracle matches bit-for-bit."""
     li = table(spark, sf_dir, "lineitem")
     contrib = F.expr(
         "shiftleft(CAST(1 AS BIGINT), CAST((l_orderkey & 7) * 7 AS INT))"
     )
-    packed = li.groupBy(F.shiftright(F.col("l_orderkey"), 3).alias("word")).agg(
-        F.sum(contrib).alias("p"),
+    word = F.shiftright(F.col("l_orderkey"), 3)
+    packed = li.groupBy(word.alias("word")).agg(
+        F.try_sum(contrib).alias("p"),
         F.count(F.lit(1)).alias("true_rows"),
     )
     slots = [F.expr(f"(p >> {s * 7}) & 127") for s in range(8)]
-    n_keys_word = sum(F.when(s > 0, 1).otherwise(0) for s in slots)
-    count_sum_word = sum(slots[1:], slots[0])
-    stats = packed.agg(
-        F.sum(n_keys_word).alias("n_keys"),
-        F.sum(count_sum_word).alias("total_rows"),
-        F.sum("true_rows").alias("true_total"),
-    ).filter(
-        F.when(
-            F.col("total_rows").isNull()
-            | (F.col("total_rows") == F.col("true_total")),
-            F.lit(True),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "dq_key_skew: a per-key count exceeded 127 (packed-"
-                    "counter carry); use a plain per-key groupBy for this"
-                    " key domain"
-                )
-            ).cast("boolean")
-        )
+    clean = F.coalesce(
+        sum(slots[1:], slots[0]) == F.col("true_rows"), F.lit(False)
     )
-    key_counts = (
-        packed.select(
+    clean_counts = (
+        packed.filter(clean)
+        .select(
             "word",
             F.posexplode(
                 F.array(*[s.cast("long") for s in slots])
@@ -956,9 +890,22 @@ def dq_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("key_count") > 0)
         .select((F.col("word") * 8 + F.col("slot")).alias("key"), "key_count")
     )
-    topk = key_counts.orderBy(F.col("key_count").desc(), F.col("key")).limit(5)
+    carried = F.broadcast(packed.filter(~clean).select("word"))
+    recount = (
+        li.join(carried, word.eqNullSafe(carried["word"]), "left_semi")
+        .groupBy(F.col("l_orderkey").alias("key"))
+        .agg(F.count(F.lit(1)).alias("key_count"))
+    )
+    key_counts = clean_counts.unionByName(recount)
+    stats = key_counts.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum("key_count").alias("total_rows"),
+    )
+    # NULLS LAST matches the oracle's ORDER BY for a NULL-key group
+    order = (F.col("key_count").desc(), F.col("key").asc_nulls_last())
+    topk = key_counts.orderBy(*order).limit(5)
     return (
-        topk.crossJoin(F.broadcast(stats.select("n_keys", "total_rows")))
+        topk.crossJoin(F.broadcast(stats))
         .select(
             "key",
             "key_count",
@@ -970,7 +917,7 @@ def dq_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_keys",
             "total_rows",
         )
-        .orderBy(F.col("key_count").desc(), F.col("key"))
+        .orderBy(*order)
     )
 
 

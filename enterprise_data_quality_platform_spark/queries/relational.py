@@ -730,7 +730,12 @@ def mart_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of action time — still loud, never wrong counts. Stats
     # missing/untrusted (non-parquet input, a writer without statistics,
     # >256 files — the driver-side footer-read bound) falls back to the
-    # in-plan guard unchanged.
+    # in-plan guard unchanged. The footer-verified path trusts a BUILD-TIME
+    # snapshot of the file listing: the footers are read, and Spark lists
+    # lineitem's files, when this frame is built. A file rewritten in place
+    # (same path, new contents) between building and running the frame
+    # would be scanned without its range being proven, so build and run
+    # the frame against one table state (each query call builds afresh).
     _PACK_MSG = (
         "mart_part_affinity: l_partkey outside [0, 2^31)"
         " pack range; use the two-column groupBy form for"

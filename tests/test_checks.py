@@ -516,10 +516,10 @@ def test_pair_in_set_ignore_row_if_ge_round_trip():
 
 
 def test_unique_packed_counter_matches_plain_plan(spark):
-    """The packed-counter unique fast path (single integral key: groupBy
-    key>>3, 7-bit slots) returns the exact plain-plan counts — duplicates,
-    NULL keys (skipped from violations, kept in total), negative keys
-    (two's-complement word/slot mapping) all included."""
+    """The presence-bitmap unique path (single integral key: groupBy
+    key>>6, bit_or of the key's bit) returns the exact plain-plan counts —
+    duplicates, NULL keys (skipped from violations, kept in total),
+    negative keys (two's-complement word/bit mapping) all included."""
     import pyspark.sql.functions as F
 
     from enterprise_data_quality_platform_spark.checks.compiler import (
@@ -530,28 +530,22 @@ def test_unique_packed_counter_matches_plain_plan(spark):
     df = spark.createDataFrame(rows, "k long")
     check = Check("u", "unique", "t", column="k")
     compiled = compile_agg_check(check, prefix="c0")
-    # primary frame is the packed plan: guard columns present, one
-    # exchange on the 8-keys-per-word grouping
-    packed_row = compiled.frame_builder(df).collect()[0].asDict()
-    assert "c0__pk_recovered" in packed_row
-    assert packed_row["c0__pk_recovered"] == packed_row["c0__pk_nn"] == 7
-    plain_row = compiled.fallback_builder(df).collect()[0].asDict()
-    assert packed_row["c0__violations"] == plain_row["c0__violations"] == 2
-    assert packed_row["c0__total"] == plain_row["c0__total"] == 9
-    # evaluator accepts both row shapes and agrees
-    assert (
-        compiled.evaluate(packed_row, "c0").violations
-        == compiled.evaluate(plain_row, "c0").violations
-        == 2
-    )
-    # run_suite end-to-end on a >127 hot key: the guard trips, the runner
-    # re-runs the plain twin, and the result is exact — never an error
+    row = compiled.frame_builder(df).collect()[0].asDict()
+    # the plain plan, computed independently: count - distinct over the
+    # non-null keys, total over every row
+    per_key = df.groupBy("k").count().collect()
+    nn = [r for r in per_key if r.k is not None]
+    plain_violations = sum(r["count"] for r in nn) - len(nn)
+    assert row == {"c0__violations": plain_violations, "c0__total": 9}
+    assert plain_violations == 2
+    assert compiled.evaluate(row, "c0").violations == 2
+    # run_suite end-to-end on a >127 hot key: exact, never an error
     hot = spark.range(0, 200).select(F.lit(5).cast("long").alias("k")).union(
         spark.createDataFrame([(6,), (7,)], "k long")
     )
     res = run_suite({"t": hot}, [Check("hot", "unique", "t", column="k")])[0]
     assert res.status == "fail" and res.violations == 199
-    # non-integral keys bypass the packed plan entirely (plain aliases only)
+    # non-integral keys take the plain per-key groupBy plan
     sdf = spark.createDataFrame([("a",), ("a",), ("b",)], "s string")
     srow = (
         compile_agg_check(Check("s", "unique", "t", column="s"), prefix="c1")
@@ -559,4 +553,4 @@ def test_unique_packed_counter_matches_plain_plan(spark):
         .collect()[0]
         .asDict()
     )
-    assert "c1__pk_recovered" not in srow and srow["c1__violations"] == 1
+    assert srow == {"c1__violations": 1, "c1__total": 3}

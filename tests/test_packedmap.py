@@ -1,5 +1,6 @@
 """Unit pins for operators/packedmap.py — the packed small-code broadcast
-map (bitmap flag-join generalized to n-bit values).
+map (bitmap flag-join generalized to n-bit values), the presence-bitmap
+distinct count, and the packed per-key counter of ``dq_key_skew``.
 
 The load-bearing properties: exact inner-join semantics (absent key ⇒
 drop; negative keys recover via the two's-complement slot identity),
@@ -7,7 +8,9 @@ loud dim-side guards for duplicate keys and out-of-domain codes, and —
 critically — the guard fires EVEN WHEN the violation drops every probe
 row (the AQE empty-relation propagation hole found in round 8: a
 result-side guard join is eliminated before its stage materializes when
-the aggregate above it is empty)."""
+the aggregate above it is empty). Distinct and per-key counts answer
+exactly, and never raise, on every crafted key domain, including keys
+repeated past a 7-bit (127) and a 15-bit (32767) slot."""
 
 from __future__ import annotations
 
@@ -15,9 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.operators.packedmap import (
+    distinct_presence,
     join_packed_codes,
     packed_code_map,
 )
+from enterprise_data_quality_platform_spark.queries.dq import dq_unique_proportion
 
 
 def _map_of(spark, rows, slot_bits=8):
@@ -191,3 +196,142 @@ def test_degrades_to_shuffle_join_with_identical_values(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_static)
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_adaptive)
     assert degraded == baseline
+
+
+_LMAX = 9223372036854775807
+_LMIN = -_LMAX - 1
+
+#: crafted key domains: name -> list of keys (None = NULL)
+_DOMAINS = {
+    "negatives_nulls": [-9, -9, -1, 0, 8, 8, 8, None, None, 32, 63, 64, -64, -65],
+    "long_extremes": [_LMAX, _LMAX, _LMIN, _LMIN, _LMIN, _LMAX - 1, 63, 64, -64, -65],
+    # a key past a 7-bit slot, in a low slot
+    "hot_over_127": [7] * 130 + [1, 2, 2, None],
+    # past a 15-bit slot: key 7 sits in the top 7-bit slot (its packed sum
+    # overflows a long), key 8 in the bottom one
+    "hot_over_32767": [7] * 40000 + [8] * 33000 + [6, None],
+    "empty": [],
+    "all_null": [None] * 5,
+}
+
+
+@pytest.fixture(scope="module")
+def domain_dirs(spark, tmp_path_factory):
+    """One sf-style dir per domain: the keys as ``orders.o_orderkey`` and
+    ``lineitem.l_orderkey`` (bigint), each a parquet directory."""
+    dirs = {}
+    for name, keys in _DOMAINS.items():
+        d = tmp_path_factory.mktemp(name)
+        rows = [(k,) for k in keys]
+        for tbl, col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+            spark.createDataFrame(rows, f"{col} long").write.parquet(
+                str(d / f"{tbl}.parquet")
+            )
+        dirs[name] = str(d)
+    return dirs
+
+
+def _oracle(sf_dir: str, query: str) -> list[tuple]:
+    import duckdb
+
+    from enterprise_data_quality_platform_spark.queries import all_queries
+
+    con = duckdb.connect()
+    for tbl in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {tbl} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{tbl}.parquet/*.parquet')"
+        )
+    return con.execute(all_queries()[query].oracle).fetchall()
+
+
+@pytest.mark.parametrize("domain", list(_DOMAINS))
+@pytest.mark.parametrize("site", ["run_suite_unique", "dq_uniqueness", "dq_key_skew"])
+def test_distinct_and_key_counts_exact_on_crafted_domains(
+    spark, domain_dirs, site, domain
+):
+    """Every call site of the packed/bitmap counters answers exactly —
+    no error, no carry — on every domain: the suite's unique check against
+    plain Python, the two queries against their DuckDB oracle."""
+    from enterprise_data_quality_platform_spark.catalog import table
+    from enterprise_data_quality_platform_spark.checks import Check, run_suite
+    from enterprise_data_quality_platform_spark.queries import dq
+
+    sf_dir = domain_dirs[domain]
+    if site == "run_suite_unique":
+        keys = _DOMAINS[domain]
+        non_null = [k for k in keys if k is not None]
+        res = run_suite(
+            {"orders": table(spark, sf_dir, "orders")},
+            [Check("u", "unique", "orders", column="o_orderkey")],
+        )[0]
+        dupes = len(non_null) - len(set(non_null))
+        assert res.error_message is None
+        assert (res.status, res.violations, res.total) == (
+            "fail" if dupes else "pass",
+            dupes,
+            len(keys),
+        )
+        return
+    got = [tuple(r) for r in getattr(dq, site)(spark, sf_dir).collect()]
+    assert got == _oracle(sf_dir, site)
+
+
+@pytest.mark.parametrize(
+    "dtype,keys",
+    [
+        ("tinyint", [-128, -128, -1, 0, 63, 64, 127, None]),
+        ("smallint", [-32768, -65, -64, 0, 32767, 32767, None]),
+        ("int", [-2147483648, -1, 0, 63, 64, 2147483647, 2147483647, None]),
+        ("bigint", [_LMIN, -65, -64, 0, _LMAX, _LMAX, None]),
+    ],
+    ids=["tinyint", "smallint", "int", "bigint"],
+)
+def test_distinct_presence_every_integral_type(spark, dtype, keys):
+    df = spark.createDataFrame([(k,) for k in keys], f"k {dtype}")
+    non_null = [k for k in keys if k is not None]
+    row = distinct_presence(df, "k").collect()[0]
+    assert (row.rows, row.non_null, row.distinct) == (
+        len(keys),
+        len(non_null),
+        len(set(non_null)),
+    )
+
+
+def test_distinct_presence_rejects_non_integral_key(spark):
+    df = spark.createDataFrame([("a",)], "k string")
+    with pytest.raises(TypeError, match="integral"):
+        distinct_presence(df, "k")
+
+
+def _write_orders(spark, tmp_path, rows, schema):
+    spark.createDataFrame(rows, schema).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+
+
+def test_dq_unique_proportion_high_duplication_exact(spark, tmp_path):
+    """A key repeated >32767 times (the domain that killed the packed
+    variant's 15-bit slots) answers exactly through the standalone query."""
+    rows = [(5,)] * 32770 + [(6,), (None,)]
+    _write_orders(spark, tmp_path, rows, "o_custkey long")
+    out = dq_unique_proportion(spark, str(tmp_path)).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r.total, r.n_nonnull, r.n_distinct) == (32772, 32771, 2)
+    assert abs(r.unique_ratio - round(2 / 32771, 6)) < 1e-12
+
+
+def test_dq_unique_proportion_mixed_domain_exact(spark, tmp_path):
+    """Mixed domain (negatives, NULLs, dupes) answers exactly."""
+    rows = (
+        [(k,) for k in (-5, -5, -4, -1, 0, 1, 2, 3, 4, 7, 8)]
+        + [(3,)] * 6
+        + [(None,)] * 3
+    )
+    _write_orders(spark, tmp_path, rows, "o_custkey long")
+    out = dq_unique_proportion(spark, str(tmp_path)).collect()
+    r = out[0]
+    # 20 rows, 17 non-null, distinct non-null = {-5,-4,-1,0,1,2,3,4,7,8}=10
+    assert (r.total, r.n_nonnull, r.n_distinct) == (20, 17, 10)
+    assert abs(r.unique_ratio - round(10 / 17, 6)) < 1e-12

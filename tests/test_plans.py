@@ -259,6 +259,13 @@ def test_part_affinity_no_nested_loop(spark):
     r12 the pack-range guard resolves from parquet footer statistics at
     build time on the test data, so the plan carries NO nested loop (and
     no guard subtree) at all."""
+    from enterprise_data_quality_platform_spark.operators.packedmap import (
+        _footer_col_minmax,
+    )
+
+    # the plan assertions below assume the fixture's footers prove the
+    # l_partkey range; a fixture without exact stats fails here, by name
+    assert _footer_col_minmax(SF_SMALL, "lineitem", "l_partkey") is not None
     plan = plan_of(spark, "mart_part_affinity")
     assert "CartesianProduct" not in plan
     # the footer-verified plan has no guard attach: zero nested loops;

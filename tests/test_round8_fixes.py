@@ -95,20 +95,21 @@ def test_drop_stale_session_dirs_mtime_gate(tmp_path, monkeypatch):
 
 def test_key_skew_packed_counters_guard_and_negatives(spark, tmp_path):
     """The r8 packed-counter rewrite of dq_key_skew: (a) a per-key count
-    over 127 must raise via the carry guard (never silently corrupt
-    neighbor slots); (b) negative keys recover exactly (word*8 + slot is
-    a two's-complement identity, and shift/mask extraction is
-    sign-agnostic)."""
+    over 127 carries out of its 7-bit slot; the carried word must be
+    recounted in-plan, so the answer is exact (never an error, never a
+    corrupted neighbor slot); (b) negative keys recover exactly
+    (word*8 + slot is a two's-complement identity, and shift/mask
+    extraction is sign-agnostic)."""
     from enterprise_data_quality_platform_spark.queries.dq import dq_key_skew
 
-    # (a) one key with 300 rows -> slot carry -> loud failure (low slot:
-    # the guard path; top-slot extremes ANSI-throw, also loud)
+    # (a) one key with 300 rows -> slot carry -> exact recount
     hot = str(tmp_path / "hot")
     spark.createDataFrame(
         [(0,)] * 300 + [(1,), (2,)], "l_orderkey long"
     ).write.parquet(f"{hot}/lineitem.parquet")
-    with pytest.raises(Exception, match="packed-counter carry"):
-        dq_key_skew(spark, hot).collect()
+    out = dq_key_skew(spark, hot).collect()
+    assert [(r.key, r.key_count) for r in out] == [(0, 300), (1, 1), (2, 1)]
+    assert {(r.n_keys, r.total_rows) for r in out} == {(3, 302)}
 
     # (b) negative keys: counts and key identities exact
     neg = str(tmp_path / "neg")
