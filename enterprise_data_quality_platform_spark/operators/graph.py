@@ -21,6 +21,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def transition_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``pagerank``'s loop-invariant frames: ``norm`` (each edge both ways,
+    ``p = weight / out_weight(src)``) and its ``nodes``."""
+    both = edges.select("src", "dst", "weight").unionAll(
+        edges.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
+        )
+    )
+    out_w = both.groupBy("src").agg(F.sum("weight").alias("out_weight"))
+    norm = both.join(out_w, "src").select(
+        "src", "dst", (F.col("weight") / F.col("out_weight")).alias("p")
+    )
+    return norm, norm.select(F.col("src").alias("node")).distinct()
+
+
+def pagerank_step(
+    rank: DataFrame, norm: DataFrame, nodes: DataFrame, n: int, damping: float
+) -> DataFrame:
+    """One superstep: rank flows along out-edges, plus the teleport share."""
+    contrib = (
+        rank.join(norm, rank.node == norm.src)
+        .groupBy("dst")
+        .agg(F.sum(F.col("rank") * F.col("p")).alias("in_rank"))
+    )
+    return nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+        "node",
+        (
+            F.lit((1.0 - damping) / n)
+            + F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
+        ).alias("rank"),
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
@@ -34,39 +67,12 @@ def pagerank(
 
     No dangling-node term is needed: in an undirected graph every node in
     the frame has out-weight > 0."""
-    both = edges.select("src", "dst", "weight").unionAll(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-        )
-    )
-    out_w = both.groupBy("src").agg(F.sum("weight").alias("out_weight"))
-    norm = (
-        both.join(out_w, "src")
-        .select(
-            "src",
-            "dst",
-            (F.col("weight") / F.col("out_weight")).alias("p"),
-        )
-        .cache()
-    )
-    nodes = norm.select(F.col("src").alias("node")).distinct().cache()
+    # nodes reads the cached norm: caches substitute at execution
+    norm, nodes = (f.cache() for f in transition_graph(edges))
     n = nodes.count()  # materializes both caches
     rank = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for i in range(iterations):
-        contrib = (
-            rank.join(norm, rank.node == norm.src)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("in_rank"))
-        )
-        rank = nodes.join(
-            contrib, nodes.node == contrib.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("in_rank"), F.lit(0.0))
-            ).alias("rank"),
-        )
+        rank = pagerank_step(rank, norm, nodes, n, damping)
         if (i + 1) % checkpoint_every == 0:
             rank = rank.localCheckpoint(eager=True)
     # materialize the result OFF the cached frames, then release them —

@@ -45,6 +45,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
+from ..catalog import footer
+from ..session import byte_size
+
 
 @dataclass(frozen=True)
 class PackedCodeMap:
@@ -214,89 +217,6 @@ def distinct_presence(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _footer_rows(sf_dir: str, table_name: str) -> int:
-    """Table row count from parquet footers only (metadata, no scan)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from ..catalog import table_path
-
-    path = table_path(sf_dir, table_name)
-    if os.path.isdir(path):
-        n_rows = 0
-        for root, _, names in os.walk(path):
-            for f in names:
-                if f.endswith(".parquet"):
-                    n_rows += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        return n_rows
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _footer_col_minmax(
-    sf_dir: str,
-    table_name: str,
-    col: str,
-    max_files: int = 256,
-) -> tuple | None:
-    """Exact (min, max) of an integral column from parquet column-chunk
-    statistics only — metadata, no scan. Returns ``None`` when the stats
-    cannot prove the bound: any value-bearing chunk without exact min/max,
-    a min/max that is not an ``int`` (a string, float or decimal column
-    has no integral bound to prove), a non-parquet path, or more than
-    ``max_files`` files (the cap keeps this a bounded driver-side read at
-    100 TB — callers fall back to an in-plan guard). Returns
-    ``(None, None)`` for an empty / all-null column (vacuously in any
-    range: no values exist to violate it)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from ..catalog import table_path
-
-    try:
-        path = table_path(sf_dir, table_name)
-        if os.path.isdir(path):
-            files = []
-            for root, _, names in os.walk(path):
-                files.extend(
-                    os.path.join(root, f)
-                    for f in names
-                    if f.endswith(".parquet")
-                )
-        else:
-            files = [path]
-        if not files or len(files) > max_files:
-            return None
-        mn = mx = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = {
-                md.row_group(0).column(j).path_in_schema: j
-                for j in range(md.num_columns)
-            } if md.num_row_groups else {}
-            if md.num_row_groups and col not in idx:
-                return None
-            for i in range(md.num_row_groups):
-                ch = md.row_group(i).column(idx[col])
-                st = ch.statistics
-                if st is None or st.num_values == 0:
-                    if st is None and ch.num_values:
-                        return None
-                    continue
-                if not st.has_min_max or not all(
-                    type(v) is int for v in (st.min, st.max)
-                ):
-                    return None
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        return (mn, mx)
-    except Exception:
-        return None
-
-
 def packed_map_worthwhile(
     sf_dir: str,
     probe_table: str,
@@ -317,7 +237,7 @@ def packed_map_worthwhile(
     scale-safe default, and only small-SF pennies ride on the gate
     being right."""
     try:
-        return _footer_rows(sf_dir, probe_table) >= min_probe_rows
+        return footer(sf_dir, probe_table).rows >= min_probe_rows
     except Exception:
         return True
 
@@ -347,7 +267,7 @@ def words_fit_broadcast(
     threshold the gate turns the hint off so a 100 TB build degrades to
     AQE's choice instead of OOMing the driver."""
     try:
-        n_rows = _footer_rows(sf_dir, table_name)
+        n_rows = footer(sf_dir, table_name).rows
         # ``selectivity`` is the caller's arithmetic for build-side filters
         # the footer can't see (e.g. a date range keeping ~1/7 of orders);
         # a wrong value only flips the hint, never correctness. Two sound
@@ -366,19 +286,8 @@ def words_fit_broadcast(
         # than the session would ever choose.
         threshold = spark.conf.get(
             "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-        )
-        if threshold is None:
-            threshold = spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-        t = threshold.lower().strip()
-        mult = 1
-        for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-            if t.endswith(suffix + "b") or t.endswith(suffix):
-                mult = m
-                t = t.rstrip("b").rstrip(suffix)
-                break
-        limit = float(t) * mult
+        ) or spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        limit = byte_size(spark, threshold)
         return limit > 0 and words * bytes_per_word <= limit
     except Exception:
         return False

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import footer, table
 from ..dedup import (
     keep_one_per_cluster,
     minhash_near_dup_pairs,
@@ -159,37 +159,11 @@ def dedup_semantic_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic under the seeded quantizer. Same low threshold as
     ``embed_dedup_near`` (synthetic vectors are near-orthogonal) so the
     operator has real pairs to resolve at every SF."""
-    from ..dedup.semantic import greedy_drop, semantic_dup_pairs
+    from ..dedup.semantic import greedy_drop
 
     emb = table(spark, sf_dir, "embeddings")
-    # SemDeDup sizing: cluster count scales with the corpus (k ≈ n/100,
-    # the paper's many-small-clusters regime) so within-cluster pair
-    # blow-up stays ~O(n·cluster_size). A fixed small k made clusters
-    # thousands wide — 21 s at sf0.1 on the first bench run (ledger).
-    # The keep policy here is the paper's GREEDY single-pass rule; the
-    # exact component resolver (policy="components") pays a multi-job
-    # label-propagation iteration per graph-diameter hop — right for the
-    # curation funnel, wrong for a per-round benched query.
-    # k-sizing count from parquet footers (metadata only — identical to
-    # count() on these tables; the packed_map_worthwhile precedent), with
-    # the full count as fallback for non-parquet inputs: saves one whole
-    # Spark job per run (r11, guide §1.2 "don't compute things twice").
-    try:
-        from ..operators.packedmap import _footer_rows
-
-        n = _footer_rows(sf_dir, "embeddings")
-    except Exception:
-        n = emb.count()
-    k = max(16, min(4096, n // 100))
-    # nprobe=3: measured against numpy brute force on the sf0.001 corpus
-    # (tests/test_dedup_similarity.py::test_semantic_dedup_recall_vs_brute
-    # _force) — recall 0.35 / 0.77 / 0.94 at nprobe 1/2/3, precision 1.0
-    # at all settings (candidates are verified with the exact cosine).
-    # The +1 nprobe costs ~30% on the pair stage (3.4→4.4 s sf0.1) for
-    # +17 points of recall on this near-orthogonal synthetic regime.
-    pairs = semantic_dup_pairs(
-        emb, threshold=0.40, num_centroids=k, nprobe=3
-    ).localCheckpoint(eager=True)  # reused by the count AND the keep pass
+    # checkpointed: reused by the count AND the keep pass
+    pairs = semantic_pairs(emb, sf_dir).localCheckpoint(eager=True)
     kept = greedy_drop(emb, pairs, id_col="vec_id")
     n_all = emb.agg(F.count(F.lit(1)).alias("n")).withColumn("k", F.lit(1))
     n_pairs = pairs.agg(F.count(F.lit(1)).alias("p")).withColumn("k", F.lit(1))
@@ -204,6 +178,34 @@ def dedup_semantic_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s").alias("n_kept"),
         )
     )
+
+
+def semantic_pairs(emb: DataFrame, sf_dir: str) -> DataFrame:
+    """dedup_semantic_docs' candidate dup pairs over ``emb`` (the table of
+    ``sf_dir``), before the query checkpoints them."""
+    from ..dedup.semantic import semantic_dup_pairs
+
+    # SemDeDup sizing: cluster count scales with the corpus (k ≈ n/100,
+    # the paper's many-small-clusters regime) so within-cluster pair
+    # blow-up stays ~O(n·cluster_size). A fixed small k made clusters
+    # thousands wide — 21 s at sf0.1 on the first bench run (ledger).
+    # The keep policy here is the paper's GREEDY single-pass rule; the
+    # exact component resolver (policy="components") pays a multi-job
+    # label-propagation iteration per graph-diameter hop — right for the
+    # curation funnel, wrong for a per-round benched query.
+    # k-sizing count from parquet footers (metadata only — identical to
+    # count() on these tables; the packed_map_worthwhile precedent), with
+    # the full count as fallback for non-parquet inputs: saves one whole
+    # Spark job per run (r11, guide §1.2 "don't compute things twice").
+    n = footer(sf_dir, "embeddings").rows or emb.count()
+    k = max(16, min(4096, n // 100))
+    # nprobe=3: measured against numpy brute force on the sf0.001 corpus
+    # (tests/test_dedup_similarity.py::test_semantic_dedup_recall_vs_brute
+    # _force) — recall 0.35 / 0.77 / 0.94 at nprobe 1/2/3, precision 1.0
+    # at all settings (candidates are verified with the exact cosine).
+    # The +1 nprobe costs ~30% on the pair stage (3.4→4.4 s sf0.1) for
+    # +17 points of recall on this near-orthogonal synthetic regime.
+    return semantic_dup_pairs(emb, threshold=0.40, num_centroids=k, nprobe=3)
 
 
 @register(

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import EXPECTED_SCHEMAS, TABLES, footer, raw_table, table
 from ..checks import Check, run_suite
 from ..functions.numeric import fx_avg, fx_round, fx_sum, sql_avg, sql_round, sql_sum
 from ..operators.packedmap import distinct_presence
@@ -1751,8 +1751,6 @@ def _schema_audit_oracle() -> str:
     timestamp). The missing_table branch is not reachable through the
     driver's pre-registered views; it stays pinned by
     tests/test_graph.py::test_schema_audit_detects_all_drift_kinds."""
-    from ..catalog import EXPECTED_SCHEMAS
-
     expected_values = ",\n      ".join(
         f"('{t}', '{f.name}', '{f.dataType.simpleString()}')"
         for t, st in EXPECTED_SCHEMAS.items()
@@ -1803,10 +1801,7 @@ def _schema_audit_oracle() -> str:
 @register(
     "dq_schema_audit",
     oracle=_schema_audit_oracle(),
-    tables=(
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ),
+    tables=TABLES,
 )
 def dq_schema_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-drift audit (Q4's contract, turned into a report): every
@@ -1818,14 +1813,12 @@ def dq_schema_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The known events.ts representational variance (TIMESTAMP(NANOS) vs
     MICROS across driver generations — see catalog._fix_events_ts) is
     reported as status 'adapted', not drift: the reader normalizes it."""
-    from ..catalog import EXPECTED_SCHEMAS, table_path
-
     rows = []
     for name, expected in EXPECTED_SCHEMAS.items():
         try:
             actual = {
                 f.name: f.dataType.simpleString()
-                for f in spark.read.parquet(table_path(sf_dir, name)).schema
+                for f in raw_table(spark, sf_dir, name).schema
             }
         except Exception:
             for f in expected.fields:
@@ -1883,10 +1876,7 @@ _FILE_STATS_ORACLE = "\nUNION ALL\n".join(
       FROM parquet_metadata('{{SF_PARQUET_DIR}}/{t}.parquet')
       GROUP BY 1, 2
     )"""
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
+    for t in TABLES
 )
 
 
@@ -1903,53 +1893,36 @@ def dq_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson for too-few-groups — a 500k-row single group cannot split
     across tasks; see PERF.md).
 
-    Footer-only pyarrow reads on the driver — zero data scan, zero Spark
-    jobs until the tiny report frame materializes; at 100 TB this is a
-    metadata listing, which is exactly why the audit can run before every
-    job. Byte totals come from the footer (row-group total_byte_size +
-    per-chunk total_compressed_size), not the filesystem, since r8 — the
-    same numbers DuckDB's parquet_metadata() exposes, which is what made
-    this query oracle-checkable (VERDICT r7 item 5); the small-file flag
-    thresholds average COMPRESSED bytes per file (≈ on-disk size)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from ..catalog import TABLES, table_path
-
+    Reads only ``catalog.footer`` on the driver: zero data scan, zero Spark
+    jobs until the tiny report frame materializes, so the audit can run
+    before every job. Byte totals are the footer's (row-group
+    total_byte_size + per-chunk total_compressed_size), the numbers DuckDB's
+    parquet_metadata() exposes, so the query is oracle-checked; the
+    small-file flag averages COMPRESSED bytes per file (≈ on-disk size)."""
     rows = []
     for name in TABLES:
-        path = table_path(sf_dir, name)
-        files = []
-        if os.path.isdir(path):
-            for root, _, names in os.walk(path):
-                files += [os.path.join(root, f) for f in names if f.endswith(".parquet")]
-        elif os.path.exists(path):
-            files = [path]
-        n_rows = n_groups = n_comp = n_unc = 0
-        max_group = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            n_rows += md.num_rows
-            n_groups += md.num_row_groups
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                n_unc += rg.total_byte_size
-                n_comp += sum(
-                    rg.column(c).total_compressed_size
-                    for c in range(rg.num_columns)
-                )
-                max_group = max(max_group, rg.num_rows)
+        snap = footer(sf_dir, name)
+        groups = [
+            md.row_group(g)
+            for md in snap.metadata
+            for g in range(md.num_row_groups)
+        ]
+        n_comp = sum(
+            rg.column(c).total_compressed_size
+            for rg in groups
+            for c in range(rg.num_columns)
+        )
+        max_group = max((rg.num_rows for rg in groups), default=0)
         rows.append(
             (
                 name,
-                len(files),
-                int(n_comp),
-                int(n_unc),
-                int(n_rows),
-                int(n_groups),
-                int(max_group),
-                bool(files and n_comp / max(len(files), 1) < 1 << 20),
+                len(snap.files),
+                n_comp,
+                sum(rg.total_byte_size for rg in groups),
+                snap.rows or 0,
+                len(groups),
+                max_group,
+                bool(snap.files and n_comp / len(snap.files) < 1 << 20),
                 bool(max_group > 200_000),
             )
         )

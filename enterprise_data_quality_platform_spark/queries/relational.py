@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import footer, table
 from ..models import marts, staging
 from ..operators.packedmap import (
     join_packed_codes,
@@ -14,7 +14,7 @@ from ..operators.packedmap import (
     packed_map_worthwhile,
     words_fit_broadcast,
 )
-from ..session import local_frame
+from ..session import byte_size, local_frame
 from .registry import register
 
 from ..functions.numeric import fx_round, fx_sum, sql_avg, sql_round, sql_sum
@@ -613,30 +613,11 @@ def _shj_build_fits(
     estimate only exists to AVOID a loud failure, never to mask one. At
     cluster scale the same arithmetic holds per executor; a deployment
     sized per SURVEY §4.3 (heap/core ≥ split size + build) always passes."""
-    import os
-    import re
-
-    import pyarrow.parquet as pq
-
-    from ..catalog import table_path
-
     try:
-        path = table_path(sf_dir, table_name)
-        if os.path.isdir(path):
-            n_rows = 0
-            for root, _, names in os.walk(path):
-                for f in names:
-                    if f.endswith(".parquet"):
-                        n_rows += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        else:
-            n_rows = pq.ParquetFile(path).metadata.num_rows
+        n_rows = footer(sf_dir, table_name).rows
         shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         build_per_task = n_rows * bytes_per_row / max(shuffle_parts, 1)
-
-        heap_str = spark.conf.get("spark.driver.memory", "16g")
-        m = re.fullmatch(r"(\d+)([kmgt]?)b?", heap_str.lower())
-        mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-        heap = int(m.group(1)) * mult[m.group(2)]
+        heap = byte_size(spark, spark.conf.get("spark.driver.memory", "16g"))
         cores = spark.sparkContext.defaultParallelism
         exec_per_task = 0.6 * heap / max(cores, 1)
         return build_per_task < safety * exec_per_task
@@ -720,30 +701,18 @@ def mart_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = F.shiftleft(F.col("a.l_partkey"), 32).bitwiseOR(
         F.col("b.l_partkey")
     )
-    # r12 (guide §1.2/§6: don't scan for what metadata already proves):
-    # parquet column-chunk statistics give the EXACT l_partkey min/max
-    # from the footers — when every value-bearing chunk carries exact
-    # stats, the range check resolves at build time and the in-plan guard
-    # subtree (one extra column-pruned lineitem scan + min/max aggregate +
-    # 20×1 BroadcastNestedLoopJoin attach) is not built at all. A proven
-    # violation raises the SAME "pack range" message, just at build time
-    # instead of action time — still loud, never wrong counts. Stats
-    # missing/untrusted (non-parquet input, a writer without statistics,
-    # >256 files — the driver-side footer-read bound) falls back to the
-    # in-plan guard unchanged. The footer-verified path trusts a BUILD-TIME
-    # snapshot of the file listing: the footers are read, and Spark lists
-    # lineitem's files, when this frame is built. A file rewritten in place
-    # (same path, new contents) between building and running the frame
-    # would be scanned without its range being proven, so build and run
-    # the frame against one table state (each query call builds afresh).
+    # Don't scan for what metadata proves: when the footer statistics give
+    # l_partkey's exact min/max, the range check resolves at build time (a
+    # violation raises the same message) and the in-plan guard subtree is
+    # not built; otherwise the in-plan guard stays. The proof covers the
+    # files as listed when the frame is built: build and run it on one
+    # table state (each query call builds afresh).
     _PACK_MSG = (
         "mart_part_affinity: l_partkey outside [0, 2^31)"
         " pack range; use the two-column groupBy form for"
         " this key domain"
     )
-    from ..operators.packedmap import _footer_col_minmax
-
-    stats = _footer_col_minmax(sf_dir, "lineitem", "l_partkey")
+    stats = footer(sf_dir, "lineitem").bounds.get("l_partkey")
     if stats is not None:
         mn, mx = stats
         if mn is not None and (mn < 0 or mx >= 2147483648):
@@ -2068,11 +2037,21 @@ def mart_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     |parts| rank rows against the cached normalized edge frame."""
     from ..operators.graph import pagerank
 
+    ranks = pagerank(copurchase_edges(spark, sf_dir), iterations=10)
+    return (
+        ranks.orderBy(F.col("rank").desc(), "node")
+        .limit(20)
+        .select(F.col("node").alias("part_key"), "rank")
+    )
+
+
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-purchase edges: (src < dst, weight = baskets holding both)."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.collect_list("l_partkey").alias("ps")
     )
-    edges = (
+    return (
         baskets.select(F.explode("ps").alias("x"), "ps")
         .select(
             F.col("x").alias("src"),
@@ -2081,12 +2060,17 @@ def mart_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("double").alias("weight"))
     )
-    ranks = pagerank(edges, iterations=10)
-    return (
-        ranks.orderBy(F.col("rank").desc(), "node")
-        .limit(20)
-        .select(F.col("node").alias("part_key"), "rank")
-    )
+
+
+def copurchase_superstep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One mart_copurchase_pagerank superstep on UNCACHED edge frames (from
+    a uniform rank over a nominal 1000 nodes), for plan dumps: the query's
+    own plan stops at its checkpointed ranks."""
+    from ..operators.graph import pagerank_step, transition_graph
+
+    norm, nodes = transition_graph(copurchase_edges(spark, sf_dir))
+    rank = nodes.select("node", F.lit(1.0 / 1000).alias("rank"))
+    return pagerank_step(rank, norm, nodes, 1000, 0.85)
 
 
 @register(

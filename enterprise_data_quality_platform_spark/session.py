@@ -167,6 +167,15 @@ def configure_session(spark: SparkSession, force: bool = False) -> SparkSession:
     return spark
 
 
+def byte_size(spark: SparkSession, size: str) -> int:
+    """Bytes in a Spark size string ("-1", "10485760b", "64m"), parsed as
+    Spark's byte confs are: a sign, then ``JavaUtils.byteStringAsBytes``.
+    DOCUMENTED ``_jvm`` PIN: PySpark exposes no size parser."""
+    size = size.strip()
+    utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return (-1 if size[:1] == "-" else 1) * utils.byteStringAsBytes(size.lstrip("-"))
+
+
 def local_frame(
     spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
 ) -> DataFrame:

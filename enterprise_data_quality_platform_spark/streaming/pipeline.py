@@ -25,7 +25,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import EXPECTED_SCHEMAS, table_path
+from ..catalog import raw_table
 from ..checks import Check, run_suite
 from ..checks.definitions import CheckResult
 from ..session import configure_session
@@ -58,44 +58,23 @@ def use_rocksdb_state(
     return spark
 
 
-def _events_ts_source_type(spark: SparkSession, sf_dir: str):
-    """Probe the parquet footer type of ``events.ts`` via a batch schema
-    read (footer-only — no data scan). The driver's generator has shipped
-    both TIMESTAMP(NANOS) (arrives as long under ``nanosAsLong``) and
-    TIMESTAMP(MICROS) (arrives as timestamp/timestamp_ntz); a stream source
-    that hardcodes one silently mis-decodes the other, so the stream must
-    branch exactly like the batch reader (``catalog._fix_events_ts``)."""
-    from pyspark.sql import types as T
-
-    dt = spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
-    if not isinstance(dt, (T.LongType, T.TimestampType, T.TimestampNTZType)):
-        raise TypeError(f"unsupported events.ts parquet type: {dt}")
-    return dt
-
-
 def events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """T1: file-based streaming source over the events table.
 
-    The declared read schema follows the footer's actual ts representation
-    (see ``_events_ts_source_type``) and is normalized to LTZ TIMESTAMP in
-    the stream — watermarks require LTZ, and the UTC session TZ makes
-    wall-clock values match the batch/NTZ side exactly."""
+    The declared read schema is the table's footer schema, so ts keeps its
+    stored representation (TIMESTAMP(NANOS) is a long under ``nanosAsLong``,
+    as in the batch reader's ``catalog._fix_events_ts``), and is normalized
+    to LTZ TIMESTAMP in the stream — watermarks require LTZ, and the UTC
+    session TZ makes wall-clock values match the batch/NTZ side exactly."""
     configure_session(spark)
     from pyspark.sql import types as T
 
-    ts_type = _events_ts_source_type(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    schema = raw_table(spark, sf_dir, "events").schema
+    ts_type = schema["ts"].dataType
+    if not isinstance(ts_type, (T.LongType, T.TimestampType, T.TimestampNTZType)):
+        raise TypeError(f"unsupported events.ts parquet type: {ts_type}")
     # the file stream source needs a directory; glob-filter to the events
     # table inside the sf dir
     reader = spark.readStream.schema(schema).option(

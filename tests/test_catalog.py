@@ -1,0 +1,236 @@
+"""Unit pins for catalog.py — the footer snapshot every table read and every
+footer consumer goes through.
+
+The load-bearing properties: the snapshot schema is exactly what
+``spark.read.parquet`` infers (or ``None``, so the read falls back to
+Spark's inference) on every tier table and on crafted files; a table read
+with it runs no Spark job; row counts and integral bounds come from the
+footers as they are now, never from an earlier read."""
+
+from __future__ import annotations
+
+import datetime
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from enterprise_data_quality_platform_spark import catalog
+from enterprise_data_quality_platform_spark.catalog import footer, raw_table
+
+from tests.conftest import SF_ORACLE, SF_SMALL
+
+TIERS = (SF_SMALL, SF_ORACLE, os.path.join(os.path.dirname(SF_SMALL), "sf0.1"))
+
+TS = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+
+
+def _inferred(spark, sf_dir, name):
+    return spark.read.parquet(catalog.table_path(sf_dir, name)).schema
+
+
+def _write(sf_dir, name, tbl, **kw):
+    pq.write_table(tbl, catalog.table_path(str(sf_dir), name), **kw)
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize("sf_dir", TIERS)
+@pytest.mark.parametrize("name", catalog.TABLES)
+def test_snapshot_schema_equals_spark_inference(spark, sf_dir, name):
+    assert footer(sf_dir, name).schema == _inferred(spark, sf_dir, name)
+
+
+def test_table_read_runs_no_job(spark):
+    """Reading with the snapshot schema skips Spark's one-task inference
+    job; the bare read in the same job group runs one (the control)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-no-job", "catalog.table reads")
+    try:
+        catalog.table(spark, SF_SMALL, "lineitem")
+        catalog.load_tables(spark, SF_SMALL, ("orders", "events"))
+        assert sc.statusTracker().getJobIdsForGroup("catalog-no-job") == []
+        _inferred(spark, SF_SMALL, "nation")
+        assert sc.statusTracker().getJobIdsForGroup("catalog-no-job") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize(
+    "ts_type, want",
+    [
+        (pa.timestamp("ns"), "bigint"),  # nanosAsLong
+        (pa.timestamp("us"), "timestamp_ntz"),
+        (pa.timestamp("us", tz="UTC"), "timestamp"),
+    ],
+)
+def test_events_ts_units_match_spark(spark, tmp_path, ts_type, want):
+    sf = _write(
+        tmp_path,
+        "events",
+        pa.table({"event_id": [1], "ts": pa.array([TS], ts_type)}),
+    )
+    snap = footer(sf, "events")
+    assert snap.schema == _inferred(spark, sf, "events")
+    assert snap.schema["ts"].dataType.simpleString() == want
+    # every representation reads back as the same UTC wall-clock value
+    ts = catalog.table(spark, sf, "events").selectExpr(
+        "CAST(ts AS TIMESTAMP_NTZ) AS ts"
+    )
+    assert ts.collect()[0].ts == TS
+
+
+def test_string_partkey_matches_spark_and_has_no_bounds(spark, tmp_path):
+    sf = _write(
+        tmp_path,
+        "lineitem",
+        pa.table({"l_orderkey": [1, 2], "l_partkey": ["3", "5"]}),
+    )
+    snap = footer(sf, "lineitem")
+    assert snap.schema == _inferred(spark, sf, "lineitem")
+    assert snap.bounds == {"l_orderkey": (1, 2)}
+
+
+def test_required_column_reads_nullable(spark, tmp_path):
+    schema = pa.schema(
+        [
+            pa.field("k", pa.int64(), nullable=False),
+            pa.field(
+                "v", pa.list_(pa.field("item", pa.float32(), nullable=False))
+            ),
+        ]
+    )
+    sf = _write(tmp_path, "embeddings", pa.table({"k": [1], "v": [[0.5]]}, schema))
+    snap = footer(sf, "embeddings")
+    assert snap.schema == _inferred(spark, sf, "embeddings")
+    assert snap.schema["k"].nullable and snap.schema["v"].dataType.containsNull
+
+
+def test_spark_written_int96_falls_back_to_spark(spark, tmp_path):
+    """Spark writes timestamps as INT96, which Arrow reports as
+    timestamp[ns]: the snapshot must not call it a long."""
+    df = spark.sql(
+        "SELECT 1L AS k, TIMESTAMP'2024-01-02 03:04:05' AS ts,"
+        " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts_ntz,"
+        " CAST(1.25 AS DECIMAL(10, 2)) AS amount"
+    )
+    df.write.parquet(catalog.table_path(str(tmp_path / "all"), "orders"))
+    sf = str(tmp_path / "all")
+    assert footer(sf, "orders").schema is None
+    assert raw_table(spark, sf, "orders").schema == _inferred(spark, sf, "orders")
+    assert raw_table(spark, sf, "orders").schema["ts"].dataType.simpleString() == (
+        "timestamp"
+    )
+    # without the INT96 column, Spark's own files map exactly
+    df.drop("ts").write.parquet(catalog.table_path(str(tmp_path / "no96"), "orders"))
+    sf = str(tmp_path / "no96")
+    assert footer(sf, "orders").schema == _inferred(spark, sf, "orders")
+    # Spark reads its files with the schema stored in them: field metadata
+    # the parquet types cannot carry falls back to Spark too
+    df.selectExpr("k").withMetadata("k", {"comment": "key"}).write.parquet(
+        catalog.table_path(str(tmp_path / "meta"), "orders")
+    )
+    sf = str(tmp_path / "meta")
+    assert footer(sf, "orders").schema is None
+    assert raw_table(spark, sf, "orders").schema == _inferred(spark, sf, "orders")
+
+
+@pytest.mark.parametrize("layout", ["int96", "uint", "mixed", "hive", "many"])
+def test_unprovable_layouts_fall_back_to_spark(spark, tmp_path, layout):
+    path = catalog.table_path(str(tmp_path), "part")
+    if layout == "int96":  # no Spark schema in the footer to catch it
+        tbl = pa.table({"p": pa.array([TS], pa.timestamp("ns"))})
+        pq.write_table(tbl, path, use_deprecated_int96_timestamps=True)
+    elif layout == "uint":
+        pq.write_table(pa.table({"p": pa.array([1], pa.uint32())}), path)
+    else:
+        os.makedirs(path)
+    if layout == "mixed":
+        pq.write_table(pa.table({"p": pa.array([1], pa.int32())}), f"{path}/a.parquet")
+        pq.write_table(pa.table({"p": pa.array([2], pa.int64())}), f"{path}/b.parquet")
+    if layout == "hive":
+        for k in (0, 1):
+            os.makedirs(f"{path}/k={k}")
+            pq.write_table(pa.table({"p": [k]}), f"{path}/k={k}/a.parquet")
+    if layout == "many":
+        for i in range(catalog.MAX_FOOTER_FILES + 1):
+            pq.write_table(pa.table({"p": [i]}), f"{path}/{i:04d}.parquet")
+    snap = footer(str(tmp_path), "part")
+    assert snap.schema is None
+    if layout == "many":
+        assert snap.rows == catalog.MAX_FOOTER_FILES + 1 and snap.bounds == {}
+    got = raw_table(spark, str(tmp_path), "part").schema
+    assert got == _inferred(spark, str(tmp_path), "part")
+
+
+def test_absent_table_has_no_snapshot(spark, tmp_path):
+    snap = footer(str(tmp_path), "region")
+    assert (snap.files, snap.rows, snap.bounds, snap.schema) == ((), None, {}, None)
+    with pytest.raises(Exception):
+        raw_table(spark, str(tmp_path), "region")
+
+
+def test_ntz_inference_off_falls_back_to_spark(spark, tmp_path):
+    """The snapshot maps types under the engine's confs; a session with
+    TIMESTAMP_NTZ inference off reads with Spark's inference instead."""
+    sf = _write(
+        tmp_path, "events", pa.table({"ts": pa.array([TS], pa.timestamp("us"))})
+    )
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = raw_table(spark, sf, "events").schema
+        assert got == _inferred(spark, sf, "events")
+        assert got["ts"].dataType.simpleString() == "timestamp"
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_no_statistics_leave_the_in_plan_guard(spark, tmp_path):
+    from enterprise_data_quality_platform_spark.queries.relational import (
+        mart_part_affinity,
+    )
+
+    sf = _write(
+        tmp_path,
+        "lineitem",
+        pa.table({"l_orderkey": [1, 1, 2], "l_partkey": [3, 5, 3]}),
+        write_statistics=False,
+    )
+    snap = footer(sf, "lineitem")
+    assert snap.bounds == {} and snap.rows == 3
+    assert snap.schema == _inferred(spark, sf, "lineitem")
+    df = mart_part_affinity(spark, sf)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "raise_error" in plan  # the in-plan pack-range guard
+
+
+def test_rewritten_table_is_reread(tmp_path):
+    """No memoization: a table rewritten in place between two snapshots
+    shows its new row count and bounds."""
+    sf = _write(tmp_path, "lineitem", pa.table({"l_partkey": [1, 2, 3]}))
+    assert footer(sf, "lineitem").rows == 3
+    _write(tmp_path, "lineitem", pa.table({"l_partkey": [-7, 9]}))
+    snap = footer(sf, "lineitem")
+    assert snap.rows == 2 and snap.bounds["l_partkey"] == (-7, 9)
+
+
+def test_shj_build_fits_size_arithmetic(spark):
+    """The shuffled-hash-join hint gate: tiny builds fit; a build whose
+    per-partition bytes exceed the task execution-memory share does not
+    (simulated via an absurd bytes-per-row); estimation failures fall back
+    to True (the hint — the gate exists to avoid loud failures, not to
+    silently change plans on error)."""
+    from enterprise_data_quality_platform_spark.queries.relational import (
+        _shj_build_fits,
+    )
+
+    assert _shj_build_fits(spark, SF_SMALL, "lineitem") is True
+    assert (
+        _shj_build_fits(spark, SF_SMALL, "lineitem", bytes_per_row=1 << 40)
+        is False
+    )
+    assert _shj_build_fits(spark, "/nonexistent", "lineitem") is True

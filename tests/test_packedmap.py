@@ -85,7 +85,9 @@ def test_words_fit_broadcast_falls_back_to_static_threshold(spark, sf_dir):
     """When the adaptive broadcast threshold is UNSET, Spark falls back
     to spark.sql.autoBroadcastJoinThreshold — the gate must read that
     fallback, not assume the 64MB default (ADVICE r8): with the static
-    conf at -1 (broadcasts off) the gate must return False."""
+    conf at -1 (broadcasts off) the gate must return False. Sizes written
+    with a unit ("67108864b", Spark's own printed form, and "64m") parse
+    as Spark parses them."""
     from enterprise_data_quality_platform_spark.operators.packedmap import (
         words_fit_broadcast,
     )
@@ -100,6 +102,9 @@ def test_words_fit_broadcast_falls_back_to_static_threshold(spark, sf_dir):
         assert not words_fit_broadcast(spark, sf_dir, "nation")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         assert words_fit_broadcast(spark, sf_dir, "nation")
+        for size in ("67108864b", "64m"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", size)
+            assert words_fit_broadcast(spark, sf_dir, "nation"), size
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_static)
         spark.conf.set(

@@ -259,13 +259,11 @@ def test_part_affinity_no_nested_loop(spark):
     r12 the pack-range guard resolves from parquet footer statistics at
     build time on the test data, so the plan carries NO nested loop (and
     no guard subtree) at all."""
-    from enterprise_data_quality_platform_spark.operators.packedmap import (
-        _footer_col_minmax,
-    )
+    from enterprise_data_quality_platform_spark.catalog import footer
 
     # the plan assertions below assume the fixture's footers prove the
     # l_partkey range; a fixture without exact stats fails here, by name
-    assert _footer_col_minmax(SF_SMALL, "lineitem", "l_partkey") is not None
+    assert footer(SF_SMALL, "lineitem").bounds.get("l_partkey") is not None
     plan = plan_of(spark, "mart_part_affinity")
     assert "CartesianProduct" not in plan
     # the footer-verified plan has no guard attach: zero nested loops;
@@ -622,9 +620,7 @@ def test_part_affinity_string_partkey_falls_back_to_in_plan_guard(spark, tmp_pat
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from enterprise_data_quality_platform_spark.operators.packedmap import (
-        _footer_col_minmax,
-    )
+    from enterprise_data_quality_platform_spark.catalog import footer
     from enterprise_data_quality_platform_spark.queries.relational import (
         mart_part_affinity,
     )
@@ -638,7 +634,7 @@ def test_part_affinity_string_partkey_falls_back_to_in_plan_guard(spark, tmp_pat
         ),
         str(tmp_path / "lineitem.parquet"),
     )
-    assert _footer_col_minmax(str(tmp_path), "lineitem", "l_partkey") is None
+    assert footer(str(tmp_path), "lineitem").bounds.get("l_partkey") is None
     df = mart_part_affinity(spark, str(tmp_path))
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -819,7 +815,10 @@ def test_driver_frames_only_built_through_local_frame():
     forks Python workers; driver-built frames go through
     ``session.local_frame`` (an Arrow-backed LocalRelation) instead. The
     only other caller is ``compat.py``, whose schema is inferred from the
-    caller's row-dicts."""
+    caller's row-dicts. Likewise parquet footers are read only by
+    ``catalog.footer``: no other module opens one, and no table is read
+    with a bare ``spark.read.parquet`` that would run a schema-inference
+    job."""
     import inspect
     from pathlib import Path
 
@@ -828,12 +827,20 @@ def test_driver_frames_only_built_through_local_frame():
     root = Path(session.__file__).parent
     body, start = inspect.getsourcelines(session.local_frame)
     inside_local_frame = range(start, start + len(body))
+    footer_readers = ("ParquetFile(", "read_metadata(", "read_schema(")
     stray = [
         f"{path.relative_to(root)}:{i}"
         for path in sorted(root.rglob("*.py"))
-        if path.name != "compat.py" or path.parent != root
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if ".createDataFrame(" in line
-        and not (path == root / "session.py" and i in inside_local_frame)
+        if (
+            ".createDataFrame(" in line
+            and not (path.name == "compat.py" and path.parent == root)
+            and not (path == root / "session.py" and i in inside_local_frame)
+        )
+        or (
+            any(reader in line for reader in footer_readers)
+            and path != root / "catalog.py"
+        )
+        or "spark.read.parquet(table_path(" in line
     ]
     assert not stray, stray

@@ -120,24 +120,6 @@ def test_key_skew_packed_counters_guard_and_negatives(spark, tmp_path):
     assert rows == {-9: 3, -1: 2, 0: 1, 5: 1}
 
 
-def test_shj_build_fits_size_arithmetic(spark):
-    """The shuffled-hash-join hint gate: tiny builds fit; a build whose
-    per-partition bytes exceed the task execution-memory share does not
-    (simulated via an absurd bytes-per-row); estimation failures fall back
-    to True (the hint — the gate exists to avoid loud failures, not to
-    silently change plans on error)."""
-    from enterprise_data_quality_platform_spark.queries.relational import (
-        _shj_build_fits,
-    )
-
-    assert _shj_build_fits(spark, SF_SMALL, "lineitem") is True
-    assert (
-        _shj_build_fits(spark, SF_SMALL, "lineitem", bytes_per_row=1 << 40)
-        is False
-    )
-    assert _shj_build_fits(spark, "/nonexistent", "lineitem") is True
-
-
 def test_user_conf_overrides_survive_table_reads(spark):
     """configure_session applies engine defaults ONCE per session: a conf
     the caller tunes between table() reads must survive the next read

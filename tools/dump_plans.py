@@ -11,8 +11,8 @@ Writes <out_dir>/<query>_<suffix>.txt per query.
 
 Queries that ``localCheckpoint`` mid-pipeline truncate their own dumps at
 ``Scan ExistingRDD`` (VERDICT r11 item 9), so the interesting subtree is
-invisible. For those, PRE_CHECKPOINT registers extra frames — built from
-the same operator entry points, stopping BEFORE the checkpoint — dumped
+invisible. For those, PRE_CHECKPOINT registers extra frames — built by
+the query modules' own builders, stopping BEFORE the checkpoint — dumped
 as <query>__<frame>_<suffix>.txt whenever the query itself is requested.
 """
 
@@ -20,71 +20,24 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-
-def _semantic_pairs_frame(spark, sf_dir):
-    """dedup_semantic_docs' pairs frame, pre-localCheckpoint (same sizing
-    arithmetic as the query function)."""
-    from enterprise_data_quality_platform_spark.catalog import table
-    from enterprise_data_quality_platform_spark.dedup.semantic import (
-        semantic_dup_pairs,
-    )
-    from enterprise_data_quality_platform_spark.operators.packedmap import (
-        _footer_rows,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    n = _footer_rows(sf_dir, "embeddings")
-    k = max(16, min(4096, n // 100))
-    return semantic_dup_pairs(emb, threshold=0.40, num_centroids=k, nprobe=3)
-
-
-def _pagerank_superstep_frame(spark, sf_dir):
-    """One mart_copurchase_pagerank superstep (contrib join + re-rank),
-    built on the un-cached edge frames so the full subtree prints."""
-    from pyspark.sql import functions as F
-
-    from enterprise_data_quality_platform_spark.catalog import table
-
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(F.collect_list("l_partkey").alias("ps"))
-    edges = (
-        baskets.select(F.explode("ps").alias("x"), "ps")
-        .select(
-            F.col("x").alias("src"),
-            F.explode(F.expr("filter(ps, y -> y > x)")).alias("dst"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    )
-    both = edges.select("src", "dst", "weight").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    )
-    out_w = both.groupBy("src").agg(F.sum("weight").alias("out_weight"))
-    norm = both.join(out_w, "src").select(
-        "src", "dst", (F.col("weight") / F.col("out_weight")).alias("p")
-    )
-    nodes = norm.select(F.col("src").alias("node")).distinct()
-    rank = nodes.select("node", F.lit(0.001).alias("rank"))
-    contrib = (
-        rank.join(norm, rank.node == norm.src)
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("p")).alias("in_rank"))
-    )
-    return nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-        "node",
-        (F.lit(0.15 * 0.001) + F.lit(0.85) * F.coalesce(F.col("in_rank"), F.lit(0.0))).alias(
-            "rank"
-        ),
-    )
-
+from enterprise_data_quality_platform_spark.catalog import table  # noqa: E402
+from enterprise_data_quality_platform_spark.queries.dedup_ops import (  # noqa: E402
+    semantic_pairs,
+)
+from enterprise_data_quality_platform_spark.queries.relational import (  # noqa: E402
+    copurchase_superstep,
+)
 
 #: query -> [(frame_label, builder)] extra pre-checkpoint frames to dump.
 PRE_CHECKPOINT = {
-    "dedup_semantic_docs": [("pairs", _semantic_pairs_frame)],
-    "mart_copurchase_pagerank": [("superstep", _pagerank_superstep_frame)],
+    "dedup_semantic_docs": [
+        ("pairs", lambda spark, sf: semantic_pairs(table(spark, sf, "embeddings"), sf))
+    ],
+    "mart_copurchase_pagerank": [("superstep", copurchase_superstep)],
 }
 
 
