@@ -4,9 +4,11 @@ Replaces the reference's BigQuery datasets (``raw_adventureworks`` /
 ``chicory_mds_staging`` / ``chicory_mds_marts``,
 ``/root/reference/airflow/dags/pager-workflow.py:126,159,189``) with
 DataFrames over parquet. ``footer`` is the one reader of their parquet
-footers (files, row counts, integral bounds, Spark schema); tables are read
-with that schema, so no schema-inference job runs, with Spark's inference
-as the fallback where the footers cannot prove it. ``EXPECTED_SCHEMAS``
+footers (files, row counts, integral bounds, null counts, Spark schema);
+tables are read with that schema, so no schema-inference job runs, with
+Spark's inference as the fallback where the footers cannot prove it.
+``footer_of`` gives a DataFrame's snapshot when a scan of it would read
+exactly those footers' files. ``EXPECTED_SCHEMAS``
 documents the contract (FIXTURES.md) that ``dq_schema_audit`` checks.
 """
 
@@ -153,12 +155,14 @@ class Footer:
     """One table's parquet footers: ``metadata`` holds each data file's
     pyarrow ``FileMetaData``; ``rows`` is ``None`` without files; ``bounds``
     maps integral columns to their exact (min, max), ``(None, None)`` when
-    empty; ``schema`` is ``None`` when the footers cannot prove it."""
+    empty; ``nulls`` maps flat top-level columns to their exact null count;
+    ``schema`` is ``None`` when the footers cannot prove it."""
 
     files: tuple[str, ...]
     metadata: tuple
     rows: int | None
     bounds: dict
+    nulls: dict
     schema: T.StructType | None
 
 
@@ -173,9 +177,12 @@ def footer(sf_dir: str, name: str) -> Footer:
     or non-local path, sub-directories (hive partitions), more than
     ``MAX_FOOTER_FILES`` files, files whose schemas differ, an INT96
     column, or any type outside ``_EXACT_TYPES``."""
+    return _snapshot(table_path(sf_dir, name))
+
+
+def _snapshot(path: str) -> Footer:
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
     files, nested = [path] if os.path.isfile(path) else [], False
     for root, dirs, names in os.walk(path):
         dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
@@ -189,6 +196,7 @@ def footer(sf_dir: str, name: str) -> Footer:
         metadata=metadata,
         rows=sum(md.num_rows for md in metadata) if files else None,
         bounds=_int_bounds(metadata) if exact else {},
+        nulls=_null_counts(metadata) if exact else {},
         schema=next(iter(schemas)) if len(schemas) == 1 else None,
     )
 
@@ -260,6 +268,67 @@ def _int_bounds(metadata) -> dict:
         for c, v in found.items()
         if c not in unproven
     }
+
+
+def _null_counts(metadata) -> dict:
+    """Exact null count per flat top-level column; a column is left out
+    when any chunk lacks a ``null_count`` statistic."""
+    found, unproven = {}, set()
+    for md in metadata:
+        for j in range(md.num_columns):
+            col = md.schema.column(j)
+            if col.path != col.name or col.max_repetition_level:
+                unproven.add(col.path)  # nested: leaf nulls are not row nulls
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                if st is None or not st.has_null_count:
+                    unproven.add(col.path)
+                else:
+                    found[col.path] = found.get(col.path, 0) + st.null_count
+    return {c: n for c, n in found.items() if c not in unproven}
+
+
+def footer_of(df: DataFrame) -> Footer | None:
+    """The snapshot of the files ``df`` reads, when its footers are exactly
+    what a scan of ``df`` would see; otherwise ``None``.
+
+    Exactness condition: ``df``'s analyzed plan is one bare parquet
+    ``LogicalRelation`` (no filter, projection or partition columns) over
+    one local root; the snapshot of that root has a proven schema equal to
+    ``df.schema``; and the files the relation listed (``df.inputFiles()``)
+    are the snapshot's files with the same size and modification time, so
+    no file was rewritten since ``df`` was read."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = plan.relation()
+        if (
+            rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().toString() != "Parquet"
+            or rel.partitionSchema().length()
+            or rel.location().rootPaths().size() != 1
+        ):
+            return None
+        root = rel.location().rootPaths().head().toUri()
+        listed = rel.location().allFiles()
+        listed = {
+            st.getPath().toUri().getPath(): (st.getLen(), st.getModificationTime())
+            for st in (listed.apply(i) for i in range(listed.size()))
+        }
+    except Exception:  # py4j: not a file-index relation
+        return None
+    if root.getScheme() != "file":
+        return None
+    try:
+        snap = _snapshot(root.getPath())
+        stats = [os.stat(f) for f in snap.files]  # after the footer reads
+    except (OSError, ValueError):
+        return None
+    now = {f: (st.st_size, st.st_mtime_ns // 1_000_000) for f, st in zip(snap.files, stats)}
+    if not snap.files or snap.schema != df.schema or now != listed:
+        return None
+    return snap
 
 
 def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

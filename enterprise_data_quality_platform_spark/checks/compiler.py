@@ -18,11 +18,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Any, Callable, Mapping
+from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import Footer
 from ..operators.packedmap import distinct_presence, is_integral
 from .definitions import AGG_CHECK_TYPES, Check, CheckResult
 
@@ -300,7 +301,8 @@ class CompiledAggCheck:
     because mixing ``count_distinct`` into a fused aggregate makes Catalyst
     Expand-duplicate every input row per distinct group — measured ~30%
     slower than giving the distinct check its own two-level factor (the
-    factors still run concurrently inside the one fused job).
+    factors still run concurrently). A categorical check (``is_categorical``)
+    has neither: the table's ``grouped_frame`` answers it.
     """
 
     check: Check
@@ -334,6 +336,27 @@ _ROW_COND_TYPES = frozenset(
 )
 
 
+#: Checks whose violations and totals are sums over rows, so a groupBy
+#: factor answers them from per-group partial sums (``grouped_frame``).
+ADDITIVE_TYPES = _ROW_COND_TYPES | {"row_count_between"}
+
+
+def is_categorical(check: Check) -> bool:
+    """A row-condition check the suite declares low-cardinality
+    (``params['categorical']``): its predicate is evaluated once per
+    distinct value, weighted by group counts, instead of once per row. A
+    regex over 15M rows of a 5-value priority column costs a
+    map-side-collapsing groupBy (~3 exec-s at sf10) plus 5 regex
+    evaluations, versus 15M regex evaluations inline (~56 exec-s measured).
+    Opt-in because on a high-cardinality column the groupBy would shuffle
+    every distinct value; the inline path is the safe default."""
+    return (
+        check.check_type in _ROW_COND_TYPES
+        and bool(check.params.get("categorical"))
+        and bool(check.columns or check.column)
+    )
+
+
 def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
     """Lower one aggregate-shaped check to named agg expressions.
 
@@ -359,45 +382,9 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
             scope = F.expr(row_condition)
             cond = scope & cond
             total = F.sum(F.when(scope, F.lit(1)).otherwise(F.lit(0)))
-        if p.get("categorical") and (check.columns or check.column):
-            # Low-cardinality columns: evaluate the (possibly expensive)
-            # row predicate on DISTINCT values, weighted by group counts,
-            # instead of once per row. A regex check over 15M rows of a
-            # 5-value priority column costs a map-side-collapsing groupBy
-            # (~3 exec-s at sf10) plus 5 regex evaluations, versus 15M
-            # regex evaluations inline (~56 exec-s measured). The groupBy
-            # factor joins the same fused job as a concurrent stage. With
-            # a row_condition, the scope expr becomes one more grouping
-            # key so both counts stay scoped. Opt-in because on a
-            # high-cardinality column the groupBy would shuffle every
-            # distinct value — the inline path is the safe default.
-            group_cols = [F.col(x) for x in (check.columns or [check.column])]
-            if row_condition is not None:
-                group_cols.append(F.expr(row_condition).alias("__scope"))
-
-            def build_categorical(df: DataFrame) -> DataFrame:
-                per = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__c"))
-                tot = (
-                    F.sum(F.when(F.col("__scope"), F.col("__c")))
-                    if row_condition is not None
-                    else F.sum(F.col("__c"))
-                )
-                viol = (
-                    F.col("__scope") & _violation_cond(check)
-                    if row_condition is not None
-                    else _violation_cond(check)
-                )
-                return per.agg(
-                    F.coalesce(
-                        F.sum(F.when(viol, F.col("__c"))), F.lit(0)
-                    ).alias(f"{prefix}__violations"),
-                    F.coalesce(tot, F.lit(0)).alias(f"{prefix}__total"),
-                )
-
-            return CompiledAggCheck(
-                check, {}, _count_eval(check), prefix,
-                frame_builder=build_categorical,
-            )
+        if is_categorical(check):
+            # answered by the table's groupBy factor (grouped_frame)
+            return CompiledAggCheck(check, {}, _count_eval(check), prefix)
         exprs[f"{prefix}__violations"] = F.sum(
             F.when(cond, F.lit(1)).otherwise(F.lit(0))
         )
@@ -695,6 +682,101 @@ def _scoped_violation_cond(check: Check) -> Column:
     return cond
 
 
+def grouped_frame(df: DataFrame, members: Sequence[CompiledAggCheck]) -> DataFrame:
+    """One groupBy over ``df`` answering its categorical checks, their
+    violation samples and its additive checks (``ADDITIVE_TYPES``), as the
+    1-row frame of the members' usual output aliases.
+
+    The grouping keys are the union of the categorical checks' columns,
+    plus one boolean key per distinct ``row_condition`` of a categorical
+    check so its scope survives the grouping. Categorical predicates are
+    evaluated once per group, weighted by the group's row count; every
+    other member adds per-group partial sums of its per-row violation (and
+    scope) flags, and ``row_count_between`` sums the group counts. A
+    sampleable single-column categorical check also yields
+    ``<prefix>__sample``: its distinct violating values as strings, sorted,
+    the smallest ``SAMPLE_CAP`` of them. That state is bounded by the group
+    count, which the ``categorical`` opt-in declares small."""
+    keys: dict[str, Column] = {}
+    scopes: dict[str, str] = {}  # row_condition -> its grouping key
+    n = F.col("__c")
+    partial, final = [F.count(F.lit(1)).alias("__c")], []
+    for compiled in members:
+        check, pre = compiled.check, compiled.prefix
+        if check.check_type == "row_count_between":
+            final.append(F.coalesce(F.sum(n), F.lit(0)).alias(f"{pre}__count"))
+            continue
+        scope = check.params.get("row_condition")
+        if is_categorical(check):
+            for x in check.columns or [check.column]:
+                keys.setdefault(x, F.col(x))
+            viol = _violation_cond(check)
+            total = F.sum(n)
+            if scope is not None:
+                key = scopes.setdefault(scope, f"__scope{len(scopes)}")
+                keys.setdefault(key, F.expr(scope).alias(key))
+                viol = F.col(key) & viol
+                total = F.sum(F.when(F.col(key), n))
+            violations = F.sum(F.when(viol, n))
+            if check.check_type in SAMPLEABLE_TYPES and check.column:
+                values = F.collect_set(F.when(viol, F.col(check.column).cast("string")))
+                final.append(
+                    F.slice(F.array_sort(values), 1, SAMPLE_CAP).alias(f"{pre}__sample")
+                )
+        else:
+            flag = F.when(_scoped_violation_cond(check), 1).otherwise(0)
+            partial.append(F.sum(flag).alias(f"{pre}__v"))
+            violations, total = F.sum(f"{pre}__v"), F.sum(n)
+            if scope is not None:
+                in_scope = F.when(F.expr(scope), 1).otherwise(0)
+                partial.append(F.sum(in_scope).alias(f"{pre}__t"))
+                total = F.sum(f"{pre}__t")
+        final += [
+            F.coalesce(violations, F.lit(0)).alias(f"{pre}__violations"),
+            F.coalesce(total, F.lit(0)).alias(f"{pre}__total"),
+        ]
+    return df.groupBy(*keys.values()).agg(*partial).agg(*final)
+
+
+def footer_row(compiled: CompiledAggCheck, snap: Footer) -> dict | None:
+    """The row ``compiled.evaluate`` would read from a scan, decided from the
+    table's footer snapshot (``catalog.footer_of``) without one; ``None``
+    when the footers do not decide it, so the check scans.
+
+    Exactness conditions, each giving the scan's own row:
+    - ``row_count_between``: the count is ``snap.rows``.
+    - ``not_null`` without ``row_condition``: passes when the column's exact
+      null count (``Footer.nulls``) is 0.
+    - ``values_between`` without ``row_condition``, numeric bounds only:
+      passes when the column's exact integral (min, max) (``Footer.bounds``)
+      lies inside them. Floats, decimals and dates are never in ``bounds``
+      (parquet min/max skip NaN, which violates here), so they scan.
+    A not_null or values_between the footers cannot prove passing scans,
+    so its violation count and sample come from the data."""
+    check, pre, p = compiled.check, compiled.prefix, compiled.check.params
+    if check.check_type == "row_count_between":
+        return {f"{pre}__count": snap.rows}
+    if "row_condition" in p:
+        return None
+    if check.check_type == "not_null" and snap.nulls.get(check.column) == 0:
+        return {f"{pre}__violations": 0, f"{pre}__total": snap.rows}
+    if check.check_type == "values_between" and check.column in snap.bounds:
+        limits = [p.get("min"), p.get("max")]
+        if not all(
+            x is None or (isinstance(x, (int, float)) and not isinstance(x, bool))
+            for x in limits
+        ):
+            return None
+        lo, hi = snap.bounds[check.column]
+        inside = lo is None or (
+            (limits[0] is None or lo >= limits[0])
+            and (limits[1] is None or hi <= limits[1])
+        )
+        if inside:
+            return {f"{pre}__violations": 0, f"{pre}__total": snap.rows}
+    return None
+
+
 def violating_rows(df: DataFrame, check: Check) -> DataFrame:
     """The FULL violating-row frame for a row-condition check — the
     quarantine path. The reference reports the complete violation list
@@ -706,9 +788,10 @@ def violating_rows(df: DataFrame, check: Check) -> DataFrame:
 
 def violation_sample_df(df: DataFrame, check: Check, cap: int = SAMPLE_CAP) -> DataFrame:
     """Capped distinct violating-value frame, fetched as a separate tiny
-    query only for FAILED checks — never as unbounded collect_set state
-    inside the fused scan. limit(cap) bounds both shuffle and driver
-    transfer."""
+    query only for FAILED checks that no groupBy factor samples — never as
+    unbounded collect_set state inside a row-level scan. limit(cap) bounds
+    both shuffle and driver transfer; past ``cap`` distinct values, which
+    ones it keeps is arbitrary."""
     return (
         df.filter(_scoped_violation_cond(check))
         .select(F.col(check.column).cast("string").alias("value"))
@@ -723,10 +806,15 @@ def violation_sample_df(df: DataFrame, check: Check, cap: int = SAMPLE_CAP) -> D
 
 
 def ri_frame(
-    check: Check, tables: Mapping[str, DataFrame], prefix: str
+    check: Check,
+    tables: Mapping[str, DataFrame],
+    prefix: str,
+    child_rows: int | None = None,
 ) -> DataFrame:
     """Referential integrity as a 1-row frame (orphan count + child total),
-    so the runner can fold it into the suite's single fused job. Orphans =
+    one factor of the suite. ``child_rows``, when given, is the child's
+    exact row count from its footers (``catalog.footer_of``) and replaces
+    the count side of the plan. Orphans =
     LEFT ANTI join against the distinct parent key set (SURVEY.md §2.2 G19)
     — anti-join, not NOT IN, so NULL parent keys can't poison the predicate.
     At scale the anti-join shuffles on the key unless the parent is
@@ -751,6 +839,8 @@ def ri_frame(
     orphan_count = child_counts.join(parent_keys, on=child_key, how="left_anti").agg(
         F.coalesce(F.sum("__n"), F.lit(0)).alias(f"{prefix}__violations")
     )
+    if child_rows is not None:
+        return orphan_count.withColumn(f"{prefix}__total", F.lit(child_rows).cast("long"))
     total = df.agg(F.count(F.lit(1)).alias(f"{prefix}__total"))
     return orphan_count.crossJoin(total)
 

@@ -1,5 +1,5 @@
-"""Check-suite runner: whole-suite scan fusion, per-check fault isolation,
-gate.
+"""Check-suite runner: plan a suite into as few Spark jobs as its answers
+need, run them concurrently with per-check fault isolation, gate.
 
 Semantics reproduced from the reference:
 - per-check try/except isolation — one failing check never kills the suite
@@ -11,36 +11,50 @@ Semantics reproduced from the reference:
 
 Execution differs deliberately. The reference runs one BigQuery round-trip
 per check (5 queries over 2 tables for 5 checks); at 100TB each round-trip
-is a full scan. Here the suite compiles into a handful of 1-row aggregate
-FACTORS — all expression checks on the same table fuse into ONE aggregate
-over one scan; distinct-shaped and referential-integrity checks carry their
-own factor — and the runner submits every factor's job CONCURRENTLY from a
-small thread pool. N checks over M tables cost ~M scans, and suite wall
-time is max(factor), not sum(factors). (The previous design crossJoined
-the factors into one action with AQE off; measured at sf10 the one-DAG
-form overlapped stages poorly — 2.5 s vs 1.2 s for concurrent jobs —
-because the scheduler walks the join chain's stage dependencies serially
-as each broadcast side materializes.) If a fused table-factor fails at
-runtime (e.g. one ANSI-throwing expression), its checks are retried
-individually so per-check isolation is preserved.
+is a full scan. Here ``plan_suite`` answers each check from the cheapest
+evidence that proves it, and ``run_suite`` executes that plan:
+
+- A table read bare from parquet answers its row counts, null-free
+  not_null checks and in-bounds integral values_between checks from its
+  footers, with no job (``compiler.footer_row``).
+- A table with a ``categorical`` check gets ONE groupBy factor
+  (``compiler.grouped_frame``). It answers the categorical checks, their
+  violation samples and the table's other additive count checks.
+- The table's remaining aggregate checks fuse into one 1-row ``df.agg``
+  factor; distinct-shaped and referential-integrity checks carry their own.
+- Every factor's job is submitted concurrently from one thread pool, and a
+  failing check's leftover violation sample joins the same pool as soon as
+  its factor's row shows the failure, so suite wall time tracks the
+  slowest factor, not the sum. (An earlier design crossJoined the factors
+  into one action with AQE off; at sf10 that overlapped stages poorly —
+  2.5 s vs 1.2 s for concurrent jobs.)
+- If a fused factor fails at runtime (e.g. one ANSI-throwing expression),
+  each of its checks is rerun alone, so per-check isolation holds.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from collections import defaultdict
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from concurrent.futures import ThreadPoolExecutor
-from typing import Iterable, Mapping, Sequence
+from typing import Any, Callable, Iterable, Mapping, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import Footer, footer_of
 from ..session import local_frame
 from .compiler import (
-    SAMPLE_CAP,
+    ADDITIVE_TYPES,
     SAMPLEABLE_TYPES,
     CompiledAggCheck,
     compile_agg_check,
     evaluate_ri,
+    footer_row,
+    grouped_frame,
+    is_categorical,
     ri_frame,
     run_plan_check,
     violation_sample_df,
@@ -53,35 +67,241 @@ def _error_result(check: Check, exc: Exception) -> CheckResult:
     return _result(check, "error", None, None, {}, error=f"{type(exc).__name__}: {exc}")
 
 
-def _attach_samples(
-    tables: Mapping[str, DataFrame],
-    checks: Sequence[Check],
-    results: dict[int, CheckResult],
+@dataclass
+class Member:
+    """One check answered by a factor's 1-row result."""
+
+    index: int
+    check: Check
+    evaluate: Callable[[Mapping[str, Any]], CheckResult]
+    #: the check's own frame, rerun alone when its shared factor fails
+    solo: Callable[[], DataFrame] | None = None
+    #: the factor row's column holding this check's violation sample
+    sample_key: str | None = None
+    #: a separate sample query, run only if the check fails
+    sample: Callable[[], DataFrame] | None = None
+
+
+@dataclass
+class Factor:
+    """One Spark action: a 1-row frame and the checks it answers."""
+
+    name: str
+    frame: DataFrame
+    members: list[Member]
+
+
+@dataclass
+class SuitePlan:
+    """What ``plan_suite`` built, before any action runs: the factors, the
+    results already known (footer-decided checks, compile errors) and the
+    indexes of checks with their own plan shape (``run_plan_check``)."""
+
+    factors: list[Factor] = field(default_factory=list)
+    decided: dict[int, CheckResult] = field(default_factory=dict)
+    own_plan: list[int] = field(default_factory=list)
+
+
+def _solo_frame(df: DataFrame, compiled: CompiledAggCheck) -> DataFrame:
+    if compiled.frame_builder is not None:
+        return compiled.frame_builder(df)
+    if is_categorical(compiled.check):
+        return grouped_frame(df, [compiled])
+    return df.agg(*[c.alias(a) for a, c in compiled.exprs.items()])
+
+
+def _member(i: int, compiled: CompiledAggCheck, df: DataFrame, shared: bool) -> Member:
+    check = compiled.check
+    sampleable = check.check_type in SAMPLEABLE_TYPES and check.column is not None
+    in_row = sampleable and is_categorical(check)
+    return Member(
+        i,
+        check,
+        lambda row: compiled.evaluate(row, compiled.prefix),
+        solo=(lambda: _solo_frame(df, compiled)) if shared else None,
+        sample_key=f"{compiled.prefix}__sample" if in_row else None,
+        sample=(lambda: violation_sample_df(df, check))
+        if sampleable and not in_row
+        else None,
+    )
+
+
+def _add_solo(
+    plan: SuitePlan, table: str, df: DataFrame, i: int, compiled: CompiledAggCheck
 ) -> None:
-    """Enrich FAILED row-condition checks with a capped violating-value
-    sample via a separate limit-k query per failure. Failures are the rare
-    path, so this costs nothing when the suite is green, and the fused scan
-    never carries unbounded collect_set state."""
-    for i, r in results.items():
-        check = checks[i]
-        if (
-            r.status != "fail"
-            or check.check_type not in SAMPLEABLE_TYPES
-            or check.column is None
-            or check.table not in tables
-        ):
-            continue
+    """Give one check its own factor, or its error when that fails analysis."""
+    try:
+        frame = _solo_frame(df, compiled)
+    except Exception as exc:  # noqa: BLE001 — isolation is the contract
+        plan.decided[i] = _error_result(compiled.check, exc)
+        return
+    member = _member(i, compiled, df, shared=False)
+    plan.factors.append(Factor(f"{table}.{compiled.prefix}", frame, [member]))
+
+
+def plan_suite(
+    tables: Mapping[str, DataFrame], checks: Sequence[Check], fuse: bool = True
+) -> SuitePlan:
+    """Lower ``checks`` to factors without running any Spark action.
+
+    ``fuse=True``: footer-decided checks get their results here; per table,
+    one groupBy factor when it has a categorical check, one ``df.agg``
+    factor for the other fusable checks, one factor per distinct-shaped
+    check; one factor per referential-integrity check. ``fuse=False``: one
+    factor per check and no footer decisions — the isolation-debug path
+    and the exact reference for the fused plan."""
+    plan = SuitePlan()
+    by_table: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
+    ri_checks: list[tuple[int, Check]] = []
+    for i, check in enumerate(checks):
         try:
-            vals = [
-                row[0]
-                for row in violation_sample_df(
-                    tables[check.table], check, SAMPLE_CAP
-                ).collect()
-            ]
-            if vals:
-                r.observed["sample"] = str(sorted(vals))
-        except Exception:  # noqa: BLE001 — sample is best-effort decoration
-            pass
+            if check.check_type in AGG_CHECK_TYPES:
+                compiled = compile_agg_check(check, prefix=f"c{i}")
+                if check.table not in tables:
+                    raise KeyError(f"table not loaded: {check.table}")
+                by_table[check.table].append((i, compiled))
+            elif check.check_type == "referential_integrity":
+                ri_checks.append((i, check))
+            else:
+                plan.own_plan.append(i)
+        except Exception as exc:  # noqa: BLE001 — isolation is the contract
+            plan.decided[i] = _error_result(check, exc)
+
+    snapshots: dict[str, Footer | None] = {}
+
+    def snapshot(name: str) -> Footer | None:
+        if name not in snapshots:
+            snapshots[name] = footer_of(tables[name]) if fuse else None
+        return snapshots[name]
+
+    for name, group in by_table.items():
+        df, snap, undecided = tables[name], snapshot(name), []
+        for i, compiled in group:
+            row = None if snap is None else footer_row(compiled, snap)
+            if row is None:
+                undecided.append((i, compiled))
+                continue
+            try:
+                plan.decided[i] = compiled.evaluate(row, compiled.prefix)
+            except Exception as exc:  # noqa: BLE001
+                plan.decided[i] = _error_result(compiled.check, exc)
+        grouped = any(is_categorical(c.check) for _, c in undecided)
+        shared: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
+        for i, compiled in undecided:
+            if fuse and compiled.frame_builder is None:
+                kind = (
+                    "grouped"
+                    if grouped and compiled.check.check_type in ADDITIVE_TYPES
+                    else "agg"
+                )
+                shared[kind].append((i, compiled))
+                continue
+            _add_solo(plan, name, df, i, compiled)
+        for kind, members in shared.items():
+            compiled_members = [c for _, c in members]
+            try:
+                frame = (
+                    grouped_frame(df, compiled_members)
+                    if kind == "grouped"
+                    else df.agg(
+                        *[e.alias(a) for c in compiled_members for a, e in c.exprs.items()]
+                    )
+                )
+            except Exception:  # noqa: BLE001 — one bad expression failed
+                # the factor's analysis: give each check its own frame
+                for i, compiled in members:
+                    _add_solo(plan, name, df, i, compiled)
+                continue
+            plan.factors.append(
+                Factor(
+                    f"{name}.{kind}",
+                    frame,
+                    [_member(i, c, df, shared=len(members) > 1) for i, c in members],
+                )
+            )
+
+    for i, check in ri_checks:
+        try:
+            snap = snapshot(check.table)
+            frame = ri_frame(
+                check, tables, prefix=f"c{i}", child_rows=snap and snap.rows
+            )
+            plan.factors.append(
+                Factor(
+                    f"{check.table}.c{i}",
+                    frame,
+                    [Member(i, check, lambda row, c=check, p=f"c{i}": evaluate_ri(c, row, p))],
+                )
+            )
+        except Exception as exc:  # noqa: BLE001
+            plan.decided[i] = _error_result(check, exc)
+    return plan
+
+
+def _first_row(frame: DataFrame) -> dict:
+    return frame.collect()[0].asDict()
+
+
+def _sample_values(build: Callable[[], DataFrame]) -> list:
+    return [row[0] for row in build().collect()]
+
+
+def _attach_sample(result: CheckResult, values) -> None:
+    if values:
+        result.observed["sample"] = str(sorted(values))
+
+
+def _execute(
+    factors: Sequence[Factor],
+    results: dict[int, CheckResult],
+    sample_violations: bool,
+    workers: int,
+) -> None:
+    """Run every factor in one pool of ``workers`` threads; evaluate each
+    row as it lands. A failing check's sample is read from its row
+    (``Member.sample_key``) or submitted into the same pool at once
+    (``Member.sample``). Pool threads inherit the caller's job group and
+    tags, so the suite's jobs are attributed to its caller."""
+    if not factors:
+        return
+    session = factors[0].frame.sparkSession
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+
+        def submit(fn, arg):
+            return pool.submit(inheritable_thread_target(session)(fn), arg)
+
+        pending = {submit(_first_row, f.frame): f.members for f in factors}
+        samples = {}
+        while pending:
+            done, _ = wait(pending, return_when=FIRST_COMPLETED)
+            for fut in done:
+                members, exc = pending.pop(fut), fut.exception()
+                for m in members:
+                    try:
+                        if exc is None:
+                            row = fut.result()
+                            results[m.index] = r = m.evaluate(row)
+                        elif m.solo is not None:
+                            # a shared factor died at runtime: rerun this
+                            # check alone so one poisoned expression can't
+                            # sink its neighbours
+                            solo = [dataclasses.replace(m, solo=None)]
+                            pending[submit(_first_row, m.solo())] = solo
+                            continue
+                        else:
+                            raise exc
+                    except Exception as err:  # noqa: BLE001
+                        results[m.index] = _error_result(m.check, err)
+                        continue
+                    if r.status != "fail" or not sample_violations:
+                        continue
+                    if m.sample_key is not None:
+                        _attach_sample(r, row.get(m.sample_key))
+                    elif m.sample is not None:
+                        samples[submit(_sample_values, m.sample)] = r
+        for fut, r in samples.items():
+            if fut.exception() is None:  # a sample is best-effort decoration
+                _attach_sample(r, fut.result())
 
 
 def run_suite(
@@ -92,162 +312,23 @@ def run_suite(
 ) -> list[CheckResult]:
     """Run all checks; never raises for an individual check's failure.
 
-    ``fuse=True`` (default): expression checks sharing a table compile into
-    one aggregate factor per table; every factor's job is submitted
-    concurrently, so suite wall time tracks the slowest factor. ``fuse=
-    False`` runs one job per check, serially (the isolation-debug path).
-    """
-    results: dict[int, CheckResult] = {}
-    agg_groups: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
-    ri_checks: list[tuple[int, Check, DataFrame]] = []
-
-    for i, check in enumerate(checks):
+    ``fuse=True`` (default): ``plan_suite``'s fused plan, every factor
+    submitted concurrently. ``fuse=False`` runs one job per check, serially
+    (the isolation-debug path). A failing sampleable check carries
+    ``observed["sample"]``: up to ``SAMPLE_CAP`` distinct violating values,
+    sorted. A categorical check's sample is the smallest ``SAMPLE_CAP``
+    values; any other check's is an arbitrary ``SAMPLE_CAP`` of them when
+    more violate."""
+    plan = plan_suite(tables, checks, fuse=fuse)
+    results = dict(plan.decided)
+    for i in plan.own_plan:
         try:
-            if check.check_type in AGG_CHECK_TYPES:
-                compiled = compile_agg_check(check, prefix=f"c{i}")
-                if check.table not in tables:
-                    raise KeyError(f"table not loaded: {check.table}")
-                agg_groups[check.table].append((i, compiled))
-            elif check.check_type == "referential_integrity":
-                ri_checks.append((i, check, ri_frame(check, tables, prefix=f"c{i}")))
-            else:
-                results[i] = run_plan_check(check, tables)
-        except Exception as exc:  # noqa: BLE001 — isolation is the contract
-            results[i] = _error_result(check, exc)
-
-    # A job = (1-row frame, members). Each member is (index, check, evaluate,
-    # solo_builder): ``evaluate`` turns the collected row into a CheckResult;
-    # ``solo_builder`` (fused expr groups only) rebuilds that check's own
-    # 1-row frame for the isolation retry when a shared factor fails at
-    # runtime (e.g. one ANSI-throwing expression).
-    Member = tuple  # (int, Check, Callable[[dict], CheckResult], Callable | None)
-    jobs: list[tuple[DataFrame, list[Member]]] = []
-
-    def _agg_member(i: int, compiled: CompiledAggCheck, solo) -> Member:
-        return (
-            i,
-            compiled.check,
-            lambda row, c=compiled: c.evaluate(row, c.prefix),
-            solo,
-        )
-
-    for table_name, group in agg_groups.items():
-        df = tables[table_name]
-        # distinct-shaped checks carry their own groupBy factor (see
-        # CompiledAggCheck.frame_builder) — each is its own concurrent job
-        # instead of Expand-ing the shared scan
-        for i, compiled in group:
-            if compiled.frame_builder is None:
-                continue
-            try:
-                jobs.append(
-                    (compiled.frame_builder(df), [_agg_member(i, compiled, None)])
-                )
-            except Exception as exc:  # noqa: BLE001
-                results[i] = _error_result(compiled.check, exc)
-        expr_group = [
-            (i, c) for i, c in group if c.frame_builder is None and i not in results
-        ]
-        if not expr_group:
-            continue
-
-        def solo_frame(compiled: CompiledAggCheck, df: DataFrame = df) -> DataFrame:
-            return df.agg(
-                *[c.alias(a) for a, c in compiled.exprs.items()]
-            )
-
-        if fuse:
-            exprs = [
-                col.alias(alias)
-                for _, compiled in expr_group
-                for alias, col in compiled.exprs.items()
-            ]
-            try:
-                jobs.append(
-                    (
-                        df.agg(*exprs),
-                        [
-                            # bind solo_frame at definition: it is redefined
-                            # per table iteration, and the isolation retry
-                            # runs LATER (after the loop) — a late-bound name
-                            # would aggregate against the last table's frame
-                            _agg_member(i, c, lambda c=c, sf=solo_frame: sf(c))
-                            for i, c in expr_group
-                        ],
-                    )
-                )
-                continue
-            except Exception:
-                pass  # one bad expression failed the group's analysis —
-                # fall through to per-check frames so the good ones run
-        for i, compiled in expr_group:
-            try:
-                jobs.append(
-                    (solo_frame(compiled), [_agg_member(i, compiled, None)])
-                )
-            except Exception as exc:  # noqa: BLE001
-                results[i] = _error_result(compiled.check, exc)
-    for i, check, frame in ri_checks:
-        jobs.append(
-            (
-                frame,
-                [
-                    (
-                        i,
-                        check,
-                        lambda row, c=check, p=f"c{i}": evaluate_ri(c, row, p),
-                        None,
-                    )
-                ],
-            )
-        )
-
-    def finish() -> list[CheckResult]:
-        if sample_violations:
-            _attach_samples(tables, checks, results)
-        return [results[i] for i in sorted(results)]
-
-    if not jobs:
-        return finish()
-
-    def collect_row(frame: DataFrame):
-        try:
-            return frame.collect()[0].asDict()
+            results[i] = run_plan_check(checks[i], tables)
         except Exception as exc:  # noqa: BLE001
-            return exc
-
-    if fuse and len(jobs) > 1:
-        # concurrent submission: the scheduler interleaves the factor jobs
-        # across all cores, so the suite costs max(factor) wall, not
-        # sum(factors). Pool is bounded — each thread holds a py4j
-        # connection and job-submission slot, not executor resources.
-        with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
-            outcomes = list(pool.map(collect_row, (f for f, _ in jobs)))
-    else:
-        outcomes = [collect_row(f) for f, _ in jobs]
-
-    retry: list[Member] = []
-    for (frame, members), outcome in zip(jobs, outcomes):
-        if isinstance(outcome, Exception):
-            for i, check, _evaluate, solo in members:
-                if solo is not None:
-                    retry.append((i, check, _evaluate, solo))
-                else:
-                    results[i] = _error_result(check, outcome)
-            continue
-        for i, check, evaluate, _solo in members:
-            try:
-                results[i] = evaluate(outcome)
-            except Exception as exc:  # noqa: BLE001
-                results[i] = _error_result(check, exc)
-    # isolation retry: a shared table-factor died at runtime; rerun each of
-    # its checks alone so one poisoned expression can't sink its neighbors
-    for i, check, evaluate, solo in retry:
-        try:
-            results[i] = evaluate(solo().collect()[0].asDict())
-        except Exception as exc:  # noqa: BLE001
-            results[i] = _error_result(check, exc)
-    return finish()
+            results[i] = _error_result(checks[i], exc)
+    workers = min(len(plan.factors), 8) if fuse else 1
+    _execute(plan.factors, results, sample_violations, workers)
+    return [results[i] for i in sorted(results)]
 
 
 def suite_report_df(spark: SparkSession, results: Iterable[CheckResult]) -> DataFrame:

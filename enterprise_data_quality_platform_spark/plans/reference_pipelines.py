@@ -43,8 +43,7 @@ def validation_pipeline(
     )
 
     def validate_raw(ctx: Ctx):
-        # only the tables the DAG reads: each one costs a schema-inference
-        # job on a cold session
+        # only the tables the DAG reads
         tables = load_tables(spark, sf_dir, ("orders", "customer", "nation", "region"))
         ctx["tables"] = tables
         results = run_suite(

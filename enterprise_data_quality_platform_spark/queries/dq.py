@@ -772,16 +772,28 @@ LEFT JOIN customer c ON o.o_custkey = c.c_custkey
 """
 
 
+def suite_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The tables ``_SUITE`` checks."""
+    return {
+        name: table(spark, sf_dir, name)
+        for name in ("lineitem", "orders", "nation", "customer")
+    }
+
+
 @register(
     "dq_suite_report",
     oracle=_SUITE_ORACLE,
     tables=("lineitem", "orders", "nation", "customer"),
 )
 def dq_suite_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q6: the check-suite runner end-to-end — 8 declarative checks compiled
-    and executed with scan fusion (3 fused scans + 1 anti-join instead of 8
-    table passes), per-check fault isolation, report rows out. This is the
-    engine's flagship DQ surface (pager-workflow.py:153-245 semantics).
+    """Q6: the check-suite runner end-to-end — 8 declarative checks planned
+    by ``checks.runner.plan_suite``, per-check fault isolation, report rows
+    out. The lineitem row count (and the orders not-null check, when the
+    footers prove no NULLs) comes from parquet footers; one groupBy over
+    orders answers its categorical status and priority checks with their
+    violation samples; lineitem's range check, nation's whitelist, the
+    orders key and the anti-join each run one concurrent factor. This is
+    the engine's flagship DQ surface (pager-workflow.py:153-245 semantics).
 
     100 TB posture: this declared suite keeps the EXACT unique check (a
     per-key shuffle — the suite's cost floor, ~2 of 3.8 s at sf10) because
@@ -790,11 +802,7 @@ def dq_suite_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique_count_between — HLL in the fused scan, no extra shuffle);
     ``dq_suite_report_approx`` is that configuration, declared rows-only
     because sketch estimates are engine-specific."""
-    tables = {
-        name: table(spark, sf_dir, name)
-        for name in ("lineitem", "orders", "nation", "customer")
-    }
-    results = run_suite(tables, _SUITE)
+    results = run_suite(suite_tables(spark, sf_dir), _SUITE)
     rows = [(r.check_name, r.status, r.violations) for r in results]
     return local_frame(spark, rows, "check_name string, status string, violations bigint")
 
@@ -2412,8 +2420,8 @@ def dq_row_condition_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dq_suite_report_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB configuration of ``dq_suite_report``: the unique check
-    runs as an HLL sketch INSIDE the fused orders scan (approx=True), so
-    the suite costs 3 fused scans + 1 anti-join with NO per-key shuffle.
+    runs as an HLL sketch inside the orders expression factor
+    (approx=True), so the suite has no per-key shuffle.
     The sketch can't certify exact uniqueness — its pass rule is
     "estimated duplicate share <= 3*rsd" — which is the right pre-gate at
     scale; the exact suite remains the certification/oracle path."""
@@ -2431,11 +2439,7 @@ def dq_suite_report_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c in _SUITE
     ]
-    tables = {
-        name: table(spark, sf_dir, name)
-        for name in ("lineitem", "orders", "nation", "customer")
-    }
-    results = run_suite(tables, approx_suite)
+    results = run_suite(suite_tables(spark, sf_dir), approx_suite)
     rows = [(r.check_name, r.status, r.violations) for r in results]
     return local_frame(
         spark, rows, "check_name string, status string, violations bigint"

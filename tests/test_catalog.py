@@ -234,3 +234,47 @@ def test_shj_build_fits_size_arithmetic(spark):
         is False
     )
     assert _shj_build_fits(spark, "/nonexistent", "lineitem") is True
+
+
+def test_null_counts_need_every_chunk(tmp_path):
+    """``Footer.nulls`` is exact per flat column: summed over row groups,
+    absent without statistics, never taken from a nested leaf."""
+    tbl = pa.table(
+        {
+            "a": pa.array([1, None, 3, None], pa.int64()),
+            "s": ["x", "y", None, "z"],
+            "v": pa.array([[1.0], None, [None], []], pa.list_(pa.float32())),
+        }
+    )
+    sf = _write(tmp_path, "embeddings", tbl, row_group_size=2)
+    assert footer(sf, "embeddings").nulls == {"a": 2, "s": 1}
+    sf = _write(tmp_path, "embeddings", tbl, write_statistics=False)
+    assert footer(sf, "embeddings").nulls == {}
+
+
+def test_footer_of_only_for_a_bare_read(spark, tmp_path):
+    """A frame read bare from the table maps to its snapshot; an operator on
+    top, a frame not read from files, or a rewrite since the read gives
+    ``None``."""
+    import time
+
+    from enterprise_data_quality_platform_spark.catalog import footer_of, table
+
+    snap = footer_of(table(spark, SF_SMALL, "orders"))
+    want = footer(SF_SMALL, "orders")
+    assert (snap.files, snap.rows, snap.bounds, snap.nulls, snap.schema) == (
+        want.files, want.rows, want.bounds, want.nulls, want.schema,
+    )
+    orders = table(spark, SF_SMALL, "orders")
+    assert footer_of(orders.filter("o_orderkey > 1")) is None
+    assert footer_of(orders.select("o_orderkey")) is None
+    assert footer_of(orders.limit(5)) is None
+    assert footer_of(spark.range(3)) is None
+
+    sf = _write(tmp_path, "lineitem", pa.table({"l_partkey": [1, 2, 3]}))
+    df = table(spark, sf, "lineitem")
+    assert footer_of(df).rows == 3
+    time.sleep(0.01)
+    _write(tmp_path, "lineitem", pa.table({"l_partkey": [7, 8, 9]}))
+    assert footer_of(df) is None  # listed before the rewrite
+    assert footer_of(table(spark, sf, "lineitem")).bounds["l_partkey"] == (7, 9)

@@ -554,3 +554,168 @@ def test_unique_packed_counter_matches_plain_plan(spark):
         .asDict()
     )
     assert srow == {"c1__violations": 1, "c1__total": 3}
+
+
+# ---------------------------------------------------------------------------
+# Suite planning (checks.runner.plan_suite): one groupBy factor per table
+# with a categorical check, footer-decided checks, pooled samples. Every
+# fused answer must equal the fuse=False path, which runs one job per check
+# and never reads footers.
+# ---------------------------------------------------------------------------
+
+
+def _outcome(results):
+    return [
+        (r.check_name, r.status, r.violations, r.total, r.observed, r.error_message)
+        for r in results
+    ]
+
+
+def test_categorical_table_is_one_grouped_factor(spark):
+    """A table's categorical checks (scoped, multi-column), its additive
+    checks and their samples come from ONE groupBy factor; metric checks
+    stay in the expression factor. Counts equal the inline (non-categorical)
+    plan; past SAMPLE_CAP violating values the sample is the smallest 20."""
+    from enterprise_data_quality_platform_spark.checks.compiler import SAMPLE_CAP
+    from enterprise_data_quality_platform_spark.checks.runner import plan_suite
+
+    rows = (
+        [("ok", "gold", 2, 1, 1.0)] * 6
+        + [(f"bad{i:02d}", "gold" if i % 2 else "bronze", 1, 2, None) for i in range(25)]
+        + [(None, "bronze", -1, None, 3.0)] * 2
+    )
+    df = spark.createDataFrame(rows, "k string, seg string, a int, b int, v double")
+
+    def suite(categorical: bool):
+        cat = {"categorical": True} if categorical else {}
+        return [
+            Check("k domain", "values_in_set", "t", column="k",
+                  params={"values": ["ok"], **cat}),
+            Check("gold k shape", "match_regex", "t", column="k",
+                  params={"regex": "^ok$", "row_condition": "seg = 'gold'", **cat}),
+            Check("a over b", "pair_greater_than", "t", columns=("a", "b"), params=cat),
+            Check("v present", "not_null", "t", column="v"),
+            Check("rows", "row_count_between", "t", params={"min": 1}),
+            Check("bronze a", "expression", "t",
+                  params={"condition": "a >= 0", "row_condition": "seg = 'bronze'"}),
+            Check("mean a", "mean_between", "t", column="a", params={"min": 0}),
+        ]
+
+    plan = plan_suite({"t": df}, suite(True))
+    assert [(f.name, len(f.members)) for f in plan.factors] == [
+        ("t.grouped", 6),
+        ("t.agg", 1),
+    ]
+    fused = run_suite({"t": df}, suite(True))
+    assert _outcome(fused) == _outcome(run_suite({"t": df}, suite(True), fuse=False))
+    inline = run_suite({"t": df}, suite(False))
+    strip = lambda rs: [(r.check_name, r.status, r.violations, r.total) for r in rs]  # noqa: E731
+    assert strip(fused) == strip(inline)
+    by_name = {r.check_name: r for r in fused}
+    assert by_name["k domain"].violations == 25
+    assert by_name["k domain"].observed["sample"] == str(
+        [f"bad{i:02d}" for i in range(SAMPLE_CAP)]
+    )
+    assert by_name["gold k shape"].observed["sample"] == str(
+        [f"bad{i:02d}" for i in range(1, 25, 2)]
+    )
+
+
+def test_grouped_factor_failure_retries_each_check_alone(spark):
+    """An ANSI cast that throws at runtime kills the shared groupBy factor;
+    each of its checks is rerun alone, so only the poisoned check errors."""
+    from enterprise_data_quality_platform_spark.checks.runner import plan_suite
+
+    df = spark.createDataFrame(
+        [("O", "1"), ("O", "2"), ("X", "not-a-number")], "status string, s string"
+    )
+    checks = [
+        Check("status domain", "values_in_set", "t", column="status",
+              params={"values": ["O"], "categorical": True}),
+        Check("poison", "expression", "t", params={"condition": "cast(s as int) > 0"}),
+        Check("s present", "not_null", "t", column="s"),
+    ]
+    [factor] = plan_suite({"t": df}, checks).factors
+    assert len(factor.members) == 3
+    by_name = {r.check_name: r for r in run_suite({"t": df}, checks)}
+    assert by_name["poison"].status == "error"
+    assert by_name["s present"].status == "pass"
+    status = by_name["status domain"]
+    assert (status.status, status.violations, status.total) == ("fail", 1, 3)
+    assert status.observed["sample"] == "['X']"
+
+
+_FOOTER_CHECKS = [
+    Check("rows", "row_count_between", "t", params={"min": 1, "max": 10}),
+    Check("k present", "not_null", "t", column="k"),
+    Check("k range", "values_between", "t", column="k", params={"min": 0, "max": 10}),
+    Check("x range", "values_between", "t", column="x", params={"min": 0.0, "max": 1.0}),
+]
+
+
+def _footer_case(spark, tmp_path, case):
+    """(tables, indexes the footers must decide) for one input layout."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from enterprise_data_quality_platform_spark import catalog
+
+    sf = str(tmp_path)
+    path = catalog.table_path(sf, "t")
+    k = [1, 2, 3, 4]
+    x = [0.5, 0.25, 0.75, 1.0]
+    kw = {}
+    decided = {0, 1, 2}
+    if case == "nan":
+        x = [0.5, float("nan"), 0.75, 1.0]
+    if case == "all_null_chunk":
+        k, kw, decided = [None, None, 3, 4], {"row_group_size": 2}, {0, 2}
+    if case == "no_statistics":
+        kw, decided = {"write_statistics": False}, {0}
+    if case == "hive":
+        pq.write_to_dataset(
+            pa.table({"k": k, "x": x, "p": [0, 0, 1, 1]}), path, partition_cols=["p"]
+        )
+        return {"t": catalog.table(spark, sf, "t")}, set()
+    pq.write_table(
+        pa.table({"k": pa.array(k, pa.int64()), "x": x}),
+        path, compression="none", use_dictionary=False, **kw,
+    )
+    df = catalog.table(spark, sf, "t")
+    if case == "filtered":
+        return {"t": df.filter("k > 1")}, set()
+    if case == "projected":
+        return {"t": df.select("k", "x")}, set()
+    if case == "rewritten":
+        time.sleep(0.01)  # a new modification time, same size
+        pq.write_table(
+            pa.table({"k": pa.array([-1, 2, 30, 4], pa.int64()), "x": x}),
+            path, compression="none", use_dictionary=False,
+        )
+        return {"t": df}, set()
+    return {"t": df}, decided
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["clean", "no_statistics", "filtered", "projected", "hive", "nan",
+     "all_null_chunk", "rewritten"],
+)
+def test_footer_decided_checks_equal_the_scan(spark, tmp_path, case):
+    """Footers decide a check only when they prove the scan's answer; every
+    other input falls back to the scan, so results never change."""
+    from enterprise_data_quality_platform_spark.checks.runner import plan_suite
+
+    tables, decided = _footer_case(spark, tmp_path, case)
+    assert set(plan_suite(tables, _FOOTER_CHECKS).decided) == decided
+    fused = run_suite(tables, _FOOTER_CHECKS)
+    assert _outcome(fused) == _outcome(run_suite(tables, _FOOTER_CHECKS, fuse=False))
+    by_name = {r.check_name: r for r in fused}
+    if case == "nan":
+        assert by_name["x range"].status == "fail"  # NaN sorts above 1.0
+    if case == "all_null_chunk":
+        assert by_name["k present"].violations == 2
+    if case == "rewritten":
+        assert by_name["k range"].violations == 2

@@ -48,31 +48,51 @@ def test_topk_avoids_global_sort(spark):
 
 
 def test_suite_fusion_reduces_actions(spark):
-    """The 8-check suite compiles to ONE action (AQE may split it into a
-    few stage-materialization jobs, but far fewer than per-check
-    execution). Regression guard: fused must stay well under unfused."""
-    from enterprise_data_quality_platform_spark.catalog import table
-    from enterprise_data_quality_platform_spark.checks.runner import run_suite
-    from enterprise_data_quality_platform_spark.queries.dq import _SUITE
+    """The 8-check suite plans into 5 concurrent factors (the footers answer
+    the row count and the null-free not-null; one groupBy answers orders'
+    categorical checks) and stays under a pinned job count, counted through
+    the caller's job group, which the runner's pool threads inherit. Its
+    results, violation samples included, equal the fuse=False path (one job
+    per check, no footers)."""
+    from enterprise_data_quality_platform_spark.checks.runner import (
+        plan_suite,
+        run_suite,
+    )
+    from enterprise_data_quality_platform_spark.queries.dq import (
+        _SUITE,
+        suite_tables,
+    )
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    tables = {
-        n: table(spark, SF_SMALL, n)
-        for n in ("lineitem", "orders", "nation", "customer")
-    }
+    tables = suite_tables(spark, SF_SMALL)
 
-    def jobs_for(group: str, fuse: bool) -> int:
+    def in_group(group: str, fn):
         sc.setJobGroup(group, group)
-        run_suite(tables, _SUITE, fuse=fuse)
-        sc.setJobGroup(None, None)
-        return len(tracker.getJobIdsForGroup(group))
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(tracker.getJobIdsForGroup(group))
 
-    fused = jobs_for("suite-fused", True)
-    unfused = jobs_for("suite-unfused", False)
-    # AQE materializes shuffle stages as jobs on both sides; the fused path
-    # still runs one action and strictly fewer jobs (13 vs 21 at writing)
-    assert fused < unfused, f"fused={fused} unfused={unfused}"
+    plan, planned = in_group("suite-plan", lambda: plan_suite(tables, _SUITE))
+    assert planned == 0  # planning runs no action
+    assert sorted(f.name for f in plan.factors) == [
+        "lineitem.agg", "nation.agg", "orders.c5", "orders.c7", "orders.grouped",
+    ]
+    fused, fused_jobs = in_group("suite-fused", lambda: run_suite(tables, _SUITE))
+    unfused, unfused_jobs = in_group(
+        "suite-unfused", lambda: run_suite(tables, _SUITE, fuse=False)
+    )
+    strip = lambda rs: [  # noqa: E731
+        (r.check_name, r.status, r.violations, r.total, r.observed) for r in rs
+    ]
+    assert strip(fused) == strip(unfused)
+    assert sum("sample" in r.observed for r in fused) == 2
+    # 18 at writing: 5 factors + 2 leftover samples (was 30 jobs, of which
+    # the caller's job group saw only the 4 run on its own thread)
+    assert fused_jobs <= 18, fused_jobs
+    assert fused_jobs < unfused_jobs, (fused_jobs, unfused_jobs)
 
 
 def test_no_python_udfs_in_jvm_operators(spark):

@@ -9,11 +9,14 @@ Usage: python tools/dump_plans.py <sf_dir> <out_dir> <suffix> <query> [...]
          events_user_gini dedup_semantic_docs
 Writes <out_dir>/<query>_<suffix>.txt per query.
 
-Queries that ``localCheckpoint`` mid-pipeline truncate their own dumps at
-``Scan ExistingRDD`` (VERDICT r11 item 9), so the interesting subtree is
-invisible. For those, PRE_CHECKPOINT registers extra frames — built by
-the query modules' own builders, stopping BEFORE the checkpoint — dumped
-as <query>__<frame>_<suffix>.txt whenever the query itself is requested.
+Some queries hide their interesting subtree from their own dump. Those that
+``localCheckpoint`` mid-pipeline truncate it at ``Scan ExistingRDD``
+(VERDICT r11 item 9); ``dq_suite_report`` builds its report on the driver,
+so its dump is a bare ``LocalRelation``. For those, EXTRA_FRAMES registers
+the frames that do the work, built by the package's own builders (the
+pre-checkpoint frames; the suite's factor frames from
+``checks.runner.plan_suite``), dumped as <query>__<frame>_<suffix>.txt
+whenever the query itself is requested.
 """
 
 from __future__ import annotations
@@ -25,19 +28,33 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from enterprise_data_quality_platform_spark.catalog import table  # noqa: E402
+from enterprise_data_quality_platform_spark.checks.runner import plan_suite  # noqa: E402
 from enterprise_data_quality_platform_spark.queries.dedup_ops import (  # noqa: E402
     semantic_pairs,
+)
+from enterprise_data_quality_platform_spark.queries.dq import (  # noqa: E402
+    _SUITE,
+    suite_tables,
 )
 from enterprise_data_quality_platform_spark.queries.relational import (  # noqa: E402
     copurchase_superstep,
 )
 
-#: query -> [(frame_label, builder)] extra pre-checkpoint frames to dump.
-PRE_CHECKPOINT = {
-    "dedup_semantic_docs": [
-        ("pairs", lambda spark, sf: semantic_pairs(table(spark, sf, "embeddings"), sf))
+
+def suite_factors(spark, sf_dir):
+    plan = plan_suite(suite_tables(spark, sf_dir), _SUITE)
+    return [(f.name, f.frame) for f in plan.factors]
+
+
+#: query -> builder(spark, sf_dir) -> [(frame_label, frame)] to dump beside it.
+EXTRA_FRAMES = {
+    "dedup_semantic_docs": lambda spark, sf: [
+        ("pairs", semantic_pairs(table(spark, sf, "embeddings"), sf))
     ],
-    "mart_copurchase_pagerank": [("superstep", copurchase_superstep)],
+    "mart_copurchase_pagerank": lambda spark, sf: [
+        ("superstep", copurchase_superstep(spark, sf))
+    ],
+    "dq_suite_report": suite_factors,
 }
 
 
@@ -65,8 +82,8 @@ def main() -> None:
 
     for name in names:
         dump(fns[name](spark, sf_dir), f"{name}_{suffix}.txt")
-        for label, builder in PRE_CHECKPOINT.get(name, ()):
-            dump(builder(spark, sf_dir), f"{name}__{label}_{suffix}.txt")
+        for label, frame in EXTRA_FRAMES.get(name, lambda *_: [])(spark, sf_dir):
+            dump(frame, f"{name}__{label}_{suffix}.txt")
 
 
 if __name__ == "__main__":
