@@ -9,9 +9,13 @@ columns to ONE ``df.agg(...)`` pass; Catalyst executes a single
 whole-stage-codegen scan with partial+final aggregation, and N checks cost
 one read instead of N.
 
-Checks that genuinely need another plan shape (referential integrity = anti
-join, KL divergence = histogram) compile to plan checks with their own
-DataFrame; schema checks never touch data at all.
+Checks that need another plan shape (distinct counts, referential
+integrity = anti join, KL divergence = histogram, z-score = broadcast
+stats, monotonic = window) compile to a builder of their own 1-row frame,
+which the runner runs as one more concurrent factor. Schema checks never
+touch data: ``schema_result`` answers them from the table's schema. No
+function here runs a Spark action; every answer comes from a frame the
+runner executes.
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any, Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Footer
@@ -59,16 +63,22 @@ def _result(
     )
 
 
-def _count_eval(check: Check) -> Callable[[Mapping[str, Any], str], CheckResult]:
-    """Pass rule for violation-count checks under GE ``mostly`` semantics."""
+def _ok_fraction(ok_fraction: float) -> dict[str, Any]:
+    return {"ok_fraction": round(ok_fraction, 6)}
+
+
+def _count_eval(
+    check: Check, observed: Callable[[float], dict[str, Any]] = _ok_fraction
+) -> Callable[[Mapping[str, Any], str], CheckResult]:
+    """Pass rule for violation-count checks under GE ``mostly`` semantics;
+    ``observed`` maps the ok fraction to the result's observed metrics."""
 
     def evaluate(row: Mapping[str, Any], prefix: str) -> CheckResult:
         violations = int(row[f"{prefix}__violations"] or 0)
         total = int(row[f"{prefix}__total"] or 0)
         ok_fraction = 1.0 if total == 0 else 1.0 - violations / total
         status = "pass" if ok_fraction >= check.mostly else "fail"
-        observed: dict[str, Any] = {"ok_fraction": round(ok_fraction, 6)}
-        return _result(check, status, violations, total, observed)
+        return _result(check, status, violations, total, observed(ok_fraction))
 
     return evaluate
 
@@ -295,21 +305,25 @@ class CompiledAggCheck:
     ``exprs`` maps alias -> aggregate Column; aliases are namespaced with the
     check's index prefix so many checks coexist in one ``df.agg``.
 
-    ``frame_builder``, when set, supplies the check's 1-row frame directly
-    (same output aliases) instead of contributing ``exprs`` to the shared
-    scan: distinct-counting checks compile to a groupBy-then-aggregate plan
-    because mixing ``count_distinct`` into a fused aggregate makes Catalyst
-    Expand-duplicate every input row per distinct group — measured ~30%
-    slower than giving the distinct check its own two-level factor (the
-    factors still run concurrently). A categorical check (``is_categorical``)
-    has neither: the table's ``grouped_frame`` answers it.
+    ``frame_builder(df, snap)``, when set, supplies the check's 1-row frame
+    over its table ``df`` (same output aliases) instead of contributing
+    ``exprs`` to the shared scan. ``snap`` is ``df``'s footer snapshot when
+    the plan may use footers, else ``None``; only referential integrity
+    reads it. Distinct-counting checks compile to a groupBy-then-aggregate
+    plan because mixing ``count_distinct`` into a fused aggregate makes
+    Catalyst Expand-duplicate every input row per distinct group — measured
+    ~30% slower than giving the distinct check its own two-level factor (the
+    factors still run concurrently). Joins, histograms, broadcast stats and
+    windows need their own plan shape too. A categorical check
+    (``is_categorical``) has neither: the table's ``grouped_frame`` answers
+    it.
     """
 
     check: Check
     exprs: dict[str, Column]
     evaluate: Callable[[Mapping[str, Any], str], CheckResult]
     prefix: str
-    frame_builder: Callable[[DataFrame], DataFrame] | None = None
+    frame_builder: Callable[[DataFrame, Footer | None], DataFrame] | None = None
 
 
 _ROW_COND_TYPES = frozenset(
@@ -357,15 +371,41 @@ def is_categorical(check: Check) -> bool:
     )
 
 
-def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
-    """Lower one aggregate-shaped check to named agg expressions.
+def _key_counts(df: DataFrame, *keys: Column) -> DataFrame:
+    """One row per distinct key tuple with its row count ``__c``: the first
+    level of every two-level (distinct-shaped or histogram) factor."""
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__c"))
+
+
+def _expected_histogram(
+    df: DataFrame, column: str, expected: Mapping[Any, float]
+) -> tuple[DataFrame, Column]:
+    """The per-value histogram of ``column`` against an expected
+    distribution, fully in-plan: one row per distinct value (as a string,
+    ``__k``) with its count ``__c`` and the broadcast total ``__t``, plus
+    the column giving the row's expected share (NULL outside the expected
+    support) from a literal map."""
+    counts = _key_counts(df, F.col(column).cast("string").alias("__k"))
+    totals = counts.agg(F.sum("__c").alias("__t"))
+    qmap = F.create_map(
+        *[lit for k, v in expected.items() for lit in (F.lit(str(k)), F.lit(float(v)))]
+    )
+    return counts.crossJoin(F.broadcast(totals)), qmap[F.col("__k")]
+
+
+def compile_agg_check(
+    check: Check, prefix: str, tables: Mapping[str, DataFrame] = {}
+) -> CompiledAggCheck:
+    """Lower one data-touching check to named agg expressions or to a
+    builder of its own 1-row frame. ``tables`` (read, never changed)
+    supplies the other table of a two-table check.
 
     Exact ``unique`` on a single byte/short/int/long key compiles to a
     presence-bitmap factor (``operators.packedmap.distinct_presence``),
     which is exact for every such domain; compound and non-integral keys
     use the plain per-key groupBy factor."""
     if check.check_type not in AGG_CHECK_TYPES:
-        raise ValueError(f"{check.check_type} is not an aggregate check")
+        raise ValueError(f"{check.check_type} is not a data check")
     p = check.params
     c = F.col(check.column) if check.column else None
     total = F.count(F.lit(1))
@@ -456,10 +496,8 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
 
             return CompiledAggCheck(check, exprs, ev_approx, prefix)
 
-        def build_unique(df: DataFrame) -> DataFrame:
-            per = df.groupBy(*[F.col(x) for x in cols]).agg(
-                F.count(F.lit(1)).alias("__c")
-            )
+        def build_unique(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            per = _key_counts(df, *[F.col(x) for x in cols])
             return per.agg(
                 F.coalesce(
                     F.sum(F.when(nn_cond, F.col("__c")))
@@ -469,7 +507,9 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
                 F.coalesce(F.sum("__c"), F.lit(0)).alias(f"{prefix}__total"),
             )
 
-        def build_unique_presence(df: DataFrame) -> DataFrame:
+        def build_unique_presence(
+            df: DataFrame, snap: Footer | None = None
+        ) -> DataFrame:
             # the shuffle carries one row per 64 keys; violations =
             # non-null rows − distinct keys, the plain plan's count − distinct
             if len(cols) != 1 or not is_integral(df, cols[0]):
@@ -495,9 +535,8 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
         # count. Sample fetched post-hoc on failure (violation_sample_df).
         values = list(p["values"])
 
-        def build_dis(df: DataFrame) -> DataFrame:
-            key = F.col(check.column)
-            per = df.groupBy(key.alias("__k")).agg(F.count(F.lit(1)).alias("__c"))
+        def build_dis(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            per = _key_counts(df, F.col(check.column).alias("__k"))
             k = F.col("__k")
             return per.agg(
                 F.count(
@@ -520,9 +559,8 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
         values = [str(v) for v in p["values"]]
         want_equal = check.check_type == "distinct_equal_set"
 
-        def build_dset(df: DataFrame) -> DataFrame:
-            key = F.col(check.column).cast("string")
-            per = df.groupBy(key.alias("__k")).agg(F.count(F.lit(1)).alias("__c"))
+        def build_dset(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            per = _key_counts(df, F.col(check.column).cast("string").alias("__k"))
             k = F.col("__k")
             present = F.count(
                 F.when(k.isNotNull() & k.isin(values), F.lit(1))
@@ -554,6 +592,175 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
             check, {}, ev_dset, prefix, frame_builder=build_dset
         )
 
+    if check.check_type == "referential_integrity":
+
+        def build_ri(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            parent = tables[p["parent_table"]]
+            return ri_frame(check, df, parent, prefix, child_rows=snap and snap.rows)
+
+        return CompiledAggCheck(
+            check, {}, _count_eval(check), prefix, frame_builder=build_ri
+        )
+
+    if check.check_type == "kl_divergence_less_than":
+        # G18, fully in-plan: distributed groupBy histogram, expected
+        # distribution as a broadcast literal map, KL sum folded into a
+        # second aggregate. Only ONE scalar row ever reaches the driver —
+        # a high-cardinality column can't ship its histogram here (the
+        # old driver-side form collected the whole groupBy).
+        expected: Mapping[Any, float] = p["expected_distribution"]
+
+        def build_kl(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            hist, qcol = _expected_histogram(df, check.column, expected)
+            pcol = F.col("__c") / F.col("__t")
+            return hist.agg(
+                F.sum(
+                    F.when(qcol.isNotNull() & (qcol > 0), pcol * F.log(pcol / qcol))
+                ).alias(f"{prefix}__kl"),
+                F.first("__t").alias(f"{prefix}__total"),
+            )
+
+        def ev_kl(row: Mapping[str, Any], pfx: str) -> CheckResult:
+            kl = float(row[f"{pfx}__kl"] or 0.0)
+            total = int(row[f"{pfx}__total"] or 0)
+            ok = kl <= float(p["threshold"])
+            return _result(
+                check, "pass" if ok else "fail", None, total,
+                {"kl_divergence": round(kl, 6)},
+            )
+
+        return CompiledAggCheck(check, {}, ev_kl, prefix, frame_builder=build_kl)
+
+    if check.check_type == "chi_square_test":
+        # Pearson goodness-of-fit against params['expected_distribution']
+        # (category -> probability), compared to params['critical_value']
+        # (the chi2 quantile for the caller's alpha/dof — kept a parameter
+        # so no stats library is needed). Same in-plan shape as KL:
+        # distributed histogram, broadcast expected map, one scalar out.
+        # Categories outside the expected support fail the test outright
+        # (their expected count is 0 → infinite statistic).
+        expected = p["expected_distribution"]
+        critical = float(p["critical_value"])
+
+        def build_chi(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            hist, qcol = _expected_histogram(df, check.column, expected)
+            n, exp_n = F.col("__c"), qcol * F.col("__t")
+            return hist.agg(
+                F.sum(
+                    F.when(qcol.isNotNull() & (qcol > 0), (n - exp_n) * (n - exp_n) / exp_n)
+                ).alias(f"{prefix}__stat"),
+                F.sum(
+                    F.when(F.col("__k").isNotNull() & (qcol.isNull() | (qcol == 0)), n)
+                ).alias(f"{prefix}__unexpected"),
+                F.sum(F.when(qcol.isNotNull(), qcol)).alias(f"{prefix}__qpresent"),
+                F.first("__t").alias(f"{prefix}__total"),
+            )
+
+        def ev_chi(row: Mapping[str, Any], pfx: str) -> CheckResult:
+            stat = float(row[f"{pfx}__stat"] or 0.0)
+            unexpected = int(row[f"{pfx}__unexpected"] or 0)
+            total = int(row[f"{pfx}__total"] or 0)
+            # expected-but-absent categories each contribute (0-E)^2/E = E =
+            # q_k * total; their total q-mass is (sum q) - (q-mass observed)
+            q_absent = sum(float(v) for v in expected.values()) - float(
+                row[f"{pfx}__qpresent"] or 0.0
+            )
+            if q_absent > 1e-12:
+                stat += total * q_absent
+            ok = unexpected == 0 and stat <= critical
+            return _result(
+                check,
+                "pass" if ok else "fail",
+                unexpected or None,
+                total,
+                {
+                    "chi_square": round(stat, 6),
+                    "critical_value": critical,
+                    "unexpected_category_rows": unexpected,
+                },
+            )
+
+        return CompiledAggCheck(check, {}, ev_chi, prefix, frame_builder=build_chi)
+
+    if check.check_type == "row_count_equal_other_table":
+        # two metadata-cheap counts in one job (crossJoin of 1-row aggs);
+        # optional params['ratio'] asserts count/other == ratio instead of
+        # strict equality (the dbt-ish cardinality test)
+        def build_rows(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            other = tables[p["other_table"]]
+            return df.agg(F.count(F.lit(1)).alias(f"{prefix}__count")).crossJoin(
+                other.agg(F.count(F.lit(1)).alias(f"{prefix}__other_count"))
+            )
+
+        def ev_rows(row: Mapping[str, Any], pfx: str) -> CheckResult:
+            n, m = int(row[f"{pfx}__count"]), int(row[f"{pfx}__other_count"])
+            if "ratio" in p:
+                ok = m > 0 and abs(n / m - float(p["ratio"])) <= float(
+                    p.get("tolerance", 0.0)
+                )
+            else:
+                ok = n == m
+            return _result(
+                check,
+                "pass" if ok else "fail",
+                None,
+                n,
+                {"row_count": n, "other_row_count": m, "other_table": p["other_table"]},
+            )
+
+        return CompiledAggCheck(check, {}, ev_rows, prefix, frame_builder=build_rows)
+
+    if check.check_type == "z_score_less_than":
+        # two-pass: 1-row mu/sigma aggregate broadcast back onto the scan
+        # (NEVER an unpartitioned window over raw rows), then count |z| >
+        # threshold — the check-type twin of the dq_anomaly_zscore query.
+        thr = float(p["threshold"])
+
+        def build_z(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            stats = df.agg(F.avg(c).alias("__mu"), F.stddev(c).alias("__sigma"))
+            z = F.abs(c - F.col("__mu")) / F.col("__sigma")
+            return df.crossJoin(F.broadcast(stats)).agg(
+                total.alias(f"{prefix}__total"),
+                F.sum(F.when(z > thr, 1).otherwise(0)).alias(f"{prefix}__violations"),
+            )
+
+        ev = _count_eval(check, lambda _: {"threshold": thr})
+        return CompiledAggCheck(check, {}, ev, prefix, frame_builder=build_z)
+
+    if check.check_type == "monotonic":
+        # increasing/decreasing along params['order_by'], per
+        # params['partition_by'] key. A partition key keeps the window
+        # distributed; without one this is a single-partition global sort —
+        # allowed (GE's semantics are inherently ordered) but flagged in
+        # the observed metrics so a 100TB user sees the hazard.
+        order_by = p["order_by"]
+        part = p.get("partition_by")
+        strictly = bool(p.get("strictly", False))
+        decreasing = bool(p.get("decreasing", False))
+
+        def build_mono(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            w = (Window.partitionBy(part) if part else Window.partitionBy()).orderBy(
+                order_by
+            )
+            prev = F.lag(c).over(w)
+            if decreasing:
+                bad = (c >= prev) if strictly else (c > prev)
+            else:
+                bad = (c <= prev) if strictly else (c < prev)
+            cond = prev.isNotNull() & c.isNotNull() & bad
+            return df.select(F.when(cond, 1).otherwise(0).alias("__v")).agg(
+                total.alias(f"{prefix}__total"),
+                F.sum("__v").alias(f"{prefix}__violations"),
+            )
+
+        observed = {
+            "order_by": order_by,
+            "partitioned": bool(part),
+            "direction": "decreasing" if decreasing else "increasing",
+        }
+        ev = _count_eval(check, lambda _: observed)
+        return CompiledAggCheck(check, {}, ev, prefix, frame_builder=build_mono)
+
     metric_map: dict[str, tuple[str, Column]] = {
         "mean_between": ("mean", F.avg(c)),
         "stddev_between": ("stddev", F.stddev(c)),
@@ -576,10 +783,8 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
                 check, exprs, _metric_eval(check, ("unique_count",)), prefix
             )
 
-        def build_ucount(df: DataFrame) -> DataFrame:
-            per = df.groupBy(F.col(check.column).alias("__k")).agg(
-                F.count(F.lit(1)).alias("__c")
-            )
+        def build_ucount(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            per = _key_counts(df, F.col(check.column).alias("__k"))
             return per.agg(
                 F.count(F.when(F.col("__k").isNotNull(), F.lit(1))).alias(
                     f"{prefix}__unique_count"
@@ -597,10 +802,8 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
 
     if check.check_type == "unique_proportion_between":
 
-        def build_uprop(df: DataFrame) -> DataFrame:
-            per = df.groupBy(F.col(check.column).alias("__k")).agg(
-                F.count(F.lit(1)).alias("__c")
-            )
+        def build_uprop(df: DataFrame, snap: Footer | None = None) -> DataFrame:
+            per = _key_counts(df, F.col(check.column).alias("__k"))
             k = F.col("__k")
             return per.agg(
                 (
@@ -800,28 +1003,22 @@ def violation_sample_df(df: DataFrame, check: Check, cap: int = SAMPLE_CAP) -> D
     )
 
 
-# ---------------------------------------------------------------------------
-# Plan checks — need a different plan shape or no scan at all.
-# ---------------------------------------------------------------------------
-
-
 def ri_frame(
     check: Check,
-    tables: Mapping[str, DataFrame],
+    df: DataFrame,
+    parent: DataFrame,
     prefix: str,
     child_rows: int | None = None,
 ) -> DataFrame:
-    """Referential integrity as a 1-row frame (orphan count + child total),
-    one factor of the suite. ``child_rows``, when given, is the child's
-    exact row count from its footers (``catalog.footer_of``) and replaces
-    the count side of the plan. Orphans =
+    """Referential integrity of the child ``df`` against ``parent`` as a
+    1-row frame (orphan count + child total). ``child_rows``, when given, is
+    the child's exact row count from its footers (``catalog.footer_of``) and
+    replaces the count side of the plan. Orphans =
     LEFT ANTI join against the distinct parent key set (SURVEY.md §2.2 G19)
     — anti-join, not NOT IN, so NULL parent keys can't poison the predicate.
     At scale the anti-join shuffles on the key unless the parent is
     dimension-sized (broadcast hint via params['broadcast_parent'])."""
     p = check.params
-    df = tables[check.table]
-    parent = tables[p["parent_table"]]
     child_key, parent_key = check.column, p["parent_column"]
     parent_keys = parent.select(F.col(parent_key).alias(child_key)).dropDuplicates()
     if p.get("broadcast_parent", False):
@@ -845,21 +1042,9 @@ def ri_frame(
     return orphan_count.crossJoin(total)
 
 
-def evaluate_ri(check: Check, row: Mapping[str, Any], prefix: str) -> CheckResult:
-    violations = int(row[f"{prefix}__violations"] or 0)
-    total = int(row[f"{prefix}__total"] or 0)
-    ok_fraction = 1.0 if total == 0 else 1.0 - violations / total
-    status = "pass" if ok_fraction >= check.mostly else "fail"
-    return _result(
-        check, status, violations, total, {"ok_fraction": round(ok_fraction, 6)}
-    )
-
-
-def run_plan_check(
-    check: Check, tables: Mapping[str, DataFrame]
-) -> CheckResult:
-    """Execute a non-fusable check against loaded tables."""
-    df = tables[check.table]
+def schema_result(check: Check, df: DataFrame) -> CheckResult:
+    """Answer a schema check (``SCHEMA_CHECK_TYPES``) from ``df.columns`` /
+    ``df.schema`` alone, with no job."""
     p = check.params
     t = check.check_type
 
@@ -881,143 +1066,6 @@ def run_plan_check(
         ok = actual.lower() in allowed
         return _result(check, "pass" if ok else "fail", None, None, {"type": actual})
 
-    if t == "referential_integrity":
-        row = ri_frame(check, tables, prefix="ri").collect()[0].asDict()
-        return evaluate_ri(check, row, prefix="ri")
-
-    if t == "kl_divergence_less_than":
-        # G18, fully in-plan: distributed groupBy histogram, expected
-        # distribution as a broadcast literal map, KL sum folded into a
-        # second aggregate. Only ONE scalar row ever reaches the driver —
-        # a high-cardinality column can't ship its histogram here (the
-        # old driver-side form collected the whole groupBy).
-        expected: Mapping[Any, float] = p["expected_distribution"]
-        counts = df.groupBy(
-            F.col(check.column).cast("string").alias("__k")
-        ).agg(F.count(F.lit(1)).alias("__n"))
-        totals = counts.agg(F.sum("__n").alias("__t"))
-        qmap = F.create_map(
-            *[
-                lit
-                for k, v in expected.items()
-                for lit in (F.lit(str(k)), F.lit(float(v)))
-            ]
-        )
-        pcol = F.col("__n") / F.col("__t")
-        qcol = qmap[F.col("__k")]
-        row = (
-            counts.crossJoin(F.broadcast(totals))
-            .agg(
-                F.sum(
-                    F.when(
-                        qcol.isNotNull() & (qcol > 0), pcol * F.log(pcol / qcol)
-                    )
-                ).alias("__kl"),
-                F.first("__t").alias("__total"),
-            )
-            .collect()[0]
-        )
-        kl = float(row["__kl"] or 0.0)
-        total = int(row["__total"] or 0)
-        ok = kl <= float(p["threshold"])
-        return _result(
-            check, "pass" if ok else "fail", None, total, {"kl_divergence": round(kl, 6)}
-        )
-
-    if t == "row_count_equal_other_table":
-        # two metadata-cheap counts in one job (crossJoin of 1-row aggs);
-        # optional params['ratio'] asserts count/other == ratio instead of
-        # strict equality (the dbt-ish cardinality test)
-        other = tables[p["other_table"]]
-        row = (
-            df.agg(F.count(F.lit(1)).alias("__n"))
-            .crossJoin(other.agg(F.count(F.lit(1)).alias("__m")))
-            .collect()[0]
-        )
-        n, m = int(row["__n"]), int(row["__m"])
-        if "ratio" in p:
-            ok = m > 0 and abs(n / m - float(p["ratio"])) <= float(
-                p.get("tolerance", 0.0)
-            )
-        else:
-            ok = n == m
-        return _result(
-            check,
-            "pass" if ok else "fail",
-            None,
-            n,
-            {"row_count": n, "other_row_count": m, "other_table": p["other_table"]},
-        )
-
-    if t == "z_score_less_than":
-        # two-pass: 1-row mu/sigma aggregate broadcast back onto the scan
-        # (NEVER an unpartitioned window over raw rows), then count |z| >
-        # threshold — the check-type twin of the dq_anomaly_zscore query.
-        thr = float(p["threshold"])
-        col_ = F.col(check.column)
-        stats = df.agg(
-            F.avg(col_).alias("__mu"), F.stddev(col_).alias("__sigma")
-        )
-        z = F.abs(col_ - F.col("__mu")) / F.col("__sigma")
-        row = (
-            df.crossJoin(F.broadcast(stats))
-            .agg(
-                F.count(F.lit(1)).alias("__total"),
-                F.sum(F.when(z > thr, 1).otherwise(0)).alias("__viol"),
-            )
-            .collect()[0]
-        )
-        violations = int(row["__viol"] or 0)
-        total = int(row["__total"] or 0)
-        ok_fraction = 1.0 if total == 0 else 1.0 - violations / total
-        status = "pass" if ok_fraction >= check.mostly else "fail"
-        return _result(
-            check, status, violations, total, {"threshold": thr}
-        )
-
-    if t == "monotonic":
-        # increasing/decreasing along params['order_by'], per
-        # params['partition_by'] key. A partition key keeps the window
-        # distributed; without one this is a single-partition global sort —
-        # allowed (GE's semantics are inherently ordered) but flagged in
-        # the observed metrics so a 100TB user sees the hazard.
-        from pyspark.sql import Window
-
-        order_by = p["order_by"]
-        part = p.get("partition_by")
-        strictly = bool(p.get("strictly", False))
-        decreasing = bool(p.get("decreasing", False))
-        w = (
-            Window.partitionBy(part) if part else Window.partitionBy()
-        ).orderBy(order_by)
-        col_ = F.col(check.column)
-        prev = F.lag(col_).over(w)
-        if decreasing:
-            bad = (col_ >= prev) if strictly else (col_ > prev)
-        else:
-            bad = (col_ <= prev) if strictly else (col_ < prev)
-        cond = prev.isNotNull() & col_.isNotNull() & bad
-        row = (
-            df.select(F.when(cond, 1).otherwise(0).alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__total"), F.sum("__v").alias("__viol"))
-            .collect()[0]
-        )
-        violations = int(row["__viol"] or 0)
-        total = int(row["__total"] or 0)
-        ok_fraction = 1.0 if total == 0 else 1.0 - violations / total
-        status = "pass" if ok_fraction >= check.mostly else "fail"
-        return _result(
-            check,
-            status,
-            violations,
-            total,
-            {
-                "order_by": order_by,
-                "partitioned": bool(part),
-                "direction": "decreasing" if decreasing else "increasing",
-            },
-        )
-
     if t == "column_count_between":
         n = len(df.columns)
         lo, hi = p.get("min"), p.get("max")
@@ -1026,71 +1074,4 @@ def run_plan_check(
             check, "pass" if ok else "fail", None, None, {"column_count": n}
         )
 
-    if t == "chi_square_test":
-        # Pearson goodness-of-fit against params['expected_distribution']
-        # (category -> probability), compared to params['critical_value']
-        # (the chi2 quantile for the caller's alpha/dof — kept a parameter
-        # so no stats library is needed). Same in-plan shape as KL:
-        # distributed histogram, broadcast expected map, one scalar out.
-        # Categories outside the expected support fail the test outright
-        # (their expected count is 0 → infinite statistic).
-        expected: Mapping[Any, float] = p["expected_distribution"]
-        critical = float(p["critical_value"])
-        counts = df.groupBy(
-            F.col(check.column).cast("string").alias("__k")
-        ).agg(F.count(F.lit(1)).alias("__n"))
-        totals = counts.agg(F.sum("__n").alias("__t"))
-        qmap = F.create_map(
-            *[
-                lit
-                for k, v in expected.items()
-                for lit in (F.lit(str(k)), F.lit(float(v)))
-            ]
-        )
-        qcol = qmap[F.col("__k")]
-        exp_n = qcol * F.col("__t")
-        row = (
-            counts.crossJoin(F.broadcast(totals))
-            .agg(
-                F.sum(
-                    F.when(
-                        qcol.isNotNull() & (qcol > 0),
-                        (F.col("__n") - exp_n) * (F.col("__n") - exp_n) / exp_n,
-                    )
-                ).alias("__stat"),
-                F.sum(
-                    F.when(
-                        F.col("__k").isNotNull()
-                        & (qcol.isNull() | (qcol == 0)),
-                        F.col("__n"),
-                    )
-                ).alias("__unexpected"),
-                F.sum(F.when(qcol.isNotNull(), qcol)).alias("__qpresent"),
-                F.first("__t").alias("__total"),
-            )
-            .collect()[0]
-        )
-        stat = float(row["__stat"] or 0.0)
-        unexpected = int(row["__unexpected"] or 0)
-        total = int(row["__total"] or 0)
-        # expected-but-absent categories each contribute (0-E)^2/E = E =
-        # q_k * total; their total q-mass is (sum q) - (q-mass observed)
-        q_absent = sum(float(v) for v in expected.values()) - float(
-            row["__qpresent"] or 0.0
-        )
-        if q_absent > 1e-12:
-            stat += total * q_absent
-        ok = unexpected == 0 and stat <= critical
-        return _result(
-            check,
-            "pass" if ok else "fail",
-            unexpected or None,
-            total,
-            {
-                "chi_square": round(stat, 6),
-                "critical_value": critical,
-                "unexpected_category_rows": unexpected,
-            },
-        )
-
-    raise ValueError(f"unhandled plan check type: {t}")
+    raise ValueError(f"{t} is not a schema check")

@@ -22,8 +22,9 @@ from typing import Any
 
 from pyspark.sql import types as T
 
-#: Check types compiled to fused aggregate expressions (one shared scan per
-#: table — SURVEY.md §4.2 "multi-check scan sharing").
+#: Check types answered from data: ``compiler.compile_agg_check`` lowers each
+#: to aggregate expressions fused into one shared scan per table (SURVEY.md
+#: §4.2 "multi-check scan sharing") or to its own 1-row frame.
 AGG_CHECK_TYPES = frozenset(
     {
         "row_count_between",  # G2; pass iff lo <= count <= hi
@@ -62,26 +63,27 @@ AGG_CHECK_TYPES = frozenset(
         "json_parseable",  # GE expect_column_values_to_be_json_parseable
         "distinct_contain_set",  # GE expect_column_distinct_values_to_contain_set
         "distinct_equal_set",  # GE expect_column_distinct_values_to_equal_set
-    }
-)
-
-#: Check types that need their own plan (join, histogram) or no scan (schema).
-PLAN_CHECK_TYPES = frozenset(
-    {
         "referential_integrity",  # G19 — left-anti join against parent table
-        "column_exists",  # G1
-        "columns_match_list",  # G1
-        "column_of_type",  # G17
         "kl_divergence_less_than",  # G18 — in-plan histogram + broadcast map
         "row_count_equal_other_table",  # GE expect_table_row_count_to_equal_other_table
         "z_score_less_than",  # GE expect_column_value_z_scores_to_be_less_than
         "monotonic",  # GE expect_column_values_to_be_increasing/decreasing
-        "column_count_between",  # GE expect_table_column_count_to_be_between
         "chi_square_test",  # GE expect_column_chisquare_test_p_value... (statistic form)
     }
 )
 
-CHECK_TYPES = AGG_CHECK_TYPES | PLAN_CHECK_TYPES
+#: Check types answered from the table's schema alone, at plan time, with no
+#: job (``compiler.schema_result``).
+SCHEMA_CHECK_TYPES = frozenset(
+    {
+        "column_exists",  # G1
+        "columns_match_list",  # G1
+        "column_of_type",  # G17
+        "column_count_between",  # GE expect_table_column_count_to_be_between
+    }
+)
+
+CHECK_TYPES = AGG_CHECK_TYPES | SCHEMA_CHECK_TYPES
 
 
 @dataclass(frozen=True)

@@ -21,7 +21,11 @@ evidence that proves it, and ``run_suite`` executes that plan:
   (``compiler.grouped_frame``). It answers the categorical checks, their
   violation samples and the table's other additive count checks.
 - The table's remaining aggregate checks fuse into one 1-row ``df.agg``
-  factor; distinct-shaped and referential-integrity checks carry their own.
+  factor; every check with its own plan shape (distinct counts,
+  referential integrity, histograms, z-scores, monotonic windows) carries
+  its own factor.
+- Schema checks are answered from the table's schema, with no job
+  (``compiler.schema_result``).
 - Every factor's job is submitted concurrently from one thread pool, and a
   failing check's leftover violation sample joins the same pool as soon as
   its factor's row shows the failure, so suite wall time tracks the
@@ -51,16 +55,14 @@ from .compiler import (
     SAMPLEABLE_TYPES,
     CompiledAggCheck,
     compile_agg_check,
-    evaluate_ri,
     footer_row,
     grouped_frame,
     is_categorical,
-    ri_frame,
-    run_plan_check,
+    schema_result,
     violation_sample_df,
     _result,
 )
-from .definitions import AGG_CHECK_TYPES, Check, CheckResult, REPORT_SCHEMA
+from .definitions import SCHEMA_CHECK_TYPES, Check, CheckResult, REPORT_SCHEMA
 
 
 def _error_result(check: Check, exc: Exception) -> CheckResult:
@@ -93,24 +95,27 @@ class Factor:
 
 @dataclass
 class SuitePlan:
-    """What ``plan_suite`` built, before any action runs: the factors, the
-    results already known (footer-decided checks, compile errors) and the
-    indexes of checks with their own plan shape (``run_plan_check``)."""
+    """What ``plan_suite`` built, before any action runs: the factors and
+    the results already known (schema checks, footer-decided checks,
+    compile and analysis errors). Every check is in exactly one of them."""
 
     factors: list[Factor] = field(default_factory=list)
     decided: dict[int, CheckResult] = field(default_factory=dict)
-    own_plan: list[int] = field(default_factory=list)
 
 
-def _solo_frame(df: DataFrame, compiled: CompiledAggCheck) -> DataFrame:
+def _solo_frame(
+    df: DataFrame, snap: Footer | None, compiled: CompiledAggCheck
+) -> DataFrame:
     if compiled.frame_builder is not None:
-        return compiled.frame_builder(df)
+        return compiled.frame_builder(df, snap)
     if is_categorical(compiled.check):
         return grouped_frame(df, [compiled])
     return df.agg(*[c.alias(a) for a, c in compiled.exprs.items()])
 
 
-def _member(i: int, compiled: CompiledAggCheck, df: DataFrame, shared: bool) -> Member:
+def _member(
+    i: int, compiled: CompiledAggCheck, df: DataFrame, snap: Footer | None, shared: bool
+) -> Member:
     check = compiled.check
     sampleable = check.check_type in SAMPLEABLE_TYPES and check.column is not None
     in_row = sampleable and is_categorical(check)
@@ -118,7 +123,7 @@ def _member(i: int, compiled: CompiledAggCheck, df: DataFrame, shared: bool) -> 
         i,
         check,
         lambda row: compiled.evaluate(row, compiled.prefix),
-        solo=(lambda: _solo_frame(df, compiled)) if shared else None,
+        solo=(lambda: _solo_frame(df, snap, compiled)) if shared else None,
         sample_key=f"{compiled.prefix}__sample" if in_row else None,
         sample=(lambda: violation_sample_df(df, check))
         if sampleable and not in_row
@@ -127,15 +132,20 @@ def _member(i: int, compiled: CompiledAggCheck, df: DataFrame, shared: bool) -> 
 
 
 def _add_solo(
-    plan: SuitePlan, table: str, df: DataFrame, i: int, compiled: CompiledAggCheck
+    plan: SuitePlan,
+    table: str,
+    df: DataFrame,
+    snap: Footer | None,
+    i: int,
+    compiled: CompiledAggCheck,
 ) -> None:
     """Give one check its own factor, or its error when that fails analysis."""
     try:
-        frame = _solo_frame(df, compiled)
+        frame = _solo_frame(df, snap, compiled)
     except Exception as exc:  # noqa: BLE001 — isolation is the contract
         plan.decided[i] = _error_result(compiled.check, exc)
         return
-    member = _member(i, compiled, df, shared=False)
+    member = _member(i, compiled, df, snap, shared=False)
     plan.factors.append(Factor(f"{table}.{compiled.prefix}", frame, [member]))
 
 
@@ -144,38 +154,29 @@ def plan_suite(
 ) -> SuitePlan:
     """Lower ``checks`` to factors without running any Spark action.
 
-    ``fuse=True``: footer-decided checks get their results here; per table,
-    one groupBy factor when it has a categorical check, one ``df.agg``
-    factor for the other fusable checks, one factor per distinct-shaped
-    check; one factor per referential-integrity check. ``fuse=False``: one
-    factor per check and no footer decisions — the isolation-debug path
-    and the exact reference for the fused plan."""
+    Both modes answer schema checks here. ``fuse=True``: footer-decided
+    checks get their results here too; per table, one groupBy factor when
+    it has a categorical check, one ``df.agg`` factor for the other fusable
+    checks, and one factor per check with its own frame (``frame_builder``).
+    ``fuse=False``: one factor per data check and no footer decisions — the
+    isolation-debug path and the exact reference for the fused plan."""
     plan = SuitePlan()
     by_table: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
-    ri_checks: list[tuple[int, Check]] = []
     for i, check in enumerate(checks):
         try:
-            if check.check_type in AGG_CHECK_TYPES:
-                compiled = compile_agg_check(check, prefix=f"c{i}")
-                if check.table not in tables:
-                    raise KeyError(f"table not loaded: {check.table}")
-                by_table[check.table].append((i, compiled))
-            elif check.check_type == "referential_integrity":
-                ri_checks.append((i, check))
-            else:
-                plan.own_plan.append(i)
+            if check.check_type in SCHEMA_CHECK_TYPES:
+                plan.decided[i] = schema_result(check, tables[check.table])
+                continue
+            compiled = compile_agg_check(check, prefix=f"c{i}", tables=tables)
+            if check.table not in tables:
+                raise KeyError(f"table not loaded: {check.table}")
+            by_table[check.table].append((i, compiled))
         except Exception as exc:  # noqa: BLE001 — isolation is the contract
             plan.decided[i] = _error_result(check, exc)
 
-    snapshots: dict[str, Footer | None] = {}
-
-    def snapshot(name: str) -> Footer | None:
-        if name not in snapshots:
-            snapshots[name] = footer_of(tables[name]) if fuse else None
-        return snapshots[name]
-
     for name, group in by_table.items():
-        df, snap, undecided = tables[name], snapshot(name), []
+        df, undecided = tables[name], []
+        snap = footer_of(df) if fuse else None
         for i, compiled in group:
             row = None if snap is None else footer_row(compiled, snap)
             if row is None:
@@ -196,7 +197,7 @@ def plan_suite(
                 )
                 shared[kind].append((i, compiled))
                 continue
-            _add_solo(plan, name, df, i, compiled)
+            _add_solo(plan, name, df, snap, i, compiled)
         for kind, members in shared.items():
             compiled_members = [c for _, c in members]
             try:
@@ -210,31 +211,15 @@ def plan_suite(
             except Exception:  # noqa: BLE001 — one bad expression failed
                 # the factor's analysis: give each check its own frame
                 for i, compiled in members:
-                    _add_solo(plan, name, df, i, compiled)
+                    _add_solo(plan, name, df, snap, i, compiled)
                 continue
             plan.factors.append(
                 Factor(
                     f"{name}.{kind}",
                     frame,
-                    [_member(i, c, df, shared=len(members) > 1) for i, c in members],
+                    [_member(i, c, df, snap, len(members) > 1) for i, c in members],
                 )
             )
-
-    for i, check in ri_checks:
-        try:
-            snap = snapshot(check.table)
-            frame = ri_frame(
-                check, tables, prefix=f"c{i}", child_rows=snap and snap.rows
-            )
-            plan.factors.append(
-                Factor(
-                    f"{check.table}.c{i}",
-                    frame,
-                    [Member(i, check, lambda row, c=check, p=f"c{i}": evaluate_ri(c, row, p))],
-                )
-            )
-        except Exception as exc:  # noqa: BLE001
-            plan.decided[i] = _error_result(check, exc)
     return plan
 
 
@@ -252,10 +237,7 @@ def _attach_sample(result: CheckResult, values) -> None:
 
 
 def _execute(
-    factors: Sequence[Factor],
-    results: dict[int, CheckResult],
-    sample_violations: bool,
-    workers: int,
+    factors: Sequence[Factor], results: dict[int, CheckResult], workers: int
 ) -> None:
     """Run every factor in one pool of ``workers`` threads; evaluate each
     row as it lands. A failing check's sample is read from its row
@@ -293,7 +275,7 @@ def _execute(
                     except Exception as err:  # noqa: BLE001
                         results[m.index] = _error_result(m.check, err)
                         continue
-                    if r.status != "fail" or not sample_violations:
+                    if r.status != "fail":
                         continue
                     if m.sample_key is not None:
                         _attach_sample(r, row.get(m.sample_key))
@@ -308,26 +290,20 @@ def run_suite(
     tables: Mapping[str, DataFrame],
     checks: Sequence[Check],
     fuse: bool = True,
-    sample_violations: bool = True,
 ) -> list[CheckResult]:
     """Run all checks; never raises for an individual check's failure.
 
     ``fuse=True`` (default): ``plan_suite``'s fused plan, every factor
-    submitted concurrently. ``fuse=False`` runs one job per check, serially
-    (the isolation-debug path). A failing sampleable check carries
+    submitted concurrently. ``fuse=False`` runs one factor per data check,
+    serially (the isolation-debug path). A failing sampleable check carries
     ``observed["sample"]``: up to ``SAMPLE_CAP`` distinct violating values,
     sorted. A categorical check's sample is the smallest ``SAMPLE_CAP``
     values; any other check's is an arbitrary ``SAMPLE_CAP`` of them when
     more violate."""
     plan = plan_suite(tables, checks, fuse=fuse)
     results = dict(plan.decided)
-    for i in plan.own_plan:
-        try:
-            results[i] = run_plan_check(checks[i], tables)
-        except Exception as exc:  # noqa: BLE001
-            results[i] = _error_result(checks[i], exc)
     workers = min(len(plan.factors), 8) if fuse else 1
-    _execute(plan.factors, results, sample_violations, workers)
+    _execute(plan.factors, results, workers)
     return [results[i] for i in sorted(results)]
 
 

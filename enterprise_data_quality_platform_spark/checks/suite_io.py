@@ -139,8 +139,8 @@ def check_from_dict(d: dict) -> Check:
     else:
         columns = tuple(column_list)
     if check_type == "columns_match_list":
-        # run_plan_check reads params['column_list'] — keep it in BOTH
-        # places so a saved suite round-trips to a runnable check
+        # compiler.schema_result reads params['column_list'] — keep it in
+        # BOTH places so a saved suite round-trips to a runnable check
         params["column_list"] = column_list
     if etype == "expect_column_values_to_be_decreasing":
         params["decreasing"] = True

@@ -24,12 +24,14 @@ Glue DAG's three parallel master-data jobs overlap.
 
 from __future__ import annotations
 
-import time
-from concurrent.futures import ThreadPoolExecutor, Future
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
 Ctx = dict[str, Any]
+
+#: Stages that run at once.
+MAX_PARALLEL = 4
 
 
 @dataclass
@@ -38,7 +40,6 @@ class Stage:
     fn: Callable[[Ctx], Any]
     upstream: tuple[str, ...] = ()
     retries: int = 0
-    retry_delay_s: float = 0.0
 
 
 class StageFailure(RuntimeError):
@@ -50,7 +51,6 @@ class StageFailure(RuntimeError):
 @dataclass
 class Pipeline:
     stages: list[Stage] = field(default_factory=list)
-    max_parallel: int = 4
 
     def add(
         self,
@@ -58,11 +58,10 @@ class Pipeline:
         fn: Callable[[Ctx], Any],
         upstream: tuple[str, ...] = (),
         retries: int = 0,
-        retry_delay_s: float = 0.0,
     ) -> "Pipeline":
         if any(s.name == name for s in self.stages):
             raise ValueError(f"duplicate stage name: {name}")
-        self.stages.append(Stage(name, fn, upstream, retries, retry_delay_s))
+        self.stages.append(Stage(name, fn, upstream, retries))
         return self
 
     def run(self, ctx: Ctx | None = None, raise_on_failure: bool = True) -> Ctx:
@@ -78,20 +77,17 @@ class Pipeline:
         status: dict[str, str] = {}
         errors: dict[str, Exception] = {}
         pending = dict(by_name)
-        running: dict[str, Future] = {}
+        running: dict[Future, str] = {}
 
         def attempt(stage: Stage) -> Any:
-            last: Exception | None = None
-            for i in range(stage.retries + 1):
+            for _ in range(stage.retries):
                 try:
                     return stage.fn(ctx)
-                except Exception as exc:  # noqa: BLE001
-                    last = exc
-                    if i < stage.retries and stage.retry_delay_s:
-                        time.sleep(stage.retry_delay_s)
-            raise last  # type: ignore[misc]
+                except Exception:  # noqa: BLE001 — the last attempt raises
+                    pass
+            return stage.fn(ctx)
 
-        with ThreadPoolExecutor(max_workers=self.max_parallel) as pool:
+        with ThreadPoolExecutor(max_workers=MAX_PARALLEL) as pool:
             while pending or running:
                 progressed = False
                 for name in list(pending):
@@ -102,7 +98,7 @@ class Pipeline:
                         del pending[name]
                         progressed = True
                     elif all(u == "success" for u in ups):
-                        running[name] = pool.submit(attempt, stage)
+                        running[pool.submit(attempt, stage)] = name
                         del pending[name]
                         progressed = True
                 if not running:
@@ -115,12 +111,9 @@ class Pipeline:
                             + ", ".join(sorted(pending))
                         )
                     continue
-                done = [n for n, f in running.items() if f.done()]
-                if not done:
-                    time.sleep(0.01)
-                    continue
-                for name in done:
-                    fut = running.pop(name)
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
                     exc = fut.exception()
                     if exc is None:
                         ctx[name] = fut.result()

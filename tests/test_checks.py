@@ -719,3 +719,151 @@ def test_footer_decided_checks_equal_the_scan(spark, tmp_path, case):
         assert by_name["k present"].violations == 2
     if case == "rewritten":
         assert by_name["k range"].violations == 2
+
+
+# ---------------------------------------------------------------------------
+# One lowering for every check type: schema checks are decided at plan time,
+# every data check is a factor of the runner's pool, and the compiler itself
+# never runs a Spark action.
+# ---------------------------------------------------------------------------
+
+
+_SCHEMA_TYPES = ("column_exists", "columns_match_list", "column_of_type",
+                 "column_count_between")
+
+
+def _every_type_suite():
+    """A pass and a fail case for each schema type and each check type with
+    its own plan shape, plus one fused check, over ``t`` (6 rows), ``u``
+    (keys 1..6) and ``p`` (keys 1..5)."""
+    kl = {"a": 0.5, "b": 0.5}
+    skewed = {"a": 0.9, "b": 0.1}
+    cases = [
+        ("column_exists", {"column": "k"}, {"column": "ghost"}),
+        ("columns_match_list",
+         {"params": {"column_list": ["k", "v", "cat", "seq"]}},
+         {"params": {"column_list": ["seq", "cat", "v", "k"]}}),
+        ("column_of_type", {"column": "v", "params": {"type": "double"}},
+         {"column": "v", "params": {"type": "string"}}),
+        ("column_count_between", {"params": {"min": 1, "max": 10}},
+         {"params": {"max": 2}}),
+        ("referential_integrity",
+         {"column": "k", "params": {"parent_table": "u", "parent_column": "pk"}},
+         {"column": "k", "params": {"parent_table": "p", "parent_column": "pk"}}),
+        ("kl_divergence_less_than",
+         {"column": "cat", "params": {"expected_distribution": kl, "threshold": 0.1}},
+         {"column": "cat",
+          "params": {"expected_distribution": skewed, "threshold": 0.1}}),
+        ("chi_square_test",
+         {"column": "cat",
+          "params": {"expected_distribution": kl, "critical_value": 3.84}},
+         {"column": "cat",
+          "params": {"expected_distribution": skewed, "critical_value": 3.84}}),
+        ("row_count_equal_other_table", {"params": {"other_table": "u"}},
+         {"params": {"other_table": "p"}}),
+        ("z_score_less_than", {"column": "v", "params": {"threshold": 3.0}},
+         {"column": "v", "params": {"threshold": 1.0}}),
+        ("monotonic", {"column": "v", "params": {"order_by": "seq"}},
+         {"column": "v", "params": {"order_by": "seq", "decreasing": True}}),
+    ]
+    checks = [Check("k present", "not_null", "t", column="k")]
+    for check_type, good, bad in cases:
+        checks.append(Check(f"{check_type} pass", check_type, "t", **good))
+        checks.append(Check(f"{check_type} fail", check_type, "t", **bad))
+    return checks
+
+
+def _every_type_tables(spark):
+    rows = [(i, float(i), "a" if i <= 3 else "b", i) for i in range(1, 7)]
+    return {
+        "t": spark.createDataFrame(rows, "k int, v double, cat string, seq int"),
+        "u": spark.createDataFrame([(i,) for i in range(1, 7)], "pk int"),
+        "p": spark.createDataFrame([(i,) for i in range(1, 6)], "pk int"),
+    }
+
+
+def test_every_check_type_plans_without_a_job(spark):
+    """``plan_suite`` answers the schema checks and gives every check with
+    its own plan shape its own factor, running no job; the pooled results
+    equal the ``fuse=False`` ones and each case passes or fails as built."""
+    from enterprise_data_quality_platform_spark.checks.runner import plan_suite
+
+    tables, checks = _every_type_tables(spark), _every_type_suite()
+    sc = spark.sparkContext
+    sc.setJobGroup("every-type-plan", "every-type-plan")
+    try:
+        plan = plan_suite(tables, checks)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("every-type-plan") == []
+
+    schema = {i for i, c in enumerate(checks) if c.check_type in _SCHEMA_TYPES}
+    assert set(plan.decided) == schema
+    solo = {
+        f.members[0].index: f.name for f in plan.factors if len(f.members) == 1
+    }
+    own_shape = set(range(len(checks))) - schema - {0}
+    assert {i: solo.get(i) for i in own_shape} == {i: f"t.c{i}" for i in own_shape}
+    assert len(plan.factors) == len(own_shape) + 1  # + the fused not_null
+
+    results = run_suite(tables, checks)
+    assert _outcome(results) == _outcome(run_suite(tables, checks, fuse=False))
+    for r in results:
+        want = "fail" if r.check_name.endswith(" fail") else "pass"
+        assert r.status == want, (r.check_name, r.status, r.error_message)
+
+
+def test_missing_other_table_errors_alone(spark):
+    """An RI check whose parent table is not loaded and a row-count
+    comparison whose other table is not loaded each return ``error``;
+    their neighbours still pass."""
+    tables = _every_type_tables(spark)
+    checks = [
+        Check("ri ok", "referential_integrity", "t", column="k",
+              params={"parent_table": "u", "parent_column": "pk"}),
+        Check("ri ghost", "referential_integrity", "t", column="k",
+              params={"parent_table": "ghost", "parent_column": "pk"}),
+        Check("rows ghost", "row_count_equal_other_table", "t",
+              params={"other_table": "ghost"}),
+        Check("rows ok", "row_count_equal_other_table", "t",
+              params={"other_table": "u"}),
+    ]
+    for fuse in (True, False):
+        got = {r.check_name: r for r in run_suite(tables, checks, fuse=fuse)}
+        assert [got[c.name].status for c in checks] == ["pass", "error", "error", "pass"]
+        assert "ghost" in got["ri ghost"].error_message
+        assert "ghost" in got["rows ghost"].error_message
+
+
+#: Spark actions a lowering must never call: every answer comes from a
+#: frame the runner's pool executes.
+_ACTIONS = {"collect", "take", "first", "head", "toPandas", "toLocalIterator"}
+
+
+def _spark_actions(source: str) -> list[str]:
+    """``.collect(`` / ``.take(`` / ``.first(`` / ... calls and zero-argument
+    ``.count()`` calls in ``source``; ``F.first(...)`` / ``F.count(...)``
+    are aggregate expressions, not actions."""
+    import ast
+
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        receiver = node.func.value
+        if isinstance(receiver, ast.Name) and receiver.id == "F":
+            continue
+        name = node.func.attr
+        if name in _ACTIONS or (name == "count" and not node.args):
+            found.append(f"line {node.lineno}: .{name}(")
+    return found
+
+
+def test_compiler_runs_no_spark_action():
+    from pathlib import Path
+
+    from enterprise_data_quality_platform_spark.checks import compiler
+
+    assert _spark_actions(Path(compiler.__file__).read_text()) == []
+    assert _spark_actions("row = df.agg(x).collect()[0]") == ["line 1: .collect("]
+    assert _spark_actions("n = df.count()\nF.first('a')") == ["line 1: .count("]

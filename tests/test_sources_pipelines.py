@@ -162,6 +162,33 @@ def test_pipeline_retries():
     assert ctx["flaky"] == "recovered" and attempts["n"] == 3
 
 
+def test_pipeline_exhausted_retries_skip_transitively_and_cycles_raise():
+    """The last attempt's error fails the stage; a downstream stage listed
+    before its failed-or-skipped upstream is still skipped; a dependency
+    cycle raises instead of waiting forever."""
+    attempts = []
+
+    def always(ctx):
+        attempts.append(len(attempts))
+        raise RuntimeError(f"attempt {len(attempts)}")
+
+    p = (
+        Pipeline()
+        .add("last", lambda ctx: 1, upstream=("mid",))
+        .add("mid", lambda ctx: 1, upstream=("bad",))
+        .add("bad", always, retries=1)
+    )
+    with pytest.raises(StageFailure, match="attempt 2"):
+        p.run()
+    assert attempts == [0, 1]
+    status = p.run(raise_on_failure=False)["__status__"]
+    assert status == {"bad": "failed", "mid": "skipped", "last": "skipped"}
+    cyclic = Pipeline().add("x", lambda ctx: 1, upstream=("y",))
+    cyclic.add("y", lambda ctx: 1, upstream=("x",))
+    with pytest.raises(ValueError, match="dependency cycle"):
+        cyclic.run()
+
+
 # --- reference pipelines end-to-end ---------------------------------------
 
 
