@@ -728,10 +728,6 @@ def test_footer_decided_checks_equal_the_scan(spark, tmp_path, case):
 # ---------------------------------------------------------------------------
 
 
-_SCHEMA_TYPES = ("column_exists", "columns_match_list", "column_of_type",
-                 "column_count_between")
-
-
 def _every_type_suite():
     """A pass and a fail case for each schema type and each check type with
     its own plan shape, plus one fused check, over ``t`` (6 rows), ``u``
@@ -786,6 +782,9 @@ def test_every_check_type_plans_without_a_job(spark):
     """``plan_suite`` answers the schema checks and gives every check with
     its own plan shape its own factor, running no job; the pooled results
     equal the ``fuse=False`` ones and each case passes or fails as built."""
+    from enterprise_data_quality_platform_spark.checks.definitions import (
+        SCHEMA_CHECK_TYPES,
+    )
     from enterprise_data_quality_platform_spark.checks.runner import plan_suite
 
     tables, checks = _every_type_tables(spark), _every_type_suite()
@@ -797,7 +796,7 @@ def test_every_check_type_plans_without_a_job(spark):
         sc.setJobGroup(None, None)
     assert sc.statusTracker().getJobIdsForGroup("every-type-plan") == []
 
-    schema = {i for i, c in enumerate(checks) if c.check_type in _SCHEMA_TYPES}
+    schema = {i for i, c in enumerate(checks) if c.check_type in SCHEMA_CHECK_TYPES}
     assert set(plan.decided) == schema
     solo = {
         f.members[0].index: f.name for f in plan.factors if len(f.members) == 1
