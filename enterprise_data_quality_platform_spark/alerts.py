@@ -14,8 +14,8 @@ Key semantics preserved:
   (``test-pager-action.py:51-55``);
 - **idempotent trigger writes**: the reference sets retries=0 on the alert
   task to avoid duplicate pages (``pager-workflow.py:320``); we instead make
-  the write itself idempotent (anti-join on open incident keys before
-  append), so retries are safe;
+  the write itself idempotent (rows whose incident key is open are dropped
+  before the append), so retries are safe;
 - ``trigger`` → ``resolve`` event pairs mirror the PR-merge / issue-close
   resolve hooks.
 """
@@ -68,7 +68,7 @@ class AlertSink:
         if "://" not in self.path and not os.path.exists(self.path):
             return local_frame(self.spark, [], ALERT_SCHEMA)
         try:
-            return self.spark.read.parquet(self.path)
+            return self.spark.read.schema(ALERT_SCHEMA).parquet(self.path)
         except Exception:
             return local_frame(self.spark, [], ALERT_SCHEMA)
 
@@ -87,7 +87,8 @@ class AlertSink:
         channels: Iterable[str] = ("pagerduty", "agent"),
     ) -> int:
         """Append trigger rows for failed checks — once per open incident
-        (idempotent: re-running a failed pipeline doesn't re-page)."""
+        (idempotent: re-running a failed pipeline doesn't re-page). The open
+        incident keys are read once; returns the number of rows appended."""
         import json
 
         now = datetime.now(timezone.utc).replace(tzinfo=None)
@@ -117,12 +118,13 @@ class AlertSink:
         ]
         if not rows:
             return 0
-        new = local_frame(self.spark, rows, ALERT_SCHEMA)
-        deduped = new.join(self.open_incidents(), on="incident_key", how="left_anti")
-        n = deduped.count()
-        if n:
-            deduped.write.mode("append").parquet(self.path)
-        return n
+        open_keys = {r.incident_key for r in self.open_incidents().collect()}
+        rows = [r for r in rows if r[0] not in open_keys]
+        if rows:
+            local_frame(self.spark, rows, ALERT_SCHEMA).write.mode("append").parquet(
+                self.path
+            )
+        return len(rows)
 
     def resolve(self, check_name: str, channel: str = "pagerduty") -> int:
         """Resolve an open incident (PR-merge / issue-close hook analogue)."""

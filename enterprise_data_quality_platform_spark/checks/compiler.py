@@ -354,6 +354,15 @@ _ROW_COND_TYPES = frozenset(
 #: factor answers them from per-group partial sums (``grouped_frame``).
 ADDITIVE_TYPES = _ROW_COND_TYPES | {"row_count_between"}
 
+#: check type -> (metric name, aggregate) for the one-aggregate metric checks
+_METRIC_AGGS = {
+    "mean_between": ("mean", F.avg),
+    "stddev_between": ("stddev", F.stddev),
+    "min_between": ("min", F.min),
+    "max_between": ("max", F.max),
+    "sum_between": ("sum", F.sum),
+}
+
 
 def is_categorical(check: Check) -> bool:
     """A row-condition check the suite declares low-cardinality
@@ -761,16 +770,9 @@ def compile_agg_check(
         ev = _count_eval(check, lambda _: observed)
         return CompiledAggCheck(check, {}, ev, prefix, frame_builder=build_mono)
 
-    metric_map: dict[str, tuple[str, Column]] = {
-        "mean_between": ("mean", F.avg(c)),
-        "stddev_between": ("stddev", F.stddev(c)),
-        "min_between": ("min", F.min(c)),
-        "max_between": ("max", F.max(c)),
-        "sum_between": ("sum", F.sum(c)),
-    }
-    if check.check_type in metric_map:
-        mname, expr = metric_map[check.check_type]
-        exprs[f"{prefix}__{mname}"] = expr
+    if check.check_type in _METRIC_AGGS:
+        mname, agg = _METRIC_AGGS[check.check_type]
+        exprs[f"{prefix}__{mname}"] = agg(c)
         exprs[f"{prefix}__total"] = total
         return CompiledAggCheck(check, exprs, _metric_eval(check, (mname,)), prefix)
 

@@ -26,14 +26,18 @@ evidence that proves it, and ``run_suite`` executes that plan:
   its own factor.
 - Schema checks are answered from the table's schema, with no job
   (``compiler.schema_result``).
-- Every factor's job is submitted concurrently from one thread pool, and a
-  failing check's leftover violation sample joins the same pool as soon as
-  its factor's row shows the failure, so suite wall time tracks the
-  slowest factor, not the sum. (An earlier design crossJoined the factors
-  into one action with AQE off; at sf10 that overlapped stages poorly —
-  2.5 s vs 1.2 s for concurrent jobs.)
-- If a fused factor fails at runtime (e.g. one ANSI-throwing expression),
-  each of its checks is rerun alone, so per-check isolation holds.
+- ``plan_suite`` builds no DataFrame: a factor carries a builder, and the
+  pool thread that runs the factor builds its frame, so DataFrame analysis
+  overlaps the other factors' jobs. Every factor is submitted concurrently
+  from one thread pool, and a failing check's leftover violation sample
+  joins the same pool as soon as its factor's row shows the failure, so
+  suite wall time tracks the slowest factor, not the sum. (An earlier
+  design crossJoined the factors into one action with AQE off; at sf10
+  that overlapped stages poorly — 2.5 s vs 1.2 s for concurrent jobs.)
+- If a shared factor fails, in analysis (e.g. a column the table lacks) or
+  at runtime (e.g. one ANSI-throwing expression), each of its checks is
+  rerun alone; a check alone that fails is an ``error`` result. So
+  per-check isolation holds.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from collections import defaultdict
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import partial
 from typing import Any, Callable, Iterable, Mapping, Sequence
 
 from pyspark import inheritable_thread_target
@@ -76,7 +81,7 @@ class Member:
     index: int
     check: Check
     evaluate: Callable[[Mapping[str, Any]], CheckResult]
-    #: the check's own frame, rerun alone when its shared factor fails
+    #: builds the check's own frame, rerun alone when its shared factor fails
     solo: Callable[[], DataFrame] | None = None
     #: the factor row's column holding this check's violation sample
     sample_key: str | None = None
@@ -86,21 +91,26 @@ class Member:
 
 @dataclass
 class Factor:
-    """One Spark action: a 1-row frame and the checks it answers."""
+    """One Spark action: a builder of a 1-row frame, called on the pool
+    thread that runs it, and the checks that row answers."""
 
     name: str
-    frame: DataFrame
+    build: Callable[[], DataFrame]
     members: list[Member]
 
 
 @dataclass
 class SuitePlan:
-    """What ``plan_suite`` built, before any action runs: the factors and
-    the results already known (schema checks, footer-decided checks,
-    compile and analysis errors). Every check is in exactly one of them."""
+    """What ``plan_suite`` decided, before any frame is built: the factors
+    and the results already known (schema checks, footer-decided checks,
+    compile errors). Every check is in exactly one of them."""
 
     factors: list[Factor] = field(default_factory=list)
     decided: dict[int, CheckResult] = field(default_factory=dict)
+
+
+def _agg_frame(df: DataFrame, compiled: Sequence[CompiledAggCheck]) -> DataFrame:
+    return df.agg(*[e.alias(a) for c in compiled for a, e in c.exprs.items()])
 
 
 def _solo_frame(
@@ -110,7 +120,7 @@ def _solo_frame(
         return compiled.frame_builder(df, snap)
     if is_categorical(compiled.check):
         return grouped_frame(df, [compiled])
-    return df.agg(*[c.alias(a) for a, c in compiled.exprs.items()])
+    return _agg_frame(df, [compiled])
 
 
 def _member(
@@ -123,36 +133,20 @@ def _member(
         i,
         check,
         lambda row: compiled.evaluate(row, compiled.prefix),
-        solo=(lambda: _solo_frame(df, snap, compiled)) if shared else None,
+        solo=partial(_solo_frame, df, snap, compiled) if shared else None,
         sample_key=f"{compiled.prefix}__sample" if in_row else None,
-        sample=(lambda: violation_sample_df(df, check))
+        sample=partial(violation_sample_df, df, check)
         if sampleable and not in_row
         else None,
     )
 
 
-def _add_solo(
-    plan: SuitePlan,
-    table: str,
-    df: DataFrame,
-    snap: Footer | None,
-    i: int,
-    compiled: CompiledAggCheck,
-) -> None:
-    """Give one check its own factor, or its error when that fails analysis."""
-    try:
-        frame = _solo_frame(df, snap, compiled)
-    except Exception as exc:  # noqa: BLE001 — isolation is the contract
-        plan.decided[i] = _error_result(compiled.check, exc)
-        return
-    member = _member(i, compiled, df, snap, shared=False)
-    plan.factors.append(Factor(f"{table}.{compiled.prefix}", frame, [member]))
-
-
 def plan_suite(
     tables: Mapping[str, DataFrame], checks: Sequence[Check], fuse: bool = True
 ) -> SuitePlan:
-    """Lower ``checks`` to factors without running any Spark action.
+    """Lower ``checks`` to factors without building a frame or running any
+    Spark action; each factor's frame is built by the pool thread that runs
+    it, so its analysis errors isolate like runtime ones.
 
     Both modes answer schema checks here. ``fuse=True``: footer-decided
     checks get their results here too; per table, one groupBy factor when
@@ -197,34 +191,28 @@ def plan_suite(
                 )
                 shared[kind].append((i, compiled))
                 continue
-            _add_solo(plan, name, df, snap, i, compiled)
+            plan.factors.append(
+                Factor(
+                    f"{name}.{compiled.prefix}",
+                    partial(_solo_frame, df, snap, compiled),
+                    [_member(i, compiled, df, snap, shared=False)],
+                )
+            )
         for kind, members in shared.items():
             compiled_members = [c for _, c in members]
-            try:
-                frame = (
-                    grouped_frame(df, compiled_members)
-                    if kind == "grouped"
-                    else df.agg(
-                        *[e.alias(a) for c in compiled_members for a, e in c.exprs.items()]
-                    )
-                )
-            except Exception:  # noqa: BLE001 — one bad expression failed
-                # the factor's analysis: give each check its own frame
-                for i, compiled in members:
-                    _add_solo(plan, name, df, snap, i, compiled)
-                continue
+            build = grouped_frame if kind == "grouped" else _agg_frame
             plan.factors.append(
                 Factor(
                     f"{name}.{kind}",
-                    frame,
+                    partial(build, df, compiled_members),
                     [_member(i, c, df, snap, len(members) > 1) for i, c in members],
                 )
             )
     return plan
 
 
-def _first_row(frame: DataFrame) -> dict:
-    return frame.collect()[0].asDict()
+def _first_row(build: Callable[[], DataFrame]) -> dict:
+    return build().collect()[0].asDict()
 
 
 def _sample_values(build: Callable[[], DataFrame]) -> list:
@@ -237,22 +225,24 @@ def _attach_sample(result: CheckResult, values) -> None:
 
 
 def _execute(
-    factors: Sequence[Factor], results: dict[int, CheckResult], workers: int
+    session: SparkSession,
+    factors: Sequence[Factor],
+    results: dict[int, CheckResult],
+    workers: int,
 ) -> None:
-    """Run every factor in one pool of ``workers`` threads; evaluate each
-    row as it lands. A failing check's sample is read from its row
-    (``Member.sample_key``) or submitted into the same pool at once
-    (``Member.sample``). Pool threads inherit the caller's job group and
-    tags, so the suite's jobs are attributed to its caller."""
-    if not factors:
-        return
-    session = factors[0].frame.sparkSession
+    """Build and run every factor in one pool of ``workers`` threads;
+    evaluate each row as it lands. A factor whose frame fails analysis or
+    whose job fails reruns each member alone (``Member.solo``), or, alone
+    already, is that check's ``error``. A failing check's sample is read
+    from its row (``Member.sample_key``) or submitted into the same pool at
+    once (``Member.sample``). Pool threads inherit the caller's job group
+    and tags, so the suite's jobs are attributed to its caller."""
     with ThreadPoolExecutor(max_workers=workers) as pool:
 
         def submit(fn, arg):
             return pool.submit(inheritable_thread_target(session)(fn), arg)
 
-        pending = {submit(_first_row, f.frame): f.members for f in factors}
+        pending = {submit(_first_row, f.build): f.members for f in factors}
         samples = {}
         while pending:
             done, _ = wait(pending, return_when=FIRST_COMPLETED)
@@ -264,11 +254,11 @@ def _execute(
                             row = fut.result()
                             results[m.index] = r = m.evaluate(row)
                         elif m.solo is not None:
-                            # a shared factor died at runtime: rerun this
-                            # check alone so one poisoned expression can't
-                            # sink its neighbours
+                            # a shared factor failed: rerun this check
+                            # alone so one poisoned expression can't sink
+                            # its neighbours
                             solo = [dataclasses.replace(m, solo=None)]
-                            pending[submit(_first_row, m.solo())] = solo
+                            pending[submit(_first_row, m.solo)] = solo
                             continue
                         else:
                             raise exc
@@ -302,8 +292,10 @@ def run_suite(
     more violate."""
     plan = plan_suite(tables, checks, fuse=fuse)
     results = dict(plan.decided)
-    workers = min(len(plan.factors), 8) if fuse else 1
-    _execute(plan.factors, results, workers)
+    if plan.factors:
+        session = next(iter(tables.values())).sparkSession
+        workers = min(len(plan.factors), 8) if fuse else 1
+        _execute(session, plan.factors, results, workers)
     return [results[i] for i in sorted(results)]
 
 

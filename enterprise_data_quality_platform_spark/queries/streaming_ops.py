@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..checks import Check
 from ..session import local_frame
 from ..streaming import run_streaming_dq_gate
+from ..streaming.pipeline import run_available_now
 from .registry import register
 
 _STREAM_CHECKS = [
@@ -33,17 +34,9 @@ _STREAM_CHECKS = [
 
 
 def _run_stream(stream_df, name: str, output_mode: str = "append"):
-    import tempfile
-
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="edqp-ckpt-"))
-        .start()
+    run_available_now(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     )
-    q.awaitTermination()
 
 
 @register(

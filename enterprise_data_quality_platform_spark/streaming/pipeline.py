@@ -8,11 +8,10 @@ event-time streaming:
 - the hardcoded 120s barrier becomes a **watermark** (T5): lateness is a
   declared bound, not a sleep;
 - the re-validation task becomes a **foreachBatch DQ gate** (T7): the same
-  compiled check suite from ``checks/`` runs per micro-batch, failures are
-  appended to the alert sink before the gate raises — the exact
-  validate→alert→raise order of pager-workflow.py:247-267;
-- duplicate alert avoidance (retries=0, pager-workflow.py:320) becomes
-  idempotent alert writes keyed by incident_key (``alerts.py``).
+  compiled check suite from ``checks/`` runs per micro-batch and yields a
+  per-batch summary. The gate itself neither alerts nor raises; a caller's
+  ``on_batch_results`` hook can append alerts (``alerts.py``, idempotent by
+  incident_key) or raise.
 
 Tests drive these with Trigger.AvailableNow over the events parquet, which
 exercises identical code paths to a live file/kafka source.
@@ -20,10 +19,12 @@ exercises identical code paths to a live file/kafka source.
 
 from __future__ import annotations
 
+import tempfile
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import raw_table
 from ..checks import Check, run_suite
@@ -56,6 +57,24 @@ def use_rocksdb_state(
         "true" if changelog_checkpointing else "false",
     )
     return spark
+
+
+def run_available_now(
+    writer: DataStreamWriter, checkpoint_dir: str | None = None
+) -> StreamingQuery:
+    """Start ``writer`` with Trigger.AvailableNow (checkpointed in
+    ``checkpoint_dir``, else a fresh temp dir) and wait until it has
+    processed every input available at start."""
+    query = (
+        writer.trigger(availableNow=True)
+        .option(
+            "checkpointLocation",
+            checkpoint_dir or tempfile.mkdtemp(prefix="edqp-ckpt-"),
+        )
+        .start()
+    )
+    query.awaitTermination()
+    return query
 
 
 def events_stream(
@@ -361,8 +380,6 @@ def run_streaming_dq_gate(
     same engine as batch) and records a per-batch summary row; a caller
     hook receives the raw results (e.g. to append alerts). Returns the
     batch summaries."""
-    import tempfile
-
     from ..checks.runner import summarize
 
     summaries: list[dict] = []
@@ -377,16 +394,7 @@ def run_streaming_dq_gate(
         summaries.append(s)
 
     stream = events_stream(spark, sf_dir)
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="edqp-ckpt-"),
-        )
-        .start()
-    )
-    query.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(handle), checkpoint_dir)
     return summaries
 
 
@@ -412,22 +420,11 @@ def first_seen_dim(events: DataFrame) -> DataFrame:
     return events.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
 
 
-def streaming_click_purchase_pairs(
-    stream: DataFrame,
-    max_gap: str = "30 minutes",
-    watermark: str = "2 hours",
+def _click_purchase_join(
+    stream: DataFrame, max_gap: str, watermark: str, how: str
 ) -> DataFrame:
-    """T9 (stream-stream join): purchases matched to every prior click by
-    the same user within ``max_gap`` — the interval self-join that powers
-    conversion attribution on a live stream.
-
-    Both sides carry watermarks and the join condition carries the
-    event-time range, so Spark bounds the join state: a buffered click can
-    be evicted once the purchase-side watermark passes click_ts + max_gap
-    (state is O(events within the gap window), not O(stream)). Inner join
-    in append mode — for a finite AvailableNow run the emitted pairs equal
-    the batch interval join exactly (oracle-checked). The gap is reported
-    in exact integer seconds so no float crosses the compare."""
+    """Watermarked click and purchase sides of ``stream``, joined on the
+    same user and ``click_ts <= purchase_ts <= click_ts + max_gap``."""
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -446,13 +443,33 @@ def streaming_click_purchase_pairs(
         )
         .withWatermark("purchase_ts", watermark)
     )
-    pairs = clicks.join(
+    return clicks.join(
         purchases,
         F.expr(
             "c_user_id = p_user_id AND purchase_ts >= click_ts "
             f"AND purchase_ts <= click_ts + interval {max_gap}"
         ),
+        how,
     )
+
+
+def streaming_click_purchase_pairs(
+    stream: DataFrame,
+    max_gap: str = "30 minutes",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """T9 (stream-stream join): purchases matched to every prior click by
+    the same user within ``max_gap`` — the interval self-join that powers
+    conversion attribution on a live stream.
+
+    Both sides carry watermarks and the join condition carries the
+    event-time range, so Spark bounds the join state: a buffered click can
+    be evicted once the purchase-side watermark passes click_ts + max_gap
+    (state is O(events within the gap window), not O(stream)). Inner join
+    in append mode — for a finite AvailableNow run the emitted pairs equal
+    the batch interval join exactly (oracle-checked). The gap is reported
+    in exact integer seconds so no float crosses the compare."""
+    pairs = _click_purchase_join(stream, max_gap, watermark, "inner")
     return pairs.select(
         F.col("c_user_id").alias("user_id"),
         "click_id",
@@ -485,8 +502,6 @@ def streaming_upsert_sink(
     values, so the sink is effectively idempotent (exactly-once table
     state from at-least-once batch delivery). Runs with AvailableNow and
     returns after completion."""
-    import tempfile
-
     from ..sources.writers import merge_upsert
 
     key_list = list(keys)
@@ -501,17 +516,7 @@ def streaming_upsert_sink(
         )
         merge_upsert(spark, latest, path, keys=key_list, date_col=date_col)
 
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or tempfile.mkdtemp(prefix="edqp-ckpt-"),
-        )
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return run_available_now(stream.writeStream.foreachBatch(handle), checkpoint_dir)
 
 
 def streaming_click_conversion_outer(
@@ -532,32 +537,7 @@ def streaming_click_conversion_outer(
     delay + one batch, and a click near the end of a finite run stays
     unemitted: correct, not a bug — the stream hasn't proven the
     negative yet. State stays bounded exactly as the inner variant."""
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    pairs = clicks.join(
-        purchases,
-        F.expr(
-            "c_user_id = p_user_id AND purchase_ts >= click_ts "
-            f"AND purchase_ts <= click_ts + interval {max_gap}"
-        ),
-        "leftOuter",
-    )
+    pairs = _click_purchase_join(stream, max_gap, watermark, "leftOuter")
     return pairs.select(
         F.col("c_user_id").alias("user_id"),
         "click_id",

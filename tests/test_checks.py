@@ -721,6 +721,59 @@ def test_footer_decided_checks_equal_the_scan(spark, tmp_path, case):
         assert by_name["k range"].violations == 2
 
 
+def test_plan_suite_builds_no_frame(spark, tmp_path, monkeypatch):
+    """``plan_suite`` only compiles, decides and groups: with
+    ``DataFrame.agg``/``groupBy``/``join`` raising it still plans an agg
+    factor, a grouped factor and an own-shape factor and decides only the
+    schema and footer checks. The frames are built when the suite runs, and
+    the run equals ``fuse=False``."""
+    from enterprise_data_quality_platform_spark.checks.runner import plan_suite
+
+    tables, footer_decided = _footer_case(spark, tmp_path, "clean")
+    tables["u"] = spark.createDataFrame([(i,) for i in range(1, 4)], "pk long")
+    checks = _FOOTER_CHECKS + [
+        Check("k in set", "values_in_set", "t", column="k",
+              params={"values": [1, 2, 3], "categorical": True}),
+        Check("x mean", "mean_between", "t", column="x", params={"min": 0.0}),
+        Check("k in u", "referential_integrity", "t", column="k",
+              params={"parent_table": "u", "parent_column": "pk"}),
+        Check("x exists", "column_exists", "t", column="x"),
+    ]
+
+    def no_frames(*args, **kwargs):
+        raise AssertionError("plan_suite built a frame")
+
+    with monkeypatch.context() as m:
+        for name in ("agg", "groupBy", "join"):
+            m.setattr(type(tables["t"]), name, no_frames)
+        plan = plan_suite(tables, checks)
+    assert set(plan.decided) == footer_decided | {7}
+    assert sorted(f.name for f in plan.factors) == ["t.agg", "t.c6", "t.grouped"]
+    fused = run_suite(tables, checks)
+    assert _outcome(fused) == _outcome(run_suite(tables, checks, fuse=False))
+    assert {r.check_name: r.status for r in fused}["k in u"] == "fail"
+
+
+def test_compile_builds_only_its_own_metric(spark, monkeypatch):
+    """A check compiles only the aggregate its type asks for: with
+    ``F.stddev`` raising, freshness and min_between still compile."""
+    from pyspark.sql import functions as F
+
+    from enterprise_data_quality_platform_spark.checks.compiler import (
+        compile_agg_check,
+    )
+
+    def no_stddev(*args, **kwargs):
+        raise AssertionError("F.stddev built")
+
+    monkeypatch.setattr(F, "stddev", no_stddev)
+    fresh = Check("fresh", "freshness", "t", column="ts",
+                  params={"max_lag_seconds": 60})
+    low = Check("low", "min_between", "t", column="v", params={"min": 0})
+    assert set(compile_agg_check(fresh, "c0").exprs) == {"c0__max_ts", "c0__total"}
+    assert set(compile_agg_check(low, "c1").exprs) == {"c1__min", "c1__total"}
+
+
 # ---------------------------------------------------------------------------
 # One lowering for every check type: schema checks are decided at plan time,
 # every data check is a factor of the runner's pool, and the compiler itself

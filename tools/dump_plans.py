@@ -14,8 +14,8 @@ Some queries hide their interesting subtree from their own dump. Those that
 (VERDICT r11 item 9); ``dq_suite_report`` builds its report on the driver,
 so its dump is a bare ``LocalRelation``. For those, EXTRA_FRAMES registers
 the frames that do the work, built by the package's own builders (the
-pre-checkpoint frames; the suite's factor frames from
-``checks.runner.plan_suite``), dumped as <query>__<frame>_<suffix>.txt
+pre-checkpoint frames; the suite's factor frames, built from
+``checks.runner.plan_suite``'s factors), dumped as <query>__<frame>_<suffix>.txt
 whenever the query itself is requested.
 """
 
@@ -43,7 +43,7 @@ from enterprise_data_quality_platform_spark.queries.relational import (  # noqa:
 
 def suite_factors(spark, sf_dir):
     plan = plan_suite(suite_tables(spark, sf_dir), _SUITE)
-    return [(f.name, f.frame) for f in plan.factors]
+    return [(f.name, f.build()) for f in plan.factors]
 
 
 #: query -> builder(spark, sf_dir) -> [(frame_label, frame)] to dump beside it.
