@@ -200,9 +200,9 @@ def semantic_pairs(emb: DataFrame, sf_dir: str) -> DataFrame:
     n = footer(sf_dir, "embeddings").rows or emb.count()
     k = max(16, min(4096, n // 100))
     # nprobe=3: measured against numpy brute force on the sf0.001 corpus
-    # (tests/test_dedup_similarity.py::test_semantic_dedup_recall_vs_brute
-    # _force) — recall 0.35 / 0.77 / 0.94 at nprobe 1/2/3, precision 1.0
-    # at all settings (candidates are verified with the exact cosine).
+    # (tests/test_dedup_similarity.py::test_semantic_dedup_recall_vs_brute_force)
+    # — recall 0.35 / 0.77 / 0.94 at nprobe 1/2/3, precision 1.0 at all
+    # settings (candidates are verified with the exact cosine).
     # The +1 nprobe costs ~30% on the pair stage (3.4→4.4 s sf0.1) for
     # +17 points of recall on this near-orthogonal synthetic regime.
     return semantic_dup_pairs(emb, threshold=0.40, num_centroids=k, nprobe=3)

@@ -1626,7 +1626,7 @@ def dq_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dq_distinct_sketch",
     # rows-only: HLL sketch estimates are Apache DataSketches-specific, so
     # no DuckDB twin can match values. Merge identity + error band are
-    # pinned by tests/test_seventeenth_pass.py instead.
+    # pinned by tests/test_dq_queries.py instead.
     oracle=None,
     tables=("events",),
 )

@@ -167,7 +167,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap). Spark's batch session merge is INCLUSIVE (an event exactly at
     session_end extends the session), which matches the oracle's
     `ts - prev_ts > INTERVAL 30 MINUTE` new-session convention exactly —
-    edge-tested in tests/test_round2_fixes.py with 30min and 30min+1us
+    edge-tested in tests/test_events_analytics.py with 30min and 30min+1us
     gaps."""
     sessions = (
         table(spark, sf_dir, "events")

@@ -374,7 +374,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle added); FAILFAST parse mode so a lossy round-trip fails
     loudly rather than nulling fields. The corrupt-capture PERMISSIVE
     path for real files is ``sources.readers.read_csv`` (quarantine
-    semantics tested in tests/test_sources.py)."""
+    semantics tested in tests/test_sources_pipelines.py)."""
     events = table(spark, sf_dir, "events")
     schema = "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
     # the DEFAULT timestamp text truncates to milliseconds — a silently

@@ -89,3 +89,18 @@ def oracle_sqls(sf_dir: str = DRIVER_SF_DIR) -> dict[str, str]:
         for name, spec in all_queries().items()
         if spec.oracle is not None
     }
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per ``catalog.TABLES`` table over
+    ``sf_dir`` — the database every oracle SQL runs against."""
+    import duckdb
+
+    from ..catalog import TABLES, table_path
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+        )
+    return con

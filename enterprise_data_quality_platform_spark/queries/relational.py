@@ -944,7 +944,7 @@ def mart_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows the packed-map builds are pure overhead (sf0.1 A/B: 0.68 vs
     1.22 s) so the gate picks the plain thr+SHJ form; above it the
     packed form's removed fact shuffle wins. Both sides value-identical
-    (pinned in tests/test_packedmap_gate.py).
+    (pinned in tests/test_packedmap.py).
 
     Packed plan (r8 rewrite — PACKED THRESHOLD MAP, the packed-map family's
     first deployment on DERIVED-AGGREGATE values): the per-part stats
@@ -1884,7 +1884,7 @@ def mart_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy (VERDICT r8 item 2): below ~20M probe rows the packed-map
     builds are pure overhead (sf0.1: 0.63→0.98 s) so the gate picks the
     plain 3-way-join form; above it the packed form wins. Both sides
-    value-identical (tests/test_packedmap_gate.py).
+    value-identical (tests/test_packedmap.py).
 
     Packed plan (r8 rewrite — PACKED DATE-CODE MAP, the packedmap family): the
     orders side collapses to a 16-bit day-code word map built from orders
@@ -2100,7 +2100,7 @@ def mart_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy (VERDICT r8 item 2): below ~20M probe rows the packed-map
     builds are pure overhead (sf0.1: 0.62→1.05 s) so the gate picks the
     plain star-join form; above it the packed form's zero fact shuffles
-    win. Both sides value-identical (tests/test_packedmap_gate.py).
+    win. Both sides value-identical (tests/test_packedmap.py).
 
     Packed plan (r8 rewrite — COMPOSED PACKED NATION-CODE MAPS; ZERO fact
     shuffles): every join here ultimately feeds the probe a single small

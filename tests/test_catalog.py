@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import datetime
 import os
+import tempfile
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -18,8 +20,13 @@ import pytest
 
 from enterprise_data_quality_platform_spark import catalog
 from enterprise_data_quality_platform_spark.catalog import footer, raw_table
+from enterprise_data_quality_platform_spark.session import (
+    RUNTIME_CONFS,
+    configure_session,
+    drop_stale_session_dirs,
+)
 
-from tests.conftest import SF_ORACLE, SF_SMALL
+from conftest import SF_ORACLE, SF_SMALL
 
 TIERS = (SF_SMALL, SF_ORACLE, os.path.join(os.path.dirname(SF_SMALL), "sf0.1"))
 
@@ -278,3 +285,37 @@ def test_footer_of_only_for_a_bare_read(spark, tmp_path):
     _write(tmp_path, "lineitem", pa.table({"l_partkey": [7, 8, 9]}))
     assert footer_of(df) is None  # listed before the rewrite
     assert footer_of(table(spark, sf, "lineitem")).bounds["l_partkey"] == (7, 9)
+
+
+def test_drop_stale_session_dirs_mtime_gate(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    old_dir = tmp_path / "edqp-orc-app-old"
+    new_dir = tmp_path / "edqp-orc-app-live"
+    keep_dir = tmp_path / "edqp-orc-app-current"
+    for d in (old_dir, new_dir, keep_dir):
+        d.mkdir()
+    stale_ts = time.time() - 7 * 3600
+    os.utime(old_dir, (stale_ts, stale_ts))
+
+    drop_stale_session_dirs("edqp-orc", keep=str(keep_dir))
+    assert not old_dir.exists()  # 7h old: dead session, removed
+    assert new_dir.exists()  # fresh mtime: plausibly live, kept
+    assert keep_dir.exists()  # current session's own dir, kept
+
+
+def test_user_conf_overrides_survive_table_reads(spark):
+    """configure_session applies engine defaults ONCE per session: a conf
+    the caller tunes between table() reads must survive the next read
+    (previously every read re-applied RUNTIME_CONFS and silently reverted
+    the override, so a tuned skew demo planned a broadcast join)."""
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    engine_default = RUNTIME_CONFS[key]
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        catalog.table(spark, SF_SMALL, "nation").count()
+        assert spark.conf.get(key) == "-1"  # override survived the read
+        configure_session(spark, force=True)
+        assert spark.conf.get(key) == engine_default  # force re-applies
+    finally:
+        spark.conf.set(key, old)

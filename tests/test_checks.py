@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.checks import (
     Check,
@@ -16,10 +17,15 @@ from enterprise_data_quality_platform_spark.checks import (
     run_suite,
     suite_report_df,
 )
+from enterprise_data_quality_platform_spark.checks.compiler import (
+    compile_agg_check,
+    strftime_to_spark,
+)
 from enterprise_data_quality_platform_spark.checks.runner import (
     ValidationGateError,
     summarize,
 )
+from enterprise_data_quality_platform_spark.sources.writers import write_violations
 
 AUTHORIZED_REGIONS = ("North America", "Europe", "Asia Pacific")
 
@@ -520,12 +526,6 @@ def test_unique_packed_counter_matches_plain_plan(spark):
     key>>6, bit_or of the key's bit) returns the exact plain-plan counts —
     duplicates, NULL keys (skipped from violations, kept in total),
     negative keys (two's-complement word/bit mapping) all included."""
-    import pyspark.sql.functions as F
-
-    from enterprise_data_quality_platform_spark.checks.compiler import (
-        compile_agg_check,
-    )
-
     rows = [(1,), (1,), (2,), (None,), (None,), (-9,), (-9,), (-16,), (3,)]
     df = spark.createDataFrame(rows, "k long")
     check = Check("u", "unique", "t", column="k")
@@ -757,11 +757,6 @@ def test_plan_suite_builds_no_frame(spark, tmp_path, monkeypatch):
 def test_compile_builds_only_its_own_metric(spark, monkeypatch):
     """A check compiles only the aggregate its type asks for: with
     ``F.stddev`` raising, freshness and min_between still compile."""
-    from pyspark.sql import functions as F
-
-    from enterprise_data_quality_platform_spark.checks.compiler import (
-        compile_agg_check,
-    )
 
     def no_stddev(*args, **kwargs):
         raise AssertionError("F.stddev built")
@@ -919,3 +914,450 @@ def test_compiler_runs_no_spark_action():
     assert _spark_actions(Path(compiler.__file__).read_text()) == []
     assert _spark_actions("row = df.agg(x).collect()[0]") == ["line 1: .collect("]
     assert _spark_actions("n = df.count()\nF.first('a')") == ["line 1: .count("]
+
+
+def _unique_violations(spark, values):
+    df = spark.createDataFrame([Row(a=v) for v in values], "a int")
+    [r] = run_suite({"t": df}, [Check("u", "unique", "t", column="a")])
+    return r
+
+
+def test_unique_dup_plus_null(spark):
+    # [1, 1, NULL]: the duplicate must count; the NULL row is skipped
+    r = _unique_violations(spark, [1, 1, None])
+    assert r.status == "fail" and r.violations == 1
+
+
+def test_unique_all_distinct_plus_null(spark):
+    # [1, 2, 3, NULL]: no duplicates — violations must be 0, never -1
+    r = _unique_violations(spark, [1, 2, 3, None])
+    assert r.status == "pass" and r.violations == 0
+
+
+def test_compound_unique_null_fields(spark):
+    rows = [
+        Row(a=1, b="x"),
+        Row(a=1, b="x"),  # real duplicate
+        Row(a=2, b=None),
+        Row(a=2, b=None),  # NULL-keyed rows are skipped, not duplicates
+        Row(a=3, b="y"),
+    ]
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df}, [Check("cu", "compound_unique", "t", columns=("a", "b"))]
+    )
+    assert r.violations == 1
+
+
+def test_strftime_translation():
+    assert strftime_to_spark("%Y-%m-%d") == "yyyy-MM-dd"
+    assert strftime_to_spark("%Y-%m-%dT%H:%M:%S") == "yyyy-MM-dd'T'HH:mm:ss"
+    assert strftime_to_spark("yyyy-MM-dd") == "yyyy-MM-dd"  # passthrough
+    with pytest.raises(ValueError):
+        strftime_to_spark("%Q")
+
+
+def test_match_strftime_with_ge_format(spark):
+    df = spark.createDataFrame(
+        [Row(d="2025-01-01"), Row(d="2025-02-30"), Row(d="not a date")]
+    )
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "dates",
+                "match_strftime",
+                "t",
+                column="d",
+                params={"format": "%Y-%m-%d"},
+            )
+        ],
+    )
+    # 2025-02-30 is invalid, "not a date" unparseable → 2 violations
+    assert r.violations == 2 and r.total == 3
+
+
+def test_kl_divergence_high_cardinality(spark):
+    df = spark.range(5000).select(F.col("id").alias("k"))
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "kl",
+                "kl_divergence_less_than",
+                "t",
+                column="k",
+                params={
+                    "expected_distribution": {"0": 0.5, "1": 0.5},
+                    "threshold": 0.1,
+                },
+            )
+        ],
+    )
+    # the point: it executes in-plan (no driver histogram) and reports
+    # a finite KL over the expected support, even at high cardinality
+    assert r.error_message is None
+    assert r.total == 5000
+
+
+def test_kl_divergence_skew_fails(spark):
+    rows = [Row(t="a")] * 99 + [Row(t="b")]
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "kl",
+                "kl_divergence_less_than",
+                "t",
+                column="t",
+                params={
+                    "expected_distribution": {"a": 0.5, "b": 0.5},
+                    "threshold": 0.1,
+                },
+            )
+        ],
+    )
+    assert r.status == "fail"
+    assert float(r.observed["kl_divergence"]) > 0.5
+
+
+def test_kl_divergence_uniform_pass(spark):
+    rows = [Row(t=x) for x in ("a", "b", "c", "d", "e") * 20]
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "kl",
+                "kl_divergence_less_than",
+                "t",
+                column="t",
+                params={
+                    "expected_distribution": {k: 0.2 for k in "abcde"},
+                    "threshold": 0.01,
+                },
+            )
+        ],
+    )
+    assert r.status == "pass"
+    assert float(r.observed["kl_divergence"]) == pytest.approx(0.0, abs=1e-9)
+
+
+def test_pair_equal_check(spark):
+    df = spark.createDataFrame([Row(a=1, b=1), Row(a=2, b=3), Row(a=None, b=1)])
+    [r] = run_suite({"t": df}, [Check("eq", "pair_equal", "t", columns=("a", "b"))])
+    assert r.violations == 1 and r.total == 3  # NULL rows skipped
+
+
+def test_multicolumn_sum_equal_check(spark):
+    df = spark.createDataFrame([Row(a=1, b=9), Row(a=5, b=5), Row(a=4, b=7)])
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "sums to 10",
+                "multicolumn_sum_equal",
+                "t",
+                columns=("a", "b"),
+                params={"sum_total": 10},
+            )
+        ],
+    )
+    assert r.violations == 1
+
+
+def test_distinct_equal_set_check(spark):
+    df = spark.createDataFrame([Row(s=x) for x in ("a", "b", "b", "z")])
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "exact domain",
+                "distinct_equal_set",
+                "t",
+                column="s",
+                params={"values": ("a", "b", "c")},
+            )
+        ],
+    )
+    # 'c' missing + 'z' extra = 2 violations
+    assert r.status == "fail" and r.violations == 2
+
+
+def test_distinct_contain_set_pass(spark):
+    df = spark.createDataFrame([Row(s=x) for x in ("a", "b", "c", "z")])
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "coverage",
+                "distinct_contain_set",
+                "t",
+                column="s",
+                params={"values": ("a", "b", "c")},
+            )
+        ],
+    )
+    assert r.status == "pass" and r.violations == 0  # extras allowed
+
+
+def test_z_score_check(spark):
+    vals = [10.0] * 50 + [11.0] * 49 + [1000.0]
+    df = spark.createDataFrame([Row(v=v) for v in vals])
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "no outliers",
+                "z_score_less_than",
+                "t",
+                column="v",
+                params={"threshold": 3.0},
+            )
+        ],
+    )
+    assert r.status == "fail" and r.violations == 1 and r.total == 100
+
+
+def test_monotonic_decreasing_check(spark):
+    df = spark.createDataFrame(
+        [Row(k=1, seq=i, v=x) for i, x in enumerate([9, 7, 7, 8, 3])]
+    )
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "desc",
+                "monotonic",
+                "t",
+                column="v",
+                params={"order_by": "seq", "partition_by": "k", "decreasing": True},
+            )
+        ],
+    )
+    assert r.violations == 1  # 7 -> 8 breaks non-strict decreasing
+
+
+def test_monotonic_strictly_increasing(spark):
+    df = spark.createDataFrame(
+        [Row(k=1, seq=i, v=x) for i, x in enumerate([1, 2, 2, 5])]
+    )
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "strict asc",
+                "monotonic",
+                "t",
+                column="v",
+                params={"order_by": "seq", "partition_by": "k", "strictly": True},
+            )
+        ],
+    )
+    assert r.violations == 1  # the 2 -> 2 tie
+
+
+def test_row_condition_scopes_check(spark):
+    rows = [
+        Row(seg="gold", bal=100.0),
+        Row(seg="gold", bal=-5.0),   # violates, in scope
+        Row(seg="lead", bal=-50.0),  # violates but OUT of scope
+        Row(seg="gold", bal=7.0),
+    ]
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "gold balances non-negative",
+                "values_between",
+                "t",
+                column="bal",
+                params={"min": 0, "row_condition": "seg = 'gold'"},
+            )
+        ],
+    )
+    # scoped: 3 gold rows total, 1 violation; the lead row is ignored
+    assert r.total == 3 and r.violations == 1 and r.status == "fail"
+
+
+def test_row_condition_scopes_sample_and_quarantine(tmp_path, spark):
+    rows = [
+        Row(seg="gold", region="Mars"),
+        Row(seg="lead", region="Pluto"),
+        Row(seg="gold", region="Europe"),
+    ]
+    df = spark.createDataFrame(rows)
+    check = Check(
+        "gold regions",
+        "values_in_set",
+        "t",
+        column="region",
+        params={"values": ("Europe",), "row_condition": "seg = 'gold'"},
+    )
+    [r] = run_suite({"t": df}, [check])
+    assert r.violations == 1
+    assert "Mars" in r.observed["sample"] and "Pluto" not in r.observed["sample"]
+    path = str(tmp_path / "q")
+    write_violations(df, check, path)
+    back = spark.read.parquet(path).collect()
+    assert [b["region"] for b in back] == ["Mars"]  # scoped quarantine
+
+
+def test_chi_square_uniform_pass(spark):
+    rows = [Row(t=x) for x in ("a", "b", "c", "d") * 25]
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "chi2",
+                "chi_square_test",
+                "t",
+                column="t",
+                params={
+                    "expected_distribution": {k: 0.25 for k in "abcd"},
+                    "critical_value": 7.815,  # chi2(0.95, dof=3)
+                },
+            )
+        ],
+    )
+    assert r.status == "pass"
+    assert float(r.observed["chi_square"]) == pytest.approx(0.0, abs=1e-9)
+
+
+def test_chi_square_skew_fails(spark):
+    rows = [Row(t="a")] * 90 + [Row(t="b")] * 10
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "chi2",
+                "chi_square_test",
+                "t",
+                column="t",
+                params={
+                    "expected_distribution": {"a": 0.5, "b": 0.5},
+                    "critical_value": 3.841,  # chi2(0.95, dof=1)
+                },
+            )
+        ],
+    )
+    # statistic = (90-50)^2/50 + (10-50)^2/50 = 64 >> 3.841
+    assert r.status == "fail"
+    assert float(r.observed["chi_square"]) == pytest.approx(64.0, abs=1e-6)
+
+
+def test_chi_square_absent_category_counts(spark):
+    rows = [Row(t="a")] * 100  # 'b' expected but absent
+    df = spark.createDataFrame(rows)
+    [r] = run_suite(
+        {"t": df},
+        [
+            Check(
+                "chi2",
+                "chi_square_test",
+                "t",
+                column="t",
+                params={
+                    "expected_distribution": {"a": 0.5, "b": 0.5},
+                    "critical_value": 3.841,
+                },
+            )
+        ],
+    )
+    # (100-50)^2/50 + (0-50)^2/50 = 50 + 50 = 100
+    assert r.status == "fail"
+    assert float(r.observed["chi_square"]) == pytest.approx(100.0, abs=1e-6)
+
+
+def test_categorical_check_matches_inline(spark):
+    """categorical=True routes a row-condition check through a distinct-
+    value groupBy factor; result must be identical to the inline path,
+    including nulls, mostly, and row_condition scoping."""
+    rows = (
+        [Row(v="1-URGENT", seg="gold")] * 5
+        + [Row(v="9-BOGUS", seg="gold")] * 3
+        + [Row(v=None, seg="gold")] * 2
+        + [Row(v="9-BOGUS", seg="bronze")] * 7
+    )
+    df = spark.createDataFrame(rows)
+    for extra in (
+        {},
+        {"mostly": 0.5},
+        {"row_condition": "seg = 'gold'"},
+    ):
+        base = Check(
+            "rx", "match_regex", "t", column="v",
+            params={"regex": r"^\d-[A-Z]+$", **extra},
+        )
+        cat = Check(
+            "rx", "match_regex", "t", column="v",
+            params={"regex": r"^\d-[A-Z]+$", "categorical": True, **extra},
+        )
+        [a] = run_suite({"t": df}, [base])
+        [b] = run_suite({"t": df}, [cat])
+        assert (a.status, a.violations, a.total) == (
+            b.status,
+            b.violations,
+            b.total,
+        ), extra
+
+
+def test_categorical_pair_check(spark):
+    df = spark.createDataFrame(
+        [Row(a=2, b=1)] * 4 + [Row(a=1, b=2)] * 3 + [Row(a=None, b=1)] * 2
+    )
+    base = Check("pair", "pair_greater_than", "t", columns=("a", "b"))
+    cat = Check(
+        "pair", "pair_greater_than", "t", columns=("a", "b"),
+        params={"categorical": True},
+    )
+    [x] = run_suite({"t": df}, [base])
+    [y] = run_suite({"t": df}, [cat])
+    assert (x.status, x.violations, x.total) == (y.status, y.violations, y.total)
+
+
+def test_isolation_retry_uses_own_table_frame(spark):
+    """A fused factor that dies at runtime retries its members SOLO — and
+    the solo frame must be the member's OWN table, not whichever table the
+    loop visited last (late-binding closure bug: same column names made
+    the retried check silently aggregate the wrong table)."""
+    # table a: v averages 1.0 and carries the poison column (ANSI cast of
+    # 'not-a-number' inside avg throws at RUNTIME, after analysis passes)
+    a = spark.createDataFrame(
+        [Row(v=1.0, s="not-a-number"), Row(v=1.0, s="still-not")]
+    )
+    # table b: same column names, wildly different values — the bug would
+    # aggregate b for the retried a-check (avg 100 -> spurious fail)
+    b = spark.createDataFrame([Row(v=100.0, s="9.0"), Row(v=100.0, s="9.0")])
+    checks = [
+        Check("poison_a", "mean_between", "a", "s", params={"min": 0, "max": 1}),
+        Check("mean_a", "mean_between", "a", "v", params={"min": 0.5, "max": 1.5}),
+        Check("mean_b", "mean_between", "b", "v", params={"min": 50, "max": 150}),
+    ]
+    results = {r.check_name: r for r in run_suite({"a": a, "b": b}, checks)}
+    assert results["poison_a"].status == "error"  # the ANSI throw isolates
+    # the load-bearing assertion: retried against table a, observed mean 1.0
+    assert results["mean_a"].status == "pass", results["mean_a"].error_message
+    assert float(results["mean_a"].observed.get("mean")) == 1.0
+    assert results["mean_b"].status == "pass"
+
+
+def test_approx_unique_check_fuses_and_detects_duplication(spark):
+    """approx=True unique: an HLL expression in the FUSED aggregate (no
+    frame_builder / per-key shuffle), passing on key-like data and failing
+    on gross duplication — the 100 TB suite posture."""
+    chk = Check("k unique", "unique", "t", column="k", params={"approx": True})
+    compiled = compile_agg_check(chk, prefix="c0")
+    assert compiled.frame_builder is None and compiled.exprs  # fuses
+
+    unique_df = spark.range(5000).withColumnRenamed("id", "k")
+    dup_df = spark.range(5000).select((F.col("id") % 10).alias("k"))
+    ok = run_suite({"t": unique_df}, [chk])[0]
+    bad = run_suite({"t": dup_df}, [chk])[0]
+    assert ok.status == "pass", ok.observed
+    assert bad.status == "fail" and bad.violations > 4000
+    assert str(bad.observed["approx"]) == "True"  # observed is stringified

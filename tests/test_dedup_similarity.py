@@ -4,6 +4,8 @@ against hand-built duplicates and property checks (idempotence)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -15,12 +17,15 @@ from enterprise_data_quality_platform_spark.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
+from enterprise_data_quality_platform_spark.dedup.jaccard import containment_pairs
+from enterprise_data_quality_platform_spark.queries import dedup_ops
+from enterprise_data_quality_platform_spark.queries import embeddings as em
 from enterprise_data_quality_platform_spark.similarity import (
     brute_force_topk,
     lsh_ann_topk,
 )
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, plan_of
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -504,3 +509,24 @@ def test_semantic_dedup_recall_vs_brute_force(spark):
     assert recalls[1] <= recalls[2] <= recalls[3]
     assert recalls[3] >= 0.9  # the benched setting (dedup_semantic_docs)
     assert recalls[3] > recalls[1]  # multiprobe genuinely buys recall
+
+
+def test_packed_score_division_is_exact(spark):
+    """kept_score_e4 = packed div 1e12 must use integer division: packed
+    exceeds 2^53, where the float quotient rounds 9999 up to 10000 for
+    small doc_ids. Mirrors dedup_keep_best_quality's select."""
+    B = 1000000000000
+    rows = [
+        Row(packed=9999 * B + (B - 1)),  # score 9999, doc_id 1 — the trap
+        Row(packed=10000 * B + (B - 5)),
+        Row(packed=0 * B + (B - 7)),
+    ]
+    df = spark.createDataFrame(rows)
+    got = [
+        (r["score"], r["doc_id"])
+        for r in df.select(
+            F.expr(f"packed div {B}").alias("score"),
+            (F.lit(B) - F.col("packed") % F.lit(B)).cast("long").alias("doc_id"),
+        ).collect()
+    ]
+    assert got == [(9999, 1), (10000, 5), (0, 7)]

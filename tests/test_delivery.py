@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import threading
+import urllib.request
 
 import pytest
 
@@ -129,3 +130,25 @@ def test_http_transport_localhost_round_trip_and_5xx_retry():
         assert len(calls) == 2  # 500 then success
     finally:
         srv.shutdown()
+
+
+def test_http_transport_accepts_json_array_body(monkeypatch):
+    """A 2xx response whose body is a JSON array (or scalar) is still a
+    success — it must not raise TypeError assigning _status."""
+
+    class FakeResp:
+        status = 200
+
+        def read(self):
+            return json.dumps([{"id": 1}, {"id": 2}]).encode()
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *a):
+            return False
+
+    monkeypatch.setattr(urllib.request, "urlopen", lambda req, timeout=None: FakeResp())
+    out = HttpTransport(retries=1).post("http://example.invalid/hook", {"x": 1}, {})
+    assert out["_status"] == 200
+    assert out["raw"] == [{"id": 1}, {"id": 2}]

@@ -1,9 +1,3 @@
-"""Crafted-input tests for the eighth-pass operators: snapshot diff (CDC),
-Benford profile, correlation, moving-average frames, distribution windows,
-market-basket affinity, unpivot, and event transitions. Oracle parity at
-sf0.01 is covered by tools/parity.py + tests/test_parity.py; these pin the
-semantics on inputs where the right answer is computable by hand."""
-
 from __future__ import annotations
 
 import datetime
@@ -11,13 +5,17 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import minute
+
 from enterprise_data_quality_platform_spark.operators.snapshot import (
     diff_snapshots,
     diff_summary,
 )
-
-
-# ---------------------------------------------------------------- snapshot
+from enterprise_data_quality_platform_spark.queries import (
+    dq,
+    events as ev,
+    relational as rel,
+)
 
 
 def _snap(spark, rows):
@@ -48,7 +46,7 @@ def test_snapshot_diff_null_value_is_not_equal_to_literal(spark):
 
 def test_snapshot_diff_value_swap_between_columns_is_changed(spark):
     """xxhash64 SKIPS null inputs, so without the per-column isnull flags
-    (r9 native-fingerprint rewrite) a value moving between two columns —
+    of the native fingerprint, a value moving between two columns —
     (x, NULL) -> (NULL, x) — would hash identically and classify
     'unchanged'."""
     old = _snap(spark, [(1, 7, None)])
@@ -82,9 +80,9 @@ def test_snapshot_diff_map_columns_supported(spark):
 
 def test_snapshot_diff_map_entry_order_insensitive(spark):
     """Two logically-equal maps built in DIFFERENT entry orders must
-    classify 'unchanged' (VERDICT r9 finding: the old string-cast
-    fallback stringified entries in internal order, so map_concat vs
-    parquet-round-trip orderings spuriously classified 'changed')."""
+    classify 'unchanged' (a string-cast fallback stringifies entries in
+    internal order, so map_concat vs parquet-round-trip orderings would
+    spuriously classify 'changed')."""
     old = spark.range(1).select(
         F.col("id").alias("key"),
         F.create_map(
@@ -128,7 +126,7 @@ def test_snapshot_diff_null_map_vs_empty_map(spark):
 
 
 def test_snapshot_diff_nested_map_does_not_crash(spark):
-    """ADVICE r9 (medium): xxhash64 rejects MapType RECURSIVELY — an
+    """xxhash64 rejects MapType RECURSIVELY — an
     array<map<..>> compare column must take the string-cast sentinel
     branch, not fail analysis."""
     old = spark.createDataFrame(
@@ -157,13 +155,8 @@ def test_snapshot_summary_counts(spark):
     assert got == {"added": 2, "removed": 2, "changed": 3, "unchanged": 5}
 
 
-# ----------------------------------------------------------------- benford
-
-
 def test_benford_digit_extraction_and_shares(spark, sf_dir):
-    from enterprise_data_quality_platform_spark.queries.dq import dq_benford
-
-    rows = dq_benford(spark, sf_dir).collect()
+    rows = dq.dq_benford(spark, sf_dir).collect()
     digits = [r.digit for r in rows]
     assert digits == sorted(digits) and set(digits) <= set("123456789")
     assert abs(sum(r.share for r in rows) - 1.0) < 1e-9
@@ -171,38 +164,28 @@ def test_benford_digit_extraction_and_shares(spark, sf_dir):
         assert r.deviation == pytest.approx(r.share - r.benford_expected)
 
 
-# ------------------------------------------------------------- correlation
-
-
-def test_correlation_exact_on_linear_data(spark, monkeypatch, tmp_path):
+def test_correlation_exact_on_linear_data(spark, crafted_tables, tmp_path):
     """y = 3x exactly -> r == 1.0, slope == 3.0 bit-exact (all moments are
     exact decimals; the closed form divides identical quantities)."""
     df = spark.createDataFrame(
         [(float(i), float(3 * i)) for i in range(1, 101)],
         "l_quantity double, l_extendedprice double",
     )
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
-    monkeypatch.setattr(dq, "table", lambda s, d, n: df)
+    crafted_tables(dq, df)
     row = dq.dq_correlation(spark, "unused").first()
     assert row.n == 100
     assert row.pearson_r == 1.0
     assert row.slope == 3.0
 
 
-# ------------------------------------------------------ moving average / windows
-
-
-def test_ma7_is_trailing_and_partial_at_series_start(spark, monkeypatch):
+def test_ma7_is_trailing_and_partial_at_series_start(spark, crafted_tables):
     days = [datetime.datetime(2024, 1, d) for d in range(1, 11)]
     # revenue 100, 200, ..., 1000 (one order per day)
     df = spark.createDataFrame(
         [(d, float((i + 1) * 100)) for i, d in enumerate(days)],
         "o_orderdate timestamp, o_totalprice double",
     )
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
-    monkeypatch.setattr(rel, "table", lambda s, d, n: df)
+    crafted_tables(rel, df)
     rows = rel.mart_daily_revenue_ma7(spark, "unused").collect()
     assert [r.revenue for r in rows] == [float((i + 1) * 100) for i in range(10)]
     # day 1: avg(100); day 3: avg(100..300)=200; day 10: avg(400..1000)=700
@@ -212,11 +195,7 @@ def test_ma7_is_trailing_and_partial_at_series_start(spark, monkeypatch):
 
 
 def test_quartiles_ntile_and_percent_rank(spark, sf_dir):
-    from enterprise_data_quality_platform_spark.queries.relational import (
-        mart_nation_revenue_quartiles,
-    )
-
-    rows = mart_nation_revenue_quartiles(spark, sf_dir).collect()
+    rows = rel.mart_nation_revenue_quartiles(spark, sf_dir).collect()
     n = len(rows)
     assert sorted({r.quartile for r in rows}) == [1, 2, 3, 4]
     # quartiles are monotone along the revenue-desc order and balanced ±1
@@ -229,19 +208,14 @@ def test_quartiles_ntile_and_percent_rank(spark, sf_dir):
     assert rows[0].cume == pytest.approx(1.0 / n)
 
 
-# ---------------------------------------------------------------- affinity
-
-
-def test_part_affinity_counts_pairs_within_basket(spark, monkeypatch):
+def test_part_affinity_counts_pairs_within_basket(spark, crafted_tables):
     rows = [
         (1, 10), (1, 20), (1, 30),   # basket 1 -> (10,20) (10,30) (20,30)
         (2, 10), (2, 20),            # basket 2 -> (10,20)
         (3, 40),                     # singleton -> nothing
     ]
     df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
-    monkeypatch.setattr(rel, "table", lambda s, d, n: df)
+    crafted_tables(rel, df)
     got = {
         (r.part_a, r.part_b): r.together_count
         for r in rel.mart_part_affinity(spark, "unused").collect()
@@ -249,44 +223,27 @@ def test_part_affinity_counts_pairs_within_basket(spark, monkeypatch):
     assert got == {(10, 20): 2, (10, 30): 1, (20, 30): 1}
 
 
-# ----------------------------------------------------------------- unpivot
-
-
 def test_unpivot_produces_one_row_per_metric(spark, sf_dir):
-    from enterprise_data_quality_platform_spark.queries.relational import (
-        stg_unpivot_metrics,
-    )
-
-    rows = stg_unpivot_metrics(spark, sf_dir).collect()
+    rows = rel.stg_unpivot_metrics(spark, sf_dir).collect()
     assert [r.metric for r in rows] == [
         "discount", "extendedprice", "quantity", "tax",
     ]
     assert len({r.n_rows for r in rows}) == 1  # all four same row count
 
 
-# ------------------------------------------------------------- transitions
-
-
-def test_user_transitions_matrix_and_probabilities(spark, monkeypatch):
-    t0 = datetime.datetime(2024, 1, 1)
-
-    def ts(m):
-        return t0 + datetime.timedelta(minutes=m)
-
+def test_user_transitions_matrix_and_probabilities(spark, crafted_tables):
     rows = [
         # user 1: view -> click -> purchase
-        (1, 1, "view", ts(0)), (2, 1, "click", ts(1)), (3, 1, "purchase", ts(2)),
+        (1, 1, "view", minute(0)), (2, 1, "click", minute(1)), (3, 1, "purchase", minute(2)),
         # user 2: view -> view
-        (4, 2, "view", ts(0)), (5, 2, "view", ts(1)),
+        (4, 2, "view", minute(0)), (5, 2, "view", minute(1)),
         # user 3: single event, no transition
-        (6, 3, "click", ts(0)),
+        (6, 3, "click", minute(0)),
     ]
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     )
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = {
         (r.from_type, r.to_type): (r.transition_count, r.transition_prob)
         for r in ev.events_user_transitions(spark, "unused").collect()
@@ -298,7 +255,7 @@ def test_user_transitions_matrix_and_probabilities(spark, monkeypatch):
     }
 
 
-def test_user_transitions_tiebreak_on_event_id(spark, monkeypatch):
+def test_user_transitions_tiebreak_on_event_id(spark, crafted_tables):
     """Equal timestamps must order by event_id so the matrix is
     deterministic under shuffle/partitioning changes."""
     t = datetime.datetime(2024, 1, 1)
@@ -306,8 +263,6 @@ def test_user_transitions_tiebreak_on_event_id(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     )
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = ev.events_user_transitions(spark, "unused").collect()
     assert [(r.from_type, r.to_type) for r in got] == [("view", "click")]

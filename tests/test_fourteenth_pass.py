@@ -1,37 +1,18 @@
-"""Crafted-input + plan tests for the fourteenth-pass operators: the
-Q13/Q22/Q15/Q10/Q6-shaped marts (custdist, idle-rich audit, top supplier
-with ties, returned-item report, discount what-if)."""
-
 from __future__ import annotations
 
 import datetime
+import re
 
-from pyspark.sql import functions as F
+from conftest import plan_of
 
-from conftest import SF_SMALL
-
-from enterprise_data_quality_platform_spark.queries import all_queries
-
-SPECS = all_queries()
-
-
-def plan_of(spark, name: str) -> str:
-    df = SPECS[name].fn(spark, SF_SMALL)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+from enterprise_data_quality_platform_spark.queries import relational as rel
 
 
 def _d(y: int, m: int = 1, d: int = 1) -> datetime.datetime:
     return datetime.datetime(y, m, d)
 
 
-# ------------------------------------------------------------- custdist
-
-
-def test_custdist_counts_zero_order_customers(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_custdist_counts_zero_order_customers(spark, crafted_tables):
     cust = spark.createDataFrame([(i,) for i in range(1, 6)], "c_custkey long")
     # cust 1: two non-urgent; cust 2: one urgent (filtered -> zero);
     # cust 3: one of each -> one; cust 4,5: none -> zero
@@ -46,7 +27,7 @@ def test_custdist_counts_zero_order_customers(spark, monkeypatch):
         "o_orderkey long, o_custkey long, o_orderpriority string",
     )
     tables = {"customer": cust, "orders": orders}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: tables[n])
+    crafted_tables(rel, tables)
     got = {r.c_count: r.custdist for r in rel.mart_custdist(spark, "x").collect()}
     assert got == {0: 3, 1: 1, 2: 1}
 
@@ -65,12 +46,7 @@ def test_custdist_aggregates_orders_before_join(spark):
     assert "HashAggregate" in plan[:join_at] or plan.count("HashAggregate") >= 3
 
 
-# ------------------------------------------------------------- idle rich
-
-
-def test_idle_rich_filters_and_anti_joins(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_idle_rich_filters_and_anti_joins(spark, crafted_tables):
     # avg positive balance = (100 + 300)/2 = 200
     cust = spark.createDataFrame(
         [
@@ -86,18 +62,16 @@ def test_idle_rich_filters_and_anti_joins(spark, monkeypatch):
         "o_orderkey long, o_custkey long, o_orderdate timestamp",
     )
     tables = {"customer": cust, "orders": orders}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_idle_rich_customers(spark, "x").collect()
     assert [(r.c_nationkey, r.numcust, r.total_acctbal) for r in rows] == [
         (1, 1, 300.0)
     ]
 
 
-def test_idle_rich_average_boundary_is_strict(spark, monkeypatch):
+def test_idle_rich_average_boundary_is_strict(spark, crafted_tables):
     """Balance exactly equal to the average must NOT pass (strict >) —
     pinned via integer cross-multiplication on both engines."""
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
     cust = spark.createDataFrame(
         [(1, 0, 200.0), (2, 0, 200.0)],
         "c_custkey long, c_nationkey int, c_acctbal double",
@@ -106,7 +80,7 @@ def test_idle_rich_average_boundary_is_strict(spark, monkeypatch):
         [], "o_orderkey long, o_custkey long, o_orderdate timestamp"
     )
     tables = {"customer": cust, "orders": orders}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: tables[n])
+    crafted_tables(rel, tables)
     assert rel.mart_idle_rich_customers(spark, "x").count() == 0
 
 
@@ -116,12 +90,7 @@ def test_idle_rich_broadcasts_scalar_factor(spark):
     assert "LeftAnti" in plan
 
 
-# ------------------------------------------------------------- top supplier
-
-
-def test_top_supplier_keeps_ties(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_top_supplier_keeps_ties(spark, crafted_tables):
     li = spark.createDataFrame(
         [
             # suppliers 1 and 2 tie at 200.0 net; supplier 3 lower;
@@ -139,15 +108,15 @@ def test_top_supplier_keeps_ties(spark, monkeypatch):
         "s_suppkey long, s_name string",
     )
     tables = {"lineitem": li, "supplier": supp}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_top_supplier(spark, "x").collect()
     assert [(r.s_suppkey, r.total_revenue) for r in rows] == [(1, 200.0), (2, 200.0)]
 
 
 def test_top_supplier_single_scan_and_pushed_filter(spark):
-    # scalar MAX via a Window over the aggregated |suppliers| frame: the
-    # r4 broadcast-factor form re-derived the max from a SECOND aggregate
-    # subtree and scanned lineitem twice (plan text prints each actual
+    # scalar MAX via a Window over the aggregated |suppliers| frame: a
+    # broadcast-factor form would re-derive the max from a SECOND aggregate
+    # subtree and scan lineitem twice (plan text prints each actual
     # scan's path twice — Location + metadata line)
     plan = plan_of(spark, "mart_top_supplier")
     assert plan.count("lineitem.parquet") <= 2  # ONE fact scan
@@ -155,12 +124,7 @@ def test_top_supplier_single_scan_and_pushed_filter(spark):
     assert "PushedFilters" in plan and "l_shipdate" in plan
 
 
-# ------------------------------------------------------------- returned items
-
-
-def test_returned_revenue_filters_flag_and_year(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_returned_revenue_filters_flag_and_year(spark, crafted_tables):
     cust = spark.createDataFrame(
         [(1, "c1", 0), (2, "c2", 1)], "c_custkey long, c_name string, c_nationkey int"
     )
@@ -180,7 +144,7 @@ def test_returned_revenue_filters_flag_and_year(spark, monkeypatch):
         [(0, "n0"), (1, "n1")], "n_nationkey int, n_name string"
     )
     tables = {"customer": cust, "orders": orders, "lineitem": li, "nation": nation}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_returned_revenue(spark, "x").collect()
     assert [(r.c_custkey, r.nation_name, r.revenue, r.n_lines) for r in rows] == [
         (1, "n0", 90.0, 1)
@@ -193,12 +157,7 @@ def test_returned_revenue_topk_no_global_sort(spark):
     assert "l_returnflag" in plan[plan.find("PushedFilters") :][:4000]
 
 
-# ------------------------------------------------------------- discount effect
-
-
-def test_discount_effect_band_and_quantity(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_discount_effect_band_and_quantity(spark, crafted_tables):
     li = spark.createDataFrame(
         [
             (100.0, 0.05, 10.0, _d(1996, 2)),  # kept: 5.0
@@ -209,14 +168,12 @@ def test_discount_effect_band_and_quantity(spark, monkeypatch):
         ],
         "l_extendedprice double, l_discount double, l_quantity double, l_shipdate timestamp",
     )
-    monkeypatch.setattr(rel, "table", lambda s, d, n: li)
+    crafted_tables(rel, li)
     row = rel.mart_discount_effect(spark, "x").collect()[0]
     assert (row.promo_revenue, row.n_lines) == (12.0, 2)
 
 
 def test_discount_effect_single_scan_map_combined(spark):
-    import re
-
     plan = plan_of(spark, "mart_discount_effect")
     assert "Exchange" in plan  # only the 1-row partial exchange
     # one scan node (the formatted tree lists each node twice: summary+detail)
@@ -224,14 +181,7 @@ def test_discount_effect_single_scan_map_combined(spark):
     assert "PushedFilters" in plan
 
 
-# ----------------------------------------------- Q5/Q7/Q8 shapes (pass 22)
-
-
-def test_local_supplier_volume_same_nation_only(spark, monkeypatch):
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_local_supplier_volume_same_nation_only(spark, crafted_tables):
     d = datetime.datetime(1996, 6, 1)
     li = spark.createDataFrame(
         [(10, 1, 100.0, 0.0), (11, 2, 50.0, 0.0)],
@@ -247,16 +197,12 @@ def test_local_supplier_volume_same_nation_only(spark, monkeypatch):
     nation = spark.createDataFrame([(7, "n7"), (8, "n8")], "n_nationkey int, n_name string")
     tables = {"lineitem": li, "orders": orders, "customer": cust,
               "supplier": supp, "nation": nation}
-    monkeypatch.setattr(rel, "table", lambda s, dd, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_local_supplier_volume(spark, "x").collect()
     assert [(r.nation_name, r.revenue, r.n_lines) for r in rows] == [("n7", 100.0, 1)]
 
 
-def test_nation_trade_volume_is_directional(spark, monkeypatch):
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_nation_trade_volume_is_directional(spark, crafted_tables):
     d = datetime.datetime(1996, 6, 1)
     li = spark.createDataFrame(
         [(10, 1, 100.0, 0.0, d), (11, 2, 70.0, 0.0, d)],
@@ -273,7 +219,7 @@ def test_nation_trade_volume_is_directional(spark, monkeypatch):
     )
     tables = {"lineitem": li, "orders": orders, "customer": cust,
               "supplier": supp, "nation": nation}
-    monkeypatch.setattr(rel, "table", lambda s, dd, n: tables[n])
+    crafted_tables(rel, tables)
     got = {
         (r.cust_nation, r.supp_nation): r.volume
         for r in rel.mart_nation_trade_volume(spark, "x").collect()
@@ -281,11 +227,7 @@ def test_nation_trade_volume_is_directional(spark, monkeypatch):
     assert got == {("NATION_9", "NATION_10"): 100.0, ("NATION_10", "NATION_9"): 70.0}
 
 
-def test_brand_market_share_single_aggregate(spark, monkeypatch):
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_brand_market_share_single_aggregate(spark, crafted_tables):
     d = datetime.datetime(1996, 6, 1)
     li = spark.createDataFrame(
         [(10, 1, 100.0, 0.0), (10, 2, 300.0, 0.0), (10, 3, 999.0, 0.0)],
@@ -297,20 +239,17 @@ def test_brand_market_share_single_aggregate(spark, monkeypatch):
         "p_partkey long, p_brand string, p_type string",
     )
     tables = {"lineitem": li, "orders": orders, "part": part}
-    monkeypatch.setattr(rel, "table", lambda s, dd, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_brand_market_share(spark, "x").collect()
     # PROMO line excluded by type filter; share = 100/400
     assert [(r.order_year, r.brand_share) for r in rows] == [(1996, 0.25)]
 
 
-# ------------------------------------------- Q18/Q16/Q21 shapes (pass 23)
-
-
 def test_large_volume_having_then_joinback(spark):
     plan = plan_of(spark, "mart_large_volume_customers")
     assert "TakeOrderedAndProject" in plan
-    # the HAVING threshold is a Filter over the aggregate's output (r8
-    # packed form: per-order sums recovered from 14-bit slots, filtered
+    # the HAVING threshold is a Filter over the aggregate's output (packed
+    # form: per-order sums recovered from 14-bit slots, filtered
     # at > 300 before the joins back to orders/customer)
     assert "qty_sum" in plan and "> 300" in plan
     assert "Window" not in plan
@@ -323,14 +262,10 @@ def test_supplier_part_counts_no_expand_and_anti_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_sole_late_supplier_crafted(spark, monkeypatch):
+def test_sole_late_supplier_crafted(spark, crafted_tables):
     """Order 1: suppliers A late, B on time, multi-supplier -> A waits
     (twice: two late lines). Order 2: A and B both late -> nobody. Order
     3: only A participates -> nobody (EXISTS fails)."""
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
     d0 = datetime.datetime(1996, 1, 1)
     late = datetime.datetime(1996, 6, 1)  # > 90 days
     ok = datetime.datetime(1996, 1, 15)
@@ -350,6 +285,6 @@ def test_sole_late_supplier_crafted(spark, monkeypatch):
         [(100, "supp_a"), (200, "supp_b")], "s_suppkey long, s_name string"
     )
     tables = {"lineitem": li, "orders": orders, "supplier": supp}
-    monkeypatch.setattr(rel, "table", lambda s, dd, n: tables[n])
+    crafted_tables(rel, tables)
     rows = rel.mart_sole_late_supplier(spark, "x").collect()
     assert [(r.s_name, r.numwait) for r in rows] == [("supp_a", 2)]

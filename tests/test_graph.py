@@ -5,10 +5,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, plan_of
 
 from enterprise_data_quality_platform_spark.operators.graph import pagerank
 from enterprise_data_quality_platform_spark.queries import all_queries
+from enterprise_data_quality_platform_spark.queries import operator_ops as oo
 
 
 def _ranks(spark, rows, **kw):
@@ -124,13 +125,11 @@ def test_file_stats_flags(spark, tmp_path):
 # ----------------------------------------------------- point-in-time join
 
 
-def test_pit_state_join_no_leakage(spark, monkeypatch):
+def test_pit_state_join_no_leakage(spark, crafted_tables):
     """A purchase must see the state valid AT its timestamp — never a
     later state (leakage), and a state starting exactly at purchase_ts
     matches (backward ASOF <=)."""
     import datetime
-
-    import enterprise_data_quality_platform_spark.queries.operator_ops as oo
 
     def ts(m):
         return datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=m)
@@ -148,7 +147,7 @@ def test_pit_state_join_no_leakage(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     )
-    monkeypatch.setattr(oo, "table", lambda s, d, n: df)
+    crafted_tables(oo, df)
     got = {
         r.state_type: (r.n_purchases, r.total_state_age_sec)
         for r in oo.events_pit_state_join(spark, "x").collect()
@@ -162,11 +161,6 @@ def test_pit_state_join_no_leakage(spark, monkeypatch):
 
 def test_pit_state_join_single_user_shuffle(spark):
     """The as-of composition must not plan an inequality join."""
-    from enterprise_data_quality_platform_spark.queries import all_queries
-
-    df = all_queries()["events_pit_state_join"].fn(spark, SF_SMALL)
-    p = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    p = plan_of(spark, "events_pit_state_join")
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p

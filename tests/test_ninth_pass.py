@@ -1,16 +1,20 @@
-"""Crafted-input tests for the ninth-pass operators: skew salting
-(join + aggregation equality), SPC rate anomaly, SCD2 episode
-compression, and RFM segmentation."""
-
 from __future__ import annotations
 
 import datetime
 
 from pyspark.sql import functions as F
 
+from conftest import minute
+
+from enterprise_data_quality_platform_spark.catalog import table
 from enterprise_data_quality_platform_spark.operators.skew import (
+    salt_column,
     salted_count_sum,
     salted_join,
+)
+from enterprise_data_quality_platform_spark.queries import (
+    events as ev,
+    relational as rel,
 )
 
 
@@ -78,8 +82,6 @@ def test_salted_count_sum_equals_plain_groupby(spark):
 
 def test_salt_spreads_hot_key(spark):
     """The hot key's rows must land in more than one salt bucket."""
-    from enterprise_data_quality_platform_spark.operators.skew import salt_column
-
     df = _skewed_facts(spark).filter(F.col("key") == 1)
     n_buckets = (
         df.withColumn("s", salt_column(df, 8)).select("s").distinct().count()
@@ -87,10 +89,7 @@ def test_salt_spreads_hot_key(spark):
     assert n_buckets > 1
 
 
-# ------------------------------------------------------------ rate anomaly
-
-
-def test_rate_anomaly_flags_spike_hour(spark, monkeypatch):
+def test_rate_anomaly_flags_spike_hour(spark, crafted_tables):
     t0 = datetime.datetime(2024, 1, 1)
     rows = []
     eid = 0
@@ -100,34 +99,22 @@ def test_rate_anomaly_flags_spike_hour(spark, monkeypatch):
             rows.append((eid, t0 + datetime.timedelta(hours=h, seconds=i)))
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, ts timestamp")
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = ev.events_rate_anomaly(spark, "unused").collect()
     assert [r.hour_start.hour for r in got] == [12]
     assert got[0].zscore > 2.0
 
 
-# -------------------------------------------------------------- scd2 islands
-
-
-def test_scd2_episodes_collapse_consecutive_runs(spark, monkeypatch):
-    t0 = datetime.datetime(2024, 1, 1)
-
-    def ts(m):
-        return t0 + datetime.timedelta(minutes=m)
-
+def test_scd2_episodes_collapse_consecutive_runs(spark, crafted_tables):
     rows = [
-        (1, 1, "view", ts(0)), (2, 1, "view", ts(1)), (3, 1, "click", ts(2)),
-        (4, 1, "view", ts(3)),  # view AGAIN -> new episode, not merged
-        (5, 2, "error", ts(0)),
+        (1, 1, "view", minute(0)), (2, 1, "view", minute(1)), (3, 1, "click", minute(2)),
+        (4, 1, "view", minute(3)),  # view AGAIN -> new episode, not merged
+        (5, 2, "error", minute(0)),
     ]
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     )
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = sorted(
         (r.user_id, r.episode_seq, r.event_type, r.n_events)
         for r in ev.events_scd2_episodes(spark, "unused").collect()
@@ -140,52 +127,33 @@ def test_scd2_episodes_collapse_consecutive_runs(spark, monkeypatch):
     ]
 
 
-# ---------------------------------------------------------------------- rfm
-
-
 def test_rfm_segments_partition_customers(spark, sf_dir):
-    from enterprise_data_quality_platform_spark.queries.relational import (
-        mart_customer_rfm,
-    )
-
-    rows = mart_customer_rfm(spark, sf_dir).collect()
+    rows = rel.mart_customer_rfm(spark, sf_dir).collect()
     segs = [r.rfm_segment for r in rows]
     assert segs == sorted(segs) and len(segs) == len(set(segs))
     assert all(
         len(s) == 3 and set(s) <= set("1234") for s in segs
     )
     # every scored customer lands in exactly one segment
-    from enterprise_data_quality_platform_spark.catalog import table as t
-
     n_cust = (
-        t(spark, sf_dir, "orders").select("o_custkey").distinct().count()
+        table(spark, sf_dir, "orders").select("o_custkey").distinct().count()
     )
     assert sum(r.n_customers for r in rows) == n_cust
 
 
-# -------------------------------------------------------------- attribution
-
-
-def test_attribution_credits_last_preceding_touch(spark, monkeypatch):
-    t0 = datetime.datetime(2024, 1, 1)
-
-    def ts(m):
-        return t0 + datetime.timedelta(minutes=m)
-
+def test_attribution_credits_last_preceding_touch(spark, crafted_tables):
     rows = [
         # user 1: view@0, click@10, purchase@30 -> credited to click, 20min
-        (1, 1, "view", ts(0)), (2, 1, "click", ts(10)), (3, 1, "purchase", ts(30)),
+        (1, 1, "view", minute(0)), (2, 1, "click", minute(10)), (3, 1, "purchase", minute(30)),
         # user 2: purchase with no prior touch -> 'none'
-        (4, 2, "purchase", ts(5)),
+        (4, 2, "purchase", minute(5)),
         # user 3: purchase then view then purchase -> second credited to view
-        (5, 3, "purchase", ts(0)), (6, 3, "view", ts(1)), (7, 3, "purchase", ts(2)),
+        (5, 3, "purchase", minute(0)), (6, 3, "view", minute(1)), (7, 3, "purchase", minute(2)),
     ]
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp"
     )
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = {
         r.attributed_type: (r.n_purchases, r.total_secs_to_convert)
         for r in ev.events_attribution(spark, "unused").collect()

@@ -11,16 +11,12 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from enterprise_data_quality_platform_spark.queries import oracle_sqls
+from enterprise_data_quality_platform_spark.queries.registry import oracle_connection
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 UNSAFE = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 
@@ -28,18 +24,12 @@ UNSAFE = ("HUGEINT", "UHUGEINT", "DECIMAL")
 def con():
     if not os.path.isdir(SF_DIR):
         pytest.skip(f"{SF_DIR} not present")
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return c
+    return oracle_connection(SF_DIR)
 
 
 def test_no_oracle_binds_driver_unsafe_types(con):
     offenders = {}
-    for name, sql in sorted(oracle_sqls().items()):
+    for name, sql in sorted(oracle_sqls(SF_DIR).items()):
         rel = con.sql(sql)  # binding alone types the output; no execution
         cols = [
             f"{col}:{dt}"

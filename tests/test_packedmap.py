@@ -21,7 +21,9 @@ from enterprise_data_quality_platform_spark.operators.packedmap import (
     distinct_presence,
     join_packed_codes,
     packed_code_map,
+    packed_map_worthwhile,
 )
+from enterprise_data_quality_platform_spark.queries import relational
 from enterprise_data_quality_platform_spark.queries.dq import dq_unique_proportion
 
 
@@ -309,34 +311,61 @@ def test_distinct_presence_rejects_non_integral_key(spark):
         distinct_presence(df, "k")
 
 
-def _write_orders(spark, tmp_path, rows, schema):
-    spark.createDataFrame(rows, schema).write.parquet(
-        str(tmp_path / "orders.parquet")
-    )
-
-
-def test_dq_unique_proportion_high_duplication_exact(spark, tmp_path):
+def test_dq_unique_proportion_high_duplication_exact(spark, crafted_tier):
     """A key repeated >32767 times (the domain that killed the packed
     variant's 15-bit slots) answers exactly through the standalone query."""
     rows = [(5,)] * 32770 + [(6,), (None,)]
-    _write_orders(spark, tmp_path, rows, "o_custkey long")
-    out = dq_unique_proportion(spark, str(tmp_path)).collect()
+    sf = crafted_tier("dup", orders=(rows, "o_custkey long"))
+    out = dq_unique_proportion(spark, sf).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.total, r.n_nonnull, r.n_distinct) == (32772, 32771, 2)
     assert abs(r.unique_ratio - round(2 / 32771, 6)) < 1e-12
 
 
-def test_dq_unique_proportion_mixed_domain_exact(spark, tmp_path):
+def test_dq_unique_proportion_mixed_domain_exact(spark, crafted_tier):
     """Mixed domain (negatives, NULLs, dupes) answers exactly."""
     rows = (
         [(k,) for k in (-5, -5, -4, -1, 0, 1, 2, 3, 4, 7, 8)]
         + [(3,)] * 6
         + [(None,)] * 3
     )
-    _write_orders(spark, tmp_path, rows, "o_custkey long")
-    out = dq_unique_proportion(spark, str(tmp_path)).collect()
-    r = out[0]
+    sf = crafted_tier("mixed", orders=(rows, "o_custkey long"))
+    r = dq_unique_proportion(spark, sf).collect()[0]
     # 20 rows, 17 non-null, distinct non-null = {-5,-4,-1,0,1,2,3,4,7,8}=10
     assert (r.total, r.n_nonnull, r.n_distinct) == (20, 17, 10)
     assert abs(r.unique_ratio - round(10 / 17, 6)) < 1e-12
+
+
+def test_gate_flips_on_probe_rows(sf_dir):
+    # sf0.001 lineitem is ~6k rows — far below the 20M default
+    assert not packed_map_worthwhile(sf_dir, "lineitem")
+    assert packed_map_worthwhile(sf_dir, "lineitem", min_probe_rows=1)
+    # estimation failure (missing table) takes the scale-safe packed path
+    assert packed_map_worthwhile("/nonexistent", "lineitem")
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["mart_shipping_priority", "mart_local_supplier_volume", "mart_small_qty_revenue"],
+)
+def test_gate_sides_value_identical_and_plan_pinned(
+    spark, sf_dir, name, monkeypatch
+):
+    """Below the packed-map size gate the gated marts take their plain-join
+    forms, which must be VALUE-IDENTICAL to the packed forms; each side
+    must plan the shape it claims (no word map below the gate, word map
+    above it)."""
+    fn = getattr(relational, name)
+    monkeypatch.setattr(relational, "packed_map_worthwhile", lambda *a, **k: False)
+    plain_df = fn(spark, sf_dir)
+    plain_plan = plain_df._jdf.queryExecution().executedPlan().toString()
+    plain = sorted(map(tuple, plain_df.collect()))
+    monkeypatch.setattr(relational, "packed_map_worthwhile", lambda *a, **k: True)
+    packed_df = fn(spark, sf_dir)
+    packed_plan = packed_df._jdf.queryExecution().executedPlan().toString()
+    packed = sorted(map(tuple, packed_df.collect()))
+    assert plain == packed
+    assert plain_df.columns == packed_df.columns
+    assert "packed_codes" not in plain_plan
+    assert "packed_codes" in packed_plan

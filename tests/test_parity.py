@@ -10,43 +10,36 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.parity import compare  # noqa: E402
 
-from enterprise_data_quality_platform_spark.catalog import TABLES  # noqa: E402
-from enterprise_data_quality_platform_spark.queries import all_queries  # noqa: E402
+from enterprise_data_quality_platform_spark.queries import all_queries, oracle_sqls  # noqa: E402
+from enterprise_data_quality_platform_spark.queries.registry import (  # noqa: E402
+    oracle_connection,
+)
 
 from conftest import SF_SMALL  # noqa: E402
 
 SPECS = all_queries()
+ORACLES = oracle_sqls(SF_SMALL)
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMALL}/{t}.parquet')"
-        )
+    con = oracle_connection(SF_SMALL)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_oracle_parity(name, spark, duck):
-    spec = SPECS[name]
-    sdf = spec.fn(spark, SF_SMALL).toPandas()
-    if spec.oracle is None:
+    sdf = SPECS[name].fn(spark, SF_SMALL).toPandas()
+    if name not in ORACLES:
         assert len(sdf) >= 0  # rows-only contract: runs and returns a frame
         return
-    # bind file-path oracles ({SF_PARQUET_DIR}, e.g. parquet_metadata
-    # table functions) to this suite's tier, same as registry.oracle_sqls
-    ddf = duck.execute(
-        spec.oracle.replace("{SF_PARQUET_DIR}", SF_SMALL.rstrip("/"))
-    ).fetchdf()
+    ddf = duck.execute(ORACLES[name]).fetchdf()
     issues = compare(name, sdf, ddf)
     assert not issues, f"{name}: {issues}"

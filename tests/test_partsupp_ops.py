@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from enterprise_data_quality_platform_spark.queries import partsupp_ops as po
 from enterprise_data_quality_platform_spark.queries.partsupp_ops import (
     derived_partsupp,
     mart_excess_inventory,
@@ -50,10 +51,8 @@ def test_min_cost_supplier_keeps_all_ties_and_regional_min(spark):
         assert costs.pop() >= global_min[part_key]
 
 
-def test_excess_inventory_boundary_is_strict(spark, monkeypatch):
+def test_excess_inventory_boundary_is_strict(spark, crafted_tables):
     """2*availqty > used_qty: equality must NOT qualify."""
-    import enterprise_data_quality_platform_spark.queries.partsupp_ops as po
-
     li = spark.createDataFrame(
         # one pair with usage exactly 2*availqty (excluded), one below
         # availqty(p=1,s=1) = (7+3)%9999+1 = 11 -> threshold 22
@@ -71,15 +70,13 @@ def test_excess_inventory_boundary_is_strict(spark, monkeypatch):
         [(0, "NATION_0")], "n_nationkey int, n_name string"
     )
     frames = {"lineitem": li, "part": part, "supplier": supplier, "nation": nation}
-    monkeypatch.setattr(po, "table", lambda s, d, n: frames[n])
+    crafted_tables(po, frames)
     got = mart_excess_inventory(spark, "unused").collect()
     # pair (1,1): used 22 == threshold 22 -> excluded; pair (2,1): used 35 < 36 -> kept
     assert [r.supplier_name for r in got] == ["Supplier#1"]
 
 
-def test_product_profit_arithmetic_exact(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.partsupp_ops as po
-
+def test_product_profit_arithmetic_exact(spark, crafted_tables):
     li = spark.createDataFrame(
         [(100, 3, 2, 2.0, 1000.0, 0.1, "1995-03-15")],
         "l_orderkey long, l_partkey long, l_suppkey long, l_quantity double,"
@@ -97,7 +94,7 @@ def test_product_profit_arithmetic_exact(spark, monkeypatch):
         "lineitem": li, "orders": orders, "part": part,
         "supplier": supplier, "nation": nation,
     }
-    monkeypatch.setattr(po, "table", lambda s, d, n: frames[n])
+    crafted_tables(po, frames)
     got = po.mart_product_profit(spark, "unused").collect()
     # revenue = 1000*0.9 = 900.00; cost_cents = (3*31+2*17)%100000+100 = 227
     # cost = 2 * 2.27 = 4.54 -> profit 895.46

@@ -6,21 +6,18 @@ a Python UDF to a hot path fails here, not at 100 TB."""
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.queries import all_queries
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, plan_of
 
 SPECS = all_queries()
-
-
-def plan_of(spark, name: str) -> str:
-    df = SPECS[name].fn(spark, SF_SMALL)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
 
 
 def test_star_join_broadcasts_dimensions(spark):
@@ -829,7 +826,6 @@ def test_user_gini_rank_window_over_distinct_count_frame(spark):
     assert len(aggs_before) >= 4, plan  # partial+final per-user, partial+final per-cnt
 
 
-
 def test_driver_frames_only_built_through_local_frame():
     """``createDataFrame(<list>)`` plans a PipelinedRDD whose first action
     forks Python workers; driver-built frames go through
@@ -840,7 +836,6 @@ def test_driver_frames_only_built_through_local_frame():
     with a bare ``spark.read.parquet`` that would run a schema-inference
     job."""
     import inspect
-    from pathlib import Path
 
     from enterprise_data_quality_platform_spark import session
 
@@ -864,3 +859,39 @@ def test_driver_frames_only_built_through_local_frame():
         or "spark.read.parquet(table_path(" in line
     ]
     assert not stray, stray
+
+
+def test_test_references_resolve():
+    """Every ``tests/<file>.py`` and ``tests/<file>.py::<name>`` cited by the
+    package, ``tools/``, ``bench.py`` or ``COVERAGE.md`` names an existing
+    test file and test; a name ending in ``_`` is a prefix
+    (``test_foo_*``)."""
+    repo = Path(__file__).resolve().parents[1]
+    sources = [
+        *sorted((repo / "enterprise_data_quality_platform_spark").rglob("*.py")),
+        *sorted((repo / "tools").glob("*.py")),
+        repo / "bench.py",
+        repo / "COVERAGE.md",
+    ]
+    tests: dict[str, set[str]] = {}
+    broken = []
+    for path in sources:
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            for fname, name in re.findall(r"tests/(test_\w+\.py)(?:::(\w+))?", line):
+                target = repo / "tests" / fname
+                if fname not in tests and target.exists():
+                    tests[fname] = {
+                        node.name
+                        for node in ast.parse(target.read_text()).body
+                        if isinstance(node, ast.FunctionDef)
+                    }
+                found = tests.get(fname)
+                if found is None or (
+                    name
+                    and not any(
+                        t.startswith(name) if name.endswith("_") else t == name
+                        for t in found
+                    )
+                ):
+                    broken.append(f"{path.relative_to(repo)}:{i}: {fname}::{name}")
+    assert not broken, broken

@@ -5,12 +5,15 @@ interpolated (even-n) positions."""
 
 from __future__ import annotations
 
+import datetime
 import random
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.operators.quantiles import (
+    exact_group_quantiles,
     exact_quantile,
 )
 
@@ -120,3 +123,20 @@ def test_group_quantiles_string_groups_and_empty_values(spark):
     got = {r["group"]: r for r in exact_group_quantiles(df, "g", "v", (0.5,))}
     assert got["a"]["q0.5"] == 2.0
     assert got["b"]["q0.5"] is None and got["b"]["n_rows"] == 1
+
+
+def test_group_quantiles_null_and_date_keys(spark):
+    """Group keys outside {str, int} (e.g. date) and NULL group keys must
+    work: schema comes from the input column's type and the joins are
+    null-safe (the old isinstance-guess crashed createDataFrame / lost the
+    NULL group and raised KeyError)."""
+    d1 = datetime.date(2024, 1, 1)
+    d2 = datetime.date(2024, 1, 2)
+    rows = [Row(g=d1, v=float(i)) for i in range(1, 101)]
+    rows += [Row(g=d2, v=42.0)]  # degenerate single-value group
+    rows += [Row(g=None, v=float(i)) for i in range(1, 11)]  # NULL key group
+    df = spark.createDataFrame(rows)
+    out = {r["group"]: r for r in exact_group_quantiles(df, "g", "v", [0.5, 0.9])}
+    assert out[d1]["q0.5"] == 50.5 and out[d1]["q0.9"] == pytest.approx(90.1)
+    assert out[d2]["q0.5"] == 42.0
+    assert out[None]["q0.5"] == 5.5 and out[None]["n_values"] == 10

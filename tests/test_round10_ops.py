@@ -1,41 +1,32 @@
-"""Crafted-input + plan tests for the round-10 continuation operators:
-cross-document duplicated-span audit, per-label centroid outliers,
-label-centroid confusion matrix, and YoY nation revenue growth."""
-
 from __future__ import annotations
 
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, plan_of
 
-from enterprise_data_quality_platform_spark.queries import all_queries
-
-SPECS = all_queries()
-
-
-def plan_of(spark, name: str) -> str:
-    df = SPECS[name].fn(spark, SF_SMALL)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-# -------------------------------------------------- span memorization
+from enterprise_data_quality_platform_spark.queries import (
+    dedup_ops,
+    embeddings as em,
+    events as ev,
+    relational as rel,
+    text as tx,
+)
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_span_memorization_cross_doc_only(spark, monkeypatch):
+def _emb(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+
+def test_span_memorization_cross_doc_only(spark, crafted_tables):
     """A 32-char span repeated across two docs is reported; the same span
     repeated twice inside ONE doc is not (self-repetition is
     text_repetition_stats' business)."""
-    import enterprise_data_quality_platform_spark.queries.dedup_ops as d
-
     shared = "A" * 32  # aligned at pos 1 in both docs
     rows = [
         (1, shared + " tail one ........."),
@@ -44,21 +35,19 @@ def test_span_memorization_cross_doc_only(spark, monkeypatch):
         # other doc shares it -> excluded by n_docs > 1
         (3, "B" * 32 + "B" * 32),
     ]
-    monkeypatch.setattr(d, "table", lambda s, dir, n: _docs(spark, rows))
+    crafted_tables(dedup_ops, _docs(spark, rows))
     got = {
         r.span: (r.n_docs, r.n_occurrences)
-        for r in d.dedup_span_memorization(spark, "unused").collect()
+        for r in dedup_ops.dedup_span_memorization(spark, "unused").collect()
     }
     assert got[shared] == (2, 2)
     assert all(not s.startswith("B") for s in got)
 
 
-def test_span_memorization_counts_multi_occurrence(spark, monkeypatch):
+def test_span_memorization_counts_multi_occurrence(spark, crafted_tables):
     """n_occurrences sums ALL stride-aligned occurrences across the
     matching docs, including repeats within a doc once the span is
     cross-doc."""
-    import enterprise_data_quality_platform_spark.queries.dedup_ops as d
-
     # 32 DISTINCT chars: stride windows that straddle the copy boundary
     # (positions 9/17/25) are rotations, not equal to s — only the two
     # aligned copies in doc 1 and the one in doc 2 count.
@@ -67,20 +56,18 @@ def test_span_memorization_counts_multi_occurrence(spark, monkeypatch):
         (1, s + s),  # positions 1 and 33 (both ≡ 1 mod 8) -> 2 occurrences
         (2, s + " x"),
     ]
-    monkeypatch.setattr(d, "table", lambda sp, dir, n: _docs(spark, rows))
+    crafted_tables(dedup_ops, _docs(spark, rows))
     got = {
         r.span: (r.n_docs, r.n_occurrences)
-        for r in d.dedup_span_memorization(spark, "unused").collect()
+        for r in dedup_ops.dedup_span_memorization(spark, "unused").collect()
     }
     assert got[s] == (2, 3)
 
 
-def test_span_memorization_short_docs_skipped(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.dedup_ops as d
-
+def test_span_memorization_short_docs_skipped(spark, crafted_tables):
     rows = [(1, "short"), (2, "short")]
-    monkeypatch.setattr(d, "table", lambda sp, dir, n: _docs(spark, rows))
-    assert d.dedup_span_memorization(spark, "unused").count() == 0
+    crafted_tables(dedup_ops, _docs(spark, rows))
+    assert dedup_ops.dedup_span_memorization(spark, "unused").count() == 0
 
 
 def test_span_memorization_plan(spark):
@@ -90,40 +77,29 @@ def test_span_memorization_plan(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-# -------------------------------------------------- centroid outliers
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-
-
-def test_centroid_outliers_ranks_farthest_first(spark, monkeypatch):
+def test_centroid_outliers_ranks_farthest_first(spark, crafted_tables):
     """Three tight members + one flipped vector: the flipped one is the
     rank-1 outlier with centroid_cos far below the tight members'."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [0.9, 0.1], 0),
         (3, [1.0, 0.1], 0),
         (4, [-1.0, 0.0], 0),  # opposes the centroid
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
-    out = e.embed_centroid_outliers(spark, "unused").collect()
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_centroid_outliers(spark, "unused").collect()
     assert [r.vec_id for r in out if r.outlier_rank == 1] == [4]
     by_rank = sorted(out, key=lambda r: r.outlier_rank)
     assert by_rank[0].centroid_cos < 0 < by_rank[-1].centroid_cos
 
 
-def test_centroid_outliers_per_label_and_capped(spark, monkeypatch):
+def test_centroid_outliers_per_label_and_capped(spark, crafted_tables):
     """Ranking restarts per label and emits at most 5 rows per label."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     rows = [(i, [1.0, float(i) / 100.0], 0) for i in range(1, 8)] + [
         (100 + i, [0.0, 1.0 + i / 100.0], 1) for i in range(1, 4)
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
-    out = e.embed_centroid_outliers(spark, "unused").collect()
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_centroid_outliers(spark, "unused").collect()
     n_by_label = {}
     for r in out:
         n_by_label[r.label] = n_by_label.get(r.label, 0) + 1
@@ -131,11 +107,9 @@ def test_centroid_outliers_per_label_and_capped(spark, monkeypatch):
     assert {r.outlier_rank for r in out if r.label == 0} == {1, 2, 3, 4, 5}
 
 
-def test_centroid_outliers_agrees_with_label_centroid_min(spark, monkeypatch):
+def test_centroid_outliers_agrees_with_label_centroid_min(spark, crafted_tables):
     """The rank-1 outlier's cosine per label equals embed_label_centroid's
     min_cohesion (shared partials, two consumers)."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     rows = [
         (1, [1.0, 0.2, 0.1], 0),
         (2, [0.8, 0.3, 0.0], 0),
@@ -143,37 +117,32 @@ def test_centroid_outliers_agrees_with_label_centroid_min(spark, monkeypatch):
         (4, [0.1, 0.9, 0.9], 1),
         (5, [0.2, 1.0, 0.8], 1),
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
+    crafted_tables(em, _emb(spark, rows))
     mins = {
         r.label: r.min_cohesion
-        for r in e.embed_label_centroid(spark, "unused").collect()
+        for r in em.embed_label_centroid(spark, "unused").collect()
     }
     worst = {
         r.label: r.centroid_cos
-        for r in e.embed_centroid_outliers(spark, "unused").collect()
+        for r in em.embed_centroid_outliers(spark, "unused").collect()
         if r.outlier_rank == 1
     }
     assert worst == mins
 
 
-# -------------------------------------------------- label confusion
-
-
-def test_label_confusion_identical_and_orthogonal(spark, monkeypatch):
+def test_label_confusion_identical_and_orthogonal(spark, crafted_tables):
     """Two labels pointing the same way read ~1.0; orthogonal labels read
     ~0.0; the matrix is upper-triangular (label_a < label_b)."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [0.9, 0.0], 0),
         (3, [0.5, 0.0], 1),  # same direction as label 0
         (4, [0.0, 1.0], 2),  # orthogonal
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
+    crafted_tables(em, _emb(spark, rows))
     out = {
         (r.label_a, r.label_b): r.centroid_cos
-        for r in e.embed_label_confusion(spark, "unused").collect()
+        for r in em.embed_label_confusion(spark, "unused").collect()
     }
     assert set(out) == {(0, 1), (0, 2), (1, 2)}
     assert out[(0, 1)] == pytest.approx(1.0, abs=1e-4)
@@ -181,27 +150,25 @@ def test_label_confusion_identical_and_orthogonal(spark, monkeypatch):
     assert out[(1, 2)] == pytest.approx(0.0, abs=1e-4)
 
 
-def test_label_confusion_count_invariant(spark, monkeypatch):
+def test_label_confusion_count_invariant(spark, crafted_tables):
     """Cosine between centroids ignores member counts: duplicating every
     member of one label leaves the matrix unchanged (the 1/n factors
     cancel — the property that lets the op run on component SUMS)."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     base = [
         (1, [1.0, 0.3], 0),
         (2, [0.7, 0.5], 0),
         (3, [0.2, 1.0], 1),
     ]
     dup = base + [(10 + i, v, lb) for i, (_, v, lb) in enumerate(base) if lb == 0]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, base))
+    crafted_tables(em, _emb(spark, base))
     one = {
         (r.label_a, r.label_b): r.centroid_cos
-        for r in e.embed_label_confusion(spark, "unused").collect()
+        for r in em.embed_label_confusion(spark, "unused").collect()
     }
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, dup))
+    crafted_tables(em, _emb(spark, dup))
     two = {
         (r.label_a, r.label_b): r.centroid_cos
-        for r in e.embed_label_confusion(spark, "unused").collect()
+        for r in em.embed_label_confusion(spark, "unused").collect()
     }
     for k in one:
         assert one[k] == pytest.approx(two[k], abs=2e-6)
@@ -213,18 +180,13 @@ def test_label_confusion_reuses_centroid_exchange(spark):
     aggregate used to re-run the corpus posexplode (3 scans); the
     diagonal-window form runs it once (AQE runtime decision, so read the
     executed plan)."""
-    df = SPECS["embed_label_confusion"].fn(spark, SF_SMALL)
+    df = em.embed_label_confusion(spark, SF_SMALL)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final
 
 
-# -------------------------------------------------- yearly growth
-
-
-def test_yearly_growth_delta_and_first_year_null(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
+def test_yearly_growth_delta_and_first_year_null(spark, crafted_tables):
     def ts(y):
         return datetime.datetime(y, 6, 1)
 
@@ -244,7 +206,7 @@ def test_yearly_growth_delta_and_first_year_null(spark, monkeypatch):
         [(0, "ALPHA"), (1, "BETA")], "n_nationkey int, n_name string"
     )
     frames = {"orders": orders, "customer": customer, "nation": nation}
-    monkeypatch.setattr(rel, "table", lambda s, d, n: frames[n])
+    crafted_tables(rel, frames)
     rows = {
         (r.nation_name, r.order_year): (r.revenue, r.yoy_growth)
         for r in rel.mart_nation_yearly_growth(spark, "unused").collect()
@@ -267,56 +229,42 @@ def test_yearly_growth_window_over_aggregate_plan(spark):
     assert plan.index("Window") < plan.index("HashAggregate")
 
 
-# -------------------------------------------------- zipf fit
-
-
-def test_zipf_fit_perfect_power_law(spark, monkeypatch):
+def test_zipf_fit_perfect_power_law(spark, crafted_tables):
     """A corpus built so freq(rank) = C * rank^-1 exactly fits slope -1."""
-    import enterprise_data_quality_platform_spark.queries.text as tx
-
     # token 'w{r}' appears floor(120/r) times -> ln freq ~ ln 120 - ln r
     words = []
     for r in range(1, 9):
         words += [f"w{r:02d}"] * (120 // r)
     rows = [(1, " ".join(words))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(tx, "table", lambda s, d, n: df)
+    crafted_tables(tx, df)
     out = tx.text_zipf_fit(spark, "unused").collect()[0]
     assert out.n_ranks == 8
     # floor(120/r) deviates from 120/r by <1 count; slope lands near -1
     assert out.zipf_slope == pytest.approx(-1.0, abs=0.05)
 
 
-def test_zipf_fit_uniform_corpus_slope_zero(spark, monkeypatch):
+def test_zipf_fit_uniform_corpus_slope_zero(spark, crafted_tables):
     """Equal frequencies -> slope exactly 0 (templated/degenerate text)."""
-    import enterprise_data_quality_platform_spark.queries.text as tx
-
     rows = [(1, "aa bb cc dd " * 10)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(tx, "table", lambda s, d, n: df)
+    crafted_tables(tx, df)
     out = tx.text_zipf_fit(spark, "unused").collect()[0]
     assert out.n_ranks == 4
     assert out.zipf_slope == 0.0
 
 
-def test_zipf_fit_single_token_null_slope(spark, monkeypatch):
+def test_zipf_fit_single_token_null_slope(spark, crafted_tables):
     """One distinct token -> OLS denominator 0 -> NULL, not a throw
     (ANSI div-by-zero guard)."""
-    import enterprise_data_quality_platform_spark.queries.text as tx
-
     df = spark.createDataFrame([(1, "only only only")], "doc_id long, text string")
-    monkeypatch.setattr(tx, "table", lambda s, d, n: df)
+    crafted_tables(tx, df)
     out = tx.text_zipf_fit(spark, "unused").collect()[0]
     assert out.n_ranks == 1
     assert out.zipf_slope is None
 
 
-# -------------------------------------------------- rapid-fire users
-
-
-def test_rapid_fire_orders_by_min_gap_and_counts_rapid(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
+def test_rapid_fire_orders_by_min_gap_and_counts_rapid(spark, crafted_tables):
     base = datetime.datetime(2024, 1, 1)
 
     def at(sec):
@@ -331,7 +279,7 @@ def test_rapid_fire_orders_by_min_gap_and_counts_rapid(spark, monkeypatch):
         (7, 3, at(0)),
     ]
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     out = ev.events_rapid_fire_users(spark, "unused").collect()
     assert [r.user_id for r in out] == [1, 2]
     by_user = {r.user_id: r for r in out}
@@ -342,25 +290,18 @@ def test_rapid_fire_orders_by_min_gap_and_counts_rapid(spark, monkeypatch):
     assert by_user[2].n_events == 3
 
 
-def test_rapid_fire_duplicate_ts_ordered_by_event_id(spark, monkeypatch):
+def test_rapid_fire_duplicate_ts_ordered_by_event_id(spark, crafted_tables):
     """Two events at the SAME timestamp -> gap 0 via the event_id
     tiebreak (the scripted-burst signature)."""
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
     t = datetime.datetime(2024, 1, 1)
     rows = [(10, 1, t), (11, 1, t)]
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     out = ev.events_rapid_fire_users(spark, "unused").collect()
     assert out[0].min_gap_us == 0
 
 
-# -------------------------------------------------- exact dup vectors
-
-
-def test_exact_dup_vectors_detects_quantized_duplicates(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
+def test_exact_dup_vectors_detects_quantized_duplicates(spark, crafted_tables):
     rows = [
         (1, [0.5, -0.25], 0),
         (2, [0.5, -0.25], 0),          # exact dup of 1
@@ -369,27 +310,23 @@ def test_exact_dup_vectors_detects_quantized_duplicates(spark, monkeypatch):
         (5, [0.1, 0.1], 1),
         (6, [0.1, 0.1], 1),             # second dup group
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
-    out = e.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
     assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (2, 5, 3)
 
 
-def test_exact_dup_vectors_clean_corpus_zeroes(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
+def test_exact_dup_vectors_clean_corpus_zeroes(spark, crafted_tables):
     rows = [(1, [0.1, 0.2], 0), (2, [0.3, 0.4], 0)]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
-    out = e.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
     assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (0, 0, 0)
 
 
-def test_exact_dup_vectors_nonfinite_components_fingerprint(spark, monkeypatch):
-    """r11 (ADVICE r10): NaN/Inf/NULL components must map to sentinel
+def test_exact_dup_vectors_nonfinite_components_fingerprint(spark, crafted_tables):
+    """NaN/Inf/NULL components must map to sentinel
     tokens, not ANSI-throw in the BIGINT quantizer or be silently dropped
     by concat_ws — two vectors sharing the same non-finite pattern are
     the SAME fingerprint; NULL vs 0.0 are DIFFERENT."""
-    import enterprise_data_quality_platform_spark.queries.embeddings as e
-
     nan, inf = float("nan"), float("inf")
     rows = [
         (1, [nan, 0.5], 0),
@@ -399,6 +336,6 @@ def test_exact_dup_vectors_nonfinite_components_fingerprint(spark, monkeypatch):
         (5, [None, 0.0], 0),     # null token, NOT dropped:
         (6, [0.0, 0.0], 0),      # ...so this is NOT a dup of 5
     ]
-    monkeypatch.setattr(e, "table", lambda s, d, n: _emb(spark, rows))
-    out = e.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
     assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (1, 2, 2)

@@ -1,45 +1,27 @@
-"""Crafted-input + plan tests for the sixteenth-pass operators: exact
-heavy hitters, windowless OLS trend, sequence-gap audit, min_by/max_by
-first-last order, and dual-scope dedup cluster histograms."""
-
 from __future__ import annotations
 
 import datetime
+import re
 
-from pyspark.sql import functions as F
+from conftest import minute, plan_of
 
-from conftest import SF_SMALL
-
-from enterprise_data_quality_platform_spark.queries import all_queries
-
-SPECS = all_queries()
-
-
-def plan_of(spark, name: str) -> str:
-    df = SPECS[name].fn(spark, SF_SMALL)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+from enterprise_data_quality_platform_spark.queries import (
+    dq,
+    events as ev,
+    relational as rel,
+    text as tx,
+)
 
 
-def _ts(m: int) -> datetime.datetime:
-    return datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=m)
-
-
-# ------------------------------------------------------------ heavy hitters
-
-
-def test_heavy_hitters_threshold_is_strict(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
+def test_heavy_hitters_threshold_is_strict(spark, crafted_tables):
     # 200 events: user 1 owns 2 (exactly 1.0%), user 2 owns 1 (0.5% exactly
     # -> strict > excludes), rest spread over 197 users
     rows = [(1, 1), (2, 1), (3, 2)] + [(i + 4, i + 100) for i in range(197)]
     df = spark.createDataFrame(
-        [(eid, uid, "view", _ts(eid), 1.0) for eid, uid in rows],
+        [(eid, uid, "view", minute(eid), 1.0) for eid, uid in rows],
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     )
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     got = {r.user_id: r.share for r in ev.events_heavy_hitters(spark, "x").collect()}
     assert got == {1: 0.01}  # 2/200; user 2 at exactly 0.5% excluded
 
@@ -50,13 +32,8 @@ def test_heavy_hitters_broadcast_total(spark):
     assert "Window" not in plan
 
 
-# ------------------------------------------------------------ value trend
-
-
-def test_value_trend_recovers_known_slope(spark, monkeypatch):
+def test_value_trend_recovers_known_slope(spark, crafted_tables):
     """y rises exactly 36 value-units per hour -> slope_per_hour == 36."""
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
     base = datetime.datetime(2024, 1, 1)
     rows = [
         (i, 7, "view", base + datetime.timedelta(seconds=100 * i), 0.01 * i)
@@ -65,7 +42,7 @@ def test_value_trend_recovers_known_slope(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
     )
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     out = ev.events_user_value_trend(spark, "x").collect()
     assert len(out) == 1
     r = out[0]
@@ -73,16 +50,14 @@ def test_value_trend_recovers_known_slope(spark, monkeypatch):
     assert abs(r.slope_per_hour - 0.36) < 1e-9
 
 
-def test_value_trend_zero_variance_is_null(spark, monkeypatch):
+def test_value_trend_zero_variance_is_null(spark, crafted_tables):
     """All events at the same second: denominator 0 -> NULL slope, no
     ANSI divide-by-zero throw."""
-    import enterprise_data_quality_platform_spark.queries.events as ev
-
     df = spark.createDataFrame(
-        [(i, 1, "view", _ts(0), float(i)) for i in range(10)],
+        [(i, 1, "view", minute(0), float(i)) for i in range(10)],
         "event_id long, user_id long, event_type string, ts timestamp, value double",
     )
-    monkeypatch.setattr(ev, "table", lambda s, d, n: df)
+    crafted_tables(ev, df)
     out = ev.events_user_value_trend(spark, "x").collect()
     assert len(out) == 1 and out[0].slope_per_hour is None
 
@@ -93,17 +68,12 @@ def test_value_trend_no_window_no_udf(spark):
     assert "Python" not in plan  # no UDF: sufficient statistics only
 
 
-# ------------------------------------------------------------ sequence gaps
-
-
-def test_sequence_gaps_counts_missing_and_duplicates(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
+def test_sequence_gaps_counts_missing_and_duplicates(spark, crafted_tables):
     # bucket 0: ids 0..9 minus {3,7} -> 2 missing; bucket 1: 1000,1000,1001
     # -> duplicate shows as -1
     ids = [i for i in range(10) if i not in (3, 7)] + [1000, 1000, 1001]
     df = spark.createDataFrame([(i,) for i in ids], "event_id long")
-    monkeypatch.setattr(dq, "table", lambda s, d, n: df)
+    crafted_tables(dq, df)
     got = {
         r.bucket: r.missing_in_range
         for r in dq.dq_sequence_gaps(spark, "x").collect()
@@ -116,14 +86,9 @@ def test_sequence_gaps_no_window(spark):
     assert "Window" not in plan  # groupBy min/max/count, never a LAG sort
 
 
-# ------------------------------------------------------- first/last order
-
-
-def test_first_last_order_tiebreak_on_orderkey(spark, monkeypatch):
+def test_first_last_order_tiebreak_on_orderkey(spark, crafted_tables):
     """Two orders on the same day: the packed key must break the tie on
     orderkey (lower key = first) on both engines."""
-    import enterprise_data_quality_platform_spark.queries.relational as rel
-
     d = datetime.datetime(2024, 3, 1)
     orders = spark.createDataFrame(
         [
@@ -133,7 +98,7 @@ def test_first_last_order_tiebreak_on_orderkey(spark, monkeypatch):
         ],
         "o_orderkey long, o_custkey long, o_orderdate timestamp, o_totalprice double",
     )
-    monkeypatch.setattr(rel, "table", lambda s, d_, n: orders)
+    crafted_tables(rel, orders)
     r = rel.mart_customer_first_last_order(spark, "x").collect()[0]
     assert (r.n_orders, r.first_order_price, r.last_order_price) == (3, 20.0, 90.0)
     assert r.first_order_date == d
@@ -145,12 +110,7 @@ def test_first_last_order_single_groupby_no_window(spark):
     assert plan.count("Exchange") <= 4  # one agg shuffle (+AQE reads)
 
 
-# --------------------------------------------------------- cluster sizes
-
-
-def test_cluster_sizes_both_scopes(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.text as tx
-
+def test_cluster_sizes_both_scopes(spark, crafted_tables):
     long_a = "alpha " * 30  # same 64-char prefix family
     docs = spark.createDataFrame(
         [
@@ -162,7 +122,7 @@ def test_cluster_sizes_both_scopes(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(tx, "table", lambda s, d, n: docs)
+    crafted_tables(tx, docs)
     got = {
         (r.scope, r.cluster_size): (r.n_clusters, r.n_docs)
         for r in tx.dedup_cluster_sizes(spark, "x").collect()
@@ -174,7 +134,5 @@ def test_cluster_sizes_both_scopes(spark, monkeypatch):
 
 
 def test_cluster_sizes_one_scan(spark):
-    import re
-
     plan = plan_of(spark, "dedup_cluster_sizes")
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1

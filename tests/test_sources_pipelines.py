@@ -25,6 +25,7 @@ from enterprise_data_quality_platform_spark.sources.readers import (
     CORRUPT_COL,
     SchemaMismatchError,
     enforce_schema,
+    read_parquet_evolving,
 )
 
 from conftest import SF_SMALL
@@ -83,6 +84,47 @@ def test_parquet_schema_enforcement(spark):
     with pytest.raises(SchemaMismatchError) as exc:
         enforce_schema(df, bad)
     assert "ghost" in str(exc.value)
+
+
+def test_read_parquet_evolving_generations(spark, tmp_path):
+    """Three schema generations of one table — v1 (amount int, cust),
+    v2 (renames cust→customer_id, widens amount), v3 (adds channel) —
+    read into ONE frame with the declared target schema: legacy names
+    coalesce onto current ones, missing columns are typed NULLs, types
+    are cast exactly."""
+    v1 = spark.createDataFrame([(1, 10, "a")], "id long, amount int, cust string")
+    v2 = spark.createDataFrame(
+        [(2, 20_000_000_000, "b")], "id long, amount long, customer_id string"
+    )
+    v3 = spark.createDataFrame(
+        [(3, 30, "c", "web")],
+        "id long, amount long, customer_id string, channel string",
+    )
+    p1, p2, p3 = (str(tmp_path / f"v{i}") for i in (1, 2, 3))
+    v1.write.parquet(p1)
+    v2.write.parquet(p2)
+    v3.write.parquet(p3)
+
+    target = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("amount", T.LongType()),
+            T.StructField("customer_id", T.StringType()),
+            T.StructField("channel", T.StringType()),
+            T.StructField("never_written", T.IntegerType()),
+        ]
+    )
+    out = read_parquet_evolving(
+        spark, [p1, p2, p3], target, renames={"cust": "customer_id"}
+    )
+    assert [f.name for f in out.schema.fields] == [
+        "id", "amount", "customer_id", "channel", "never_written",
+    ]
+    rows = {r.id: r for r in out.collect()}
+    assert rows[1].customer_id == "a" and rows[1].amount == 10
+    assert rows[1].channel is None and rows[1].never_written is None
+    assert rows[2].amount == 20_000_000_000
+    assert rows[3].channel == "web"
 
 
 def test_materialize_model_partitioned(spark):
@@ -162,10 +204,9 @@ def test_pipeline_retries():
     assert ctx["flaky"] == "recovered" and attempts["n"] == 3
 
 
-def test_pipeline_exhausted_retries_skip_transitively_and_cycles_raise():
+def test_pipeline_exhausted_retries_skip_transitively():
     """The last attempt's error fails the stage; a downstream stage listed
-    before its failed-or-skipped upstream is still skipped; a dependency
-    cycle raises instead of waiting forever."""
+    before its failed-or-skipped upstream is still skipped."""
     attempts = []
 
     def always(ctx):
@@ -183,10 +224,27 @@ def test_pipeline_exhausted_retries_skip_transitively_and_cycles_raise():
     assert attempts == [0, 1]
     status = p.run(raise_on_failure=False)["__status__"]
     assert status == {"bad": "failed", "mid": "skipped", "last": "skipped"}
-    cyclic = Pipeline().add("x", lambda ctx: 1, upstream=("y",))
-    cyclic.add("y", lambda ctx: 1, upstream=("x",))
+
+
+@pytest.mark.parametrize(
+    "stages, ran",
+    [
+        ((("x", ("y",)), ("y", ("x",))), []),
+        ((("a", ("a",)),), []),
+        ((("ok", ()), ("x", ("y", "ok")), ("y", ("x",))), ["ok"]),
+    ],
+    ids=["two_stages", "self_dependency", "after_valid_stages"],
+)
+def test_pipeline_cycle_raises(stages, ran):
+    """A dependency cycle raises instead of waiting forever; the acyclic
+    prefix still runs."""
+    log = []
+    p = Pipeline()
+    for name, upstream in stages:
+        p.add(name, lambda ctx, name=name: log.append(name), upstream=upstream)
     with pytest.raises(ValueError, match="dependency cycle"):
-        cyclic.run()
+        p.run()
+    assert log == ran
 
 
 # --- reference pipelines end-to-end ---------------------------------------

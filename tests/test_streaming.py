@@ -1,12 +1,16 @@
 """Streaming tests (SURVEY.md §5.2.4): foreachBatch DQ gate, watermark
-late-row behavior, stateful dedup, batch/streaming parity for T2."""
+late-row behavior, stateful dedup, batch/streaming parity for T2, and
+checkpoint restart (SURVEY.md §4.3): a restarted query processes ONLY
+newly-arrived files."""
 
 from __future__ import annotations
 
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from enterprise_data_quality_platform_spark.checks import Check
 from enterprise_data_quality_platform_spark.queries.events import (
@@ -176,8 +180,6 @@ def test_watermark_drops_late_rows(spark):
     (eventTimeWatermarkForLateEvents lags one batch), so the drop is
     observable from the second batch after the watermark advanced — hence
     three micro-batches: advance, (grace), too-late."""
-    import pandas as pd
-
     def write(path, ids, tss):
         pd.DataFrame(
             {
@@ -205,8 +207,6 @@ def test_watermark_drops_late_rows(spark):
         now = time.time()
         for i, f in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
             os.utime(f"{src}/{f}", (now - 60 + i * 20, now - 60 + i * 20))
-
-        from pyspark.sql import types as T
 
         schema = T.StructType(
             [
@@ -371,8 +371,6 @@ def test_incident_tracker_state_carries_across_micro_batches(spark):
     import os
     import time
 
-    import pandas as pd
-
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_incident_tracker,
     )
@@ -428,8 +426,6 @@ def test_watermark_append_mode_emits_only_finalized_windows(spark):
     import os
     import time
 
-    import pandas as pd
-
     src = tempfile.mkdtemp(prefix="edqp-append-")
 
     def write(name, ids, tss):
@@ -452,8 +448,6 @@ def test_watermark_append_mode_emits_only_finalized_windows(spark):
     now = time.time()
     os.utime(f"{src}/a.parquet", (now - 60, now - 60))
     os.utime(f"{src}/b.parquet", (now - 30, now - 30))
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [
@@ -510,8 +504,6 @@ def test_incident_tracker_matches_batch_twin(spark):
 def test_incident_tracker_hysteresis(spark):
     """resolve_below < threshold takes the per-row fold path: values in
     (resolve_below, threshold] neither trigger nor resolve."""
-    import pandas as pd
-
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_incident_tracker,
     )
@@ -591,7 +583,6 @@ def test_click_purchase_pairs_interval_semantics(spark):
     exactly click+30min matches (inclusive), one second past does not,
     and a purchase BEFORE the click never matches."""
     import os
-    import pandas as pd
 
     def write(path, rows):
         pd.DataFrame(
@@ -608,7 +599,6 @@ def test_click_purchase_pairs_interval_semantics(spark):
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_click_purchase_pairs,
     )
-    from pyspark.sql import types as T
 
     with tempfile.TemporaryDirectory(prefix="edqp-ssj-") as src:
         write(
@@ -671,12 +661,9 @@ def test_streaming_upsert_sink_keeps_latest_per_key(spark, tmp_path):
     """T10: the upsert sink maintains last-event-wins state per user
     across micro-batches, and a second run with new data updates in place
     (no duplicate keys, untouched keys preserved)."""
-    import pandas as pd
-
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_upsert_sink,
     )
-    from pyspark.sql import types as T
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "state")
@@ -736,12 +723,9 @@ def test_streaming_upsert_sink_tie_breaks_on_event_id(spark, tmp_path):
     deterministic max_by struct key), not arrival order."""
     import os
 
-    import pandas as pd
-
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_upsert_sink,
     )
-    from pyspark.sql import types as T
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -780,8 +764,6 @@ def test_append_mode_emits_only_watermark_finalized_windows(spark):
     import os
     import time as _time
 
-    import pandas as pd
-
     def write(path, ids, tss):
         pd.DataFrame(
             {
@@ -793,8 +775,6 @@ def test_append_mode_emits_only_watermark_finalized_windows(spark):
                 "props": ["{}"] * len(ids),
             }
         ).astype({"ts": "datetime64[us]"}).to_parquet(path)
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [
@@ -864,8 +844,6 @@ def test_stream_stream_left_outer_null_emission(spark):
     import os
     import time as _time
 
-    import pandas as pd
-
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_click_conversion_outer,
     )
@@ -881,8 +859,6 @@ def test_stream_stream_left_outer_null_emission(spark):
                 "props": ["{}"] * len(rows),
             }
         ).astype({"ts": "datetime64[us]"}).to_parquet(path)
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [
@@ -982,10 +958,6 @@ def _emission_run(spark, mode, group_cols, window_col_name):
     import os
     import time as _time
 
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -1084,3 +1056,56 @@ def test_session_window_append_emission_and_update_rejected(spark):
 
     with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
         _emission_run(spark, "update", cols, "session_window")
+
+
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+def _write_events(path, ids, ts0="2024-06-01 10:00:00"):
+    pd.DataFrame(
+        {
+            "event_id": ids,
+            "ts": pd.to_datetime([ts0] * len(ids)),
+            "user_id": [1] * len(ids),
+            "event_type": ["view"] * len(ids),
+            "value": [1.0] * len(ids),
+            "props": ["{}"] * len(ids),
+        }
+    ).astype({"ts": "datetime64[us]"}).to_parquet(path)
+
+
+def test_restart_processes_only_new_files(spark):
+    with tempfile.TemporaryDirectory(prefix="edqp-resume-") as src, \
+         tempfile.TemporaryDirectory(prefix="edqp-ck-") as ck:
+
+        def run_once():
+            seen = []
+            q = (
+                spark.readStream.schema(EVENTS_SCHEMA)
+                .parquet(src)
+                .writeStream.foreachBatch(lambda df, bid: seen.append(df.count()))
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ck)
+                .start()
+            )
+            q.awaitTermination()
+            return sum(seen)
+
+        _write_events(f"{src}/a.parquet", [1, 2, 3])
+        assert run_once() == 3
+
+        # new file arrives while the query is DOWN; restart from checkpoint
+        _write_events(f"{src}/b.parquet", [4, 5])
+        assert run_once() == 2  # only the new file's rows
+
+        # nothing new → restart is a no-op (no reprocessing)
+        assert run_once() == 0

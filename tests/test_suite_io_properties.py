@@ -6,6 +6,7 @@ from __future__ import annotations
 import tempfile
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.catalog import table
@@ -217,3 +218,66 @@ def test_history_docs_sparklines(tmp_path, spark):
     # normalized heights: 120 violations -> full height, 60 -> half
     assert 'height="24"' in html and 'height="12"' in html
     assert render_history_docs_html(spark, store, suite_name="hist") == html
+
+
+def test_columns_match_list_roundtrip(tmp_path, spark):
+    check = Check(
+        "ordered cols",
+        "columns_match_list",
+        "t",
+        params={"column_list": ["a", "b"]},
+    )
+    path = str(tmp_path / "suite.json")
+    save_suite([check], path)
+    [loaded] = load_suite(path)
+    assert loaded.params["column_list"] == ["a", "b"]
+    df = spark.createDataFrame([Row(a=1, b=2)])
+    [r] = run_suite({"t": df}, [loaded])
+    assert r.status == "pass"
+
+
+def test_pair_greater_than_roundtrip_ge_kwargs(spark):
+    # a real GE suite spells the pair as column_A / column_B
+    d = {
+        "expectation_type": "expect_column_pair_values_a_to_be_greater_than_b",
+        "kwargs": {"column_A": "hi", "column_B": "lo"},
+        "meta": {"name": "pair", "table": "t"},
+    }
+    check = check_from_dict(d)
+    assert check.columns == ("hi", "lo")
+    df = spark.createDataFrame([Row(hi=2, lo=1), Row(hi=0, lo=1)])
+    [r] = run_suite({"t": df}, [check])
+    assert r.violations == 1
+    # and back out: column_A/column_B kwargs are preserved
+    out = check_to_dict(check)
+    assert out["kwargs"]["column_A"] == "hi" and out["kwargs"]["column_B"] == "lo"
+
+
+def test_monotonic_ge_roundtrip(tmp_path):
+    check = Check(
+        "desc ts",
+        "monotonic",
+        "t",
+        column="v",
+        params={"order_by": "seq", "decreasing": True},
+    )
+    d = check_to_dict(check)
+    assert d["expectation_type"] == "expect_column_values_to_be_decreasing"
+    back = check_from_dict(d)
+    assert back.check_type == "monotonic" and back.params.get("decreasing") is True
+
+
+def test_row_condition_ge_roundtrip():
+    d = {
+        "expectation_type": "expect_column_values_to_be_between",
+        "kwargs": {
+            "column": "bal",
+            "min_value": 0,
+            "row_condition": "seg = 'gold'",
+            "condition_parser": "spark",
+        },
+        "meta": {"name": "scoped", "table": "t"},
+    }
+    check = check_from_dict(d)
+    assert check.params["row_condition"] == "seg = 'gold'"
+    assert "condition_parser" not in check.params

@@ -1,14 +1,18 @@
-"""Crafted-input tests for the tenth-pass operators: PII scan/redaction,
-cross-table reconciliation, and containment near-dup."""
-
 from __future__ import annotations
+
+import datetime
 
 from pyspark.sql import functions as F
 
+from enterprise_data_quality_platform_spark.dedup import ngram_jaccard_pairs
+from enterprise_data_quality_platform_spark.dedup.jaccard import containment_pairs
 from enterprise_data_quality_platform_spark.functions.text import (
     pii_flag,
+    pretokens,
     redact_pii,
 )
+from enterprise_data_quality_platform_spark.queries import dq
+from enterprise_data_quality_platform_spark.sources.writers import compact_partitions
 
 
 def _texts(spark, texts):
@@ -57,12 +61,7 @@ def test_redaction_order_protects_ssn_and_ip_from_phone_sweep(spark):
     assert "[SSN]" in out and "[IPV4]" in out and "[PHONE]" not in out
 
 
-# ----------------------------------------------------------- reconciliation
-
-
-def test_reconciliation_counts_mismatched_and_childless(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
+def test_reconciliation_counts_mismatched_and_childless(spark, crafted_tables):
     orders = spark.createDataFrame(
         [(1, 30.0), (2, 10.0), (3, 99.0)], "o_orderkey long, o_totalprice double"
     )
@@ -72,21 +71,13 @@ def test_reconciliation_counts_mismatched_and_childless(spark, monkeypatch):
         "l_orderkey long, l_extendedprice double",
     )
     tables = {"orders": orders, "lineitem": lineitem}
-    monkeypatch.setattr(dq, "table", lambda s, d, n: tables[n])
+    crafted_tables(dq, tables)
     r = dq.dq_reconciliation(spark, "unused").first()
     assert (r.n_orders, r.n_with_lines, r.n_childless, r.n_mismatched) == (3, 2, 1, 1)
     assert r.mismatch_rate == 0.5
 
 
-# -------------------------------------------------------------- containment
-
-
 def test_containment_catches_subset_jaccard_misses(spark):
-    from enterprise_data_quality_platform_spark.dedup.jaccard import (
-        containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
     fragment = "alpha beta gamma delta epsilon"
     superset = fragment + " " + " ".join(f"w{i}" for i in range(60))
     df = spark.createDataFrame(
@@ -98,14 +89,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert jac == []  # Jaccard blind to the same pair at any meaningful bar
 
 
-# --------------------------------------------------------------- compaction
-
-
 def test_compact_partitions_reduces_files_preserves_rows(spark, tmp_path):
-    from enterprise_data_quality_platform_spark.sources.writers import (
-        compact_partitions,
-    )
-
     path = str(tmp_path / "frag")
     df = spark.range(0, 10000).selectExpr(
         "id", "id % 3 AS p", "CAST(id AS STRING) AS s"
@@ -122,10 +106,6 @@ def test_compact_partitions_reduces_files_preserves_rows(spark, tmp_path):
 
 
 def test_compact_skips_already_compacted(spark, tmp_path):
-    from enterprise_data_quality_platform_spark.sources.writers import (
-        compact_partitions,
-    )
-
     path = str(tmp_path / "ok")
     spark.range(0, 100).coalesce(1).write.parquet(path)
     stats = compact_partitions(spark, path, target_file_bytes=1 << 30)
@@ -133,48 +113,32 @@ def test_compact_skips_already_compacted(spark, tmp_path):
     assert stats["files_before"] == stats["files_after"] == 1
 
 
-# --------------------------------------------------------------- k-anonymity
-
-
-def test_k_anonymity_counts_risky_combos(spark, monkeypatch):
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
+def test_k_anonymity_counts_risky_combos(spark, crafted_tables):
     rows = (
         [(1, "A")] * 10      # safe combo
         + [(1, "B")] * 2     # risky (n=2)
         + [(2, "A")] * 1     # risky (n=1)
     )
     df = spark.createDataFrame(rows, "c_nationkey long, c_mktsegment string")
-    monkeypatch.setattr(dq, "table", lambda s, d, n: df)
+    crafted_tables(dq, df)
     r = dq.dq_k_anonymity(spark, "unused").first()
     assert (r.n_combos, r.k_anonymity, r.combos_below_5, r.rows_at_risk) == (
         3, 1, 2, 3,
     )
 
 
-# --------------------------------------------------------------------- drift
-
-
-def test_psi_zero_for_identical_halves(spark, monkeypatch):
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
+def test_psi_zero_for_identical_halves(spark, crafted_tables):
     rows = []
     for half_start in (datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 20)):
         for i, t in enumerate(["a"] * 30 + ["b"] * 70):
             rows.append((t, half_start + datetime.timedelta(minutes=i)))
     df = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    monkeypatch.setattr(dq, "table", lambda s, d, n: df)
+    crafted_tables(dq, df)
     r = dq.dq_distribution_drift(spark, "unused").first()
     assert r.psi == 0.0 and r.n_buckets == 2
 
 
-def test_psi_positive_under_shift(spark, monkeypatch):
-    import datetime
-
-    import enterprise_data_quality_platform_spark.queries.dq as dq
-
+def test_psi_positive_under_shift(spark, crafted_tables):
     rows = [("a", datetime.datetime(2024, 1, 2))] * 90 + [
         ("b", datetime.datetime(2024, 1, 2))
     ] * 10
@@ -182,17 +146,12 @@ def test_psi_positive_under_shift(spark, monkeypatch):
         ("b", datetime.datetime(2024, 1, 20))
     ] * 90
     df = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    monkeypatch.setattr(dq, "table", lambda s, d, n: df)
+    crafted_tables(dq, df)
     r = dq.dq_distribution_drift(spark, "unused").first()
     assert r.psi > 0.25  # textbook "action" territory for a hard flip
 
 
-# ----------------------------------------------------------------- pretokens
-
-
 def test_pretokens_split_on_character_classes(spark):
-    from enterprise_data_quality_platform_spark.functions.text import pretokens
-
     df = spark.createDataFrame([("abc 123 a-b 4.5x",)], "text string")
     got = df.select(pretokens(F.col("text")).alias("p")).first().p
     assert got == ["abc", "123", "a", "-", "b", "4", ".", "5", "x"]

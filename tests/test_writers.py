@@ -1,6 +1,7 @@
-"""Incremental materialization (VERDICT r2 missing #1): merge-by-key upsert
-on plain parquet + the incremental refresh pipeline (re-run one date
-partition, swap in, re-validate — pager-workflow.py:292-322 semantics)."""
+"""Writers (``sources/writers.py``): merge-by-key upsert on plain parquet
+and the incremental refresh pipeline (re-run one date partition, swap in,
+re-validate — pager-workflow.py:292-322 semantics), partition overwrite,
+the quarantine sink, bucketed writes and compaction."""
 
 from __future__ import annotations
 
@@ -10,10 +11,18 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from enterprise_data_quality_platform_spark.catalog import table
+from enterprise_data_quality_platform_spark.checks import Check
 from enterprise_data_quality_platform_spark.plans.reference_pipelines import (
     incremental_refresh_pipeline,
 )
-from enterprise_data_quality_platform_spark.sources.writers import merge_upsert
+from enterprise_data_quality_platform_spark.sources.writers import (
+    compact_partitions,
+    materialize_incremental,
+    merge_upsert,
+    write_bucketed,
+    write_violations,
+)
 
 from conftest import SF_SMALL
 
@@ -222,3 +231,73 @@ def test_merge_upsert_crash_after_swap_cleans_stale_backup(tmp_path, spark):
     # new data won; the backup did not clobber the newer table
     assert _rows(out, "k", "v") == [(1, "a"), (2, "B2"), (3, "c")]
     assert not (tmp_path / "dim__old").exists()
+
+
+def test_write_violations_quarantine(tmp_path, spark):
+    rows = [Row(region=r, value=float(i)) for i, r in enumerate(
+        ["North America", "Europe", "South America", "Antarctica", "Europe"]
+    )]
+    df = spark.createDataFrame(rows)
+    check = Check(
+        "whitelist",
+        "values_in_set",
+        "t",
+        column="region",
+        params={"values": ("North America", "Europe")},
+    )
+    path = str(tmp_path / "quarantine")
+    write_violations(df, check, path)
+    back = spark.read.parquet(path)
+    got = sorted(r["region"] for r in back.collect())
+    assert got == ["Antarctica", "South America"]  # complete, not sampled
+    assert set(back.columns) >= {"region", "value", "__check_name", "__run_ts"}
+
+
+def test_materialize_incremental_one_partition(tmp_path, spark):
+    path = str(tmp_path / "mart")
+    full = spark.createDataFrame(
+        [
+            Row(d="2025-01-01", v=1),
+            Row(d="2025-01-02", v=2),
+        ]
+    ).withColumn("d", F.to_date("d"))
+    materialize_incremental(spark, full, path, date_col="d")
+
+    # re-run ONLY day 2 with a new value
+    day2 = spark.createDataFrame([Row(d="2025-01-02", v=99)]).withColumn(
+        "d", F.to_date("d")
+    )
+    out = materialize_incremental(spark, day2, path, date_col="d")
+    got = {(str(r["p_date"]), r["v"]) for r in out.collect()}
+    # day 1 untouched, day 2 replaced (not appended)
+    assert got == {("2025-01-01", 1), ("2025-01-02", 99)}
+
+
+def test_write_bucketed_rejects_append_on_sorted(spark, tmp_path):
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS r8bucket LOCATION '{tmp_path}/db'")
+    try:
+        nation = table(spark, SF_SMALL, "nation")
+        write_bucketed(
+            nation, "r8bucket.sorted_t", ["n_nationkey"], 4,
+            sort_cols=["n_nationkey"],
+        )
+        # append with sort_cols: rejected regardless of target state
+        with pytest.raises(ValueError, match="one-sorted-file-per-bucket"):
+            write_bucketed(
+                nation, "r8bucket.sorted_t", ["n_nationkey"], 4,
+                sort_cols=["n_nationkey"], mode="append",
+            )
+        # append WITHOUT sort_cols onto an existing SORTED table: the stale
+        # sort metadata would still mislead readers — rejected too
+        with pytest.raises(ValueError, match="one-sorted-file-per-bucket"):
+            write_bucketed(
+                nation, "r8bucket.sorted_t", ["n_nationkey"], 4, mode="append"
+            )
+        # unsorted bucketed table: appends are safe (worst case a re-Sort)
+        write_bucketed(nation, "r8bucket.plain_t", ["n_nationkey"], 4)
+        write_bucketed(
+            nation, "r8bucket.plain_t", ["n_nationkey"], 4, mode="append"
+        )
+        assert spark.table("r8bucket.plain_t").count() == 2 * nation.count()
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS r8bucket CASCADE")

@@ -13,8 +13,6 @@ import statistics
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, "/root/repo")
 
 from bench import HEADLINE  # noqa: E402
@@ -24,16 +22,14 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 
-    import __spark_entry__ as entrymod
+    from enterprise_data_quality_platform_spark.queries.registry import (
+        oracle_connection,
+        oracle_sqls,
+    )
 
-    oracles = entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    # bind file-path oracles to the tier the views read
+    oracles = oracle_sqls(sf_dir)
+    con = oracle_connection(sf_dir)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:

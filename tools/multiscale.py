@@ -17,8 +17,6 @@ import sys
 import time
 from pathlib import Path
 
-import duckdb
-
 sys.path.insert(0, "/root/repo")
 
 from bench import HEADLINE, HEAVY  # noqa: E402
@@ -56,10 +54,6 @@ WEAK_ISOLATE_MIN_SF = 10.0
 #: would dominate the sweep wall-clock at sf1/sf10. Recorded in the JSON
 #: so the cap is not silent.
 DEEP_EXCLUDE = {"dedup_fuzzy_names", "embed_decontaminate"}
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def time_queries(
@@ -164,7 +158,10 @@ def main() -> None:
     )
 
     from enterprise_data_quality_platform_spark.queries import all_queries, query_fns
-    from enterprise_data_quality_platform_spark.queries.registry import oracle_sqls
+    from enterprise_data_quality_platform_spark.queries.registry import (
+        oracle_connection,
+        oracle_sqls,
+    )
     from enterprise_data_quality_platform_spark.session import get_spark
 
     spark = get_spark("edqp-multiscale")
@@ -205,11 +202,7 @@ def main() -> None:
             gc=lambda: (spark.sparkContext._jvm.System.gc(), time.sleep(1)),
         )
 
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
+        con = oracle_connection(sf_dir)
         # re-bind file-path oracles ({SF_PARQUET_DIR}) to THIS tier's dir
         tier_oracles = oracle_sqls(sf_dir)
 

@@ -107,19 +107,15 @@ def main() -> int:
     from enterprise_data_quality_platform_spark.session import get_spark
 
     spark = get_spark("parity")
-    from enterprise_data_quality_platform_spark.queries.registry import oracle_sqls
+    from enterprise_data_quality_platform_spark.queries.registry import (
+        oracle_connection,
+        oracle_sqls,
+    )
 
     # oracle_sql() (the driver contract) binds file-path oracles to the
     # driver's fixed sf0.01 dir; parity re-binds them to ITS sf_dir
     qs, oracles = entrymod.queries(), oracle_sqls(sf_dir)
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     failed, passed, rows_only = [], [], []
     for name, fn in sorted(qs.items()):

@@ -33,14 +33,7 @@ import statistics
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, "/root/repo")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 #: the standardized machinery warm-up (docstring rationale): six diverse
 #: cheap shapes that force C2 compilation of the shared scan / hash-agg /
@@ -81,7 +74,10 @@ def main() -> None:
     sf_dir, names = argv[0], argv[1:]
 
     from enterprise_data_quality_platform_spark.queries import query_fns
-    from enterprise_data_quality_platform_spark.queries.registry import oracle_sqls
+    from enterprise_data_quality_platform_spark.queries.registry import (
+        oracle_connection,
+        oracle_sqls,
+    )
     from enterprise_data_quality_platform_spark.session import get_spark
 
     spark = get_spark("edqp-remeasure")
@@ -89,11 +85,7 @@ def main() -> None:
     # tools/multiscale.py — the default binding points at the driver tier)
     fns, oracles = query_fns(), oracle_sqls(sf_dir)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     out: dict = {"sf_dir": sf_dir, "launch_loadavg": os.getloadavg()}
     out["runs"] = runs
