@@ -141,19 +141,15 @@ def _member(
     )
 
 
-def plan_suite(
-    tables: Mapping[str, DataFrame], checks: Sequence[Check], fuse: bool = True
-) -> SuitePlan:
+def plan_suite(tables: Mapping[str, DataFrame], checks: Sequence[Check]) -> SuitePlan:
     """Lower ``checks`` to factors without building a frame or running any
     Spark action; each factor's frame is built by the pool thread that runs
     it, so its analysis errors isolate like runtime ones.
 
-    Both modes answer schema checks here. ``fuse=True``: footer-decided
-    checks get their results here too; per table, one groupBy factor when
-    it has a categorical check, one ``df.agg`` factor for the other fusable
-    checks, and one factor per check with its own frame (``frame_builder``).
-    ``fuse=False``: one factor per data check and no footer decisions — the
-    isolation-debug path and the exact reference for the fused plan."""
+    Schema and footer-decided checks get their results here. Per table the
+    rest become one groupBy factor when it has a categorical check, one
+    ``df.agg`` factor for the other fusable checks, and one factor per
+    check with its own frame (``frame_builder``)."""
     plan = SuitePlan()
     by_table: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
     for i, check in enumerate(checks):
@@ -170,7 +166,7 @@ def plan_suite(
 
     for name, group in by_table.items():
         df, undecided = tables[name], []
-        snap = footer_of(df) if fuse else None
+        snap = footer_of(df)
         for i, compiled in group:
             row = None if snap is None else footer_row(compiled, snap)
             if row is None:
@@ -183,7 +179,7 @@ def plan_suite(
         grouped = any(is_categorical(c.check) for _, c in undecided)
         shared: dict[str, list[tuple[int, CompiledAggCheck]]] = defaultdict(list)
         for i, compiled in undecided:
-            if fuse and compiled.frame_builder is None:
+            if compiled.frame_builder is None:
                 kind = (
                     "grouped"
                     if grouped and compiled.check.check_type in ADDITIVE_TYPES
@@ -277,25 +273,20 @@ def _execute(
 
 
 def run_suite(
-    tables: Mapping[str, DataFrame],
-    checks: Sequence[Check],
-    fuse: bool = True,
+    tables: Mapping[str, DataFrame], checks: Sequence[Check]
 ) -> list[CheckResult]:
     """Run all checks; never raises for an individual check's failure.
 
-    ``fuse=True`` (default): ``plan_suite``'s fused plan, every factor
-    submitted concurrently. ``fuse=False`` runs one factor per data check,
-    serially (the isolation-debug path). A failing sampleable check carries
-    ``observed["sample"]``: up to ``SAMPLE_CAP`` distinct violating values,
-    sorted. A categorical check's sample is the smallest ``SAMPLE_CAP``
-    values; any other check's is an arbitrary ``SAMPLE_CAP`` of them when
-    more violate."""
-    plan = plan_suite(tables, checks, fuse=fuse)
+    ``plan_suite``'s factors are submitted concurrently. A failing
+    sampleable check carries ``observed["sample"]``: up to ``SAMPLE_CAP``
+    distinct violating values, sorted. A categorical check's sample is the
+    smallest ``SAMPLE_CAP`` values; any other check's is an arbitrary
+    ``SAMPLE_CAP`` of them when more violate."""
+    plan = plan_suite(tables, checks)
     results = dict(plan.decided)
     if plan.factors:
         session = next(iter(tables.values())).sparkSession
-        workers = min(len(plan.factors), 8) if fuse else 1
-        _execute(session, plan.factors, results, workers)
+        _execute(session, plan.factors, results, min(len(plan.factors), 8))
     return [results[i] for i in sorted(results)]
 
 

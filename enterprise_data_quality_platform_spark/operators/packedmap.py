@@ -58,13 +58,10 @@ class PackedCodeMap:
     with ``probe_code(probe_key)`` (0 ⇒ key absent ⇒ drop the row for
     inner-join semantics). The domain guard is INLINE in ``words`` (a
     raising per-word filter — see ``packed_code_map``), so consuming the
-    map at all is enough to surface violations; ``guard`` (a 1-row count
-    over the guarded words) exists only for callers that want to force
-    guard evaluation without consuming the words.
+    map at all is enough to surface violations.
     """
 
     words: DataFrame
-    guard: DataFrame
     word_col: str
     slot_bits: int
     key_mask: int
@@ -99,7 +96,7 @@ def packed_code_map(
     ``1 .. 2**slot_bits - 1``; 0 is the reserved absent marker) stored in
     the key's slot.
 
-    The returned guard raises ``guard_message`` when keys are duplicated
+    The returned ``words`` raise ``guard_message`` when keys are duplicated
     or codes fall outside the slot domain — both of which would corrupt
     slots silently (bit ops never throw, by design)."""
     if slot_bits not in (1, 2, 4, 8, 16, 32):
@@ -157,9 +154,6 @@ def packed_code_map(
     ).select("w", "packed_codes")
     return PackedCodeMap(
         words=guarded_words,
-        guard=guarded_words.groupBy().agg(
-            F.count(F.lit(1)).alias("_guard_words")
-        ),
         word_col="w",
         slot_bits=slot_bits,
         key_mask=key_mask,

@@ -745,7 +745,7 @@ def embed_exact_dup_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup-before-index audit (the vector-store analogue of
     dedup_exact_docs). The synthetic corpus has zero exact dups, so the
     oracle checks exact zeros (text_pii_scan precedent); crafted tests in
-    tests/test_round10_ops.py carry the detection semantics.
+    tests/test_dedup_similarity.py carry the detection semantics.
 
     Exactness: per-component 1e-6 quantization to BIGINT then a joined
     string fingerprint — integer-to-string is engine-identical, float

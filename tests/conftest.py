@@ -5,10 +5,12 @@ import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from enterprise_data_quality_platform_spark.catalog import table_path  # noqa: E402
+from enterprise_data_quality_platform_spark.checks import run_suite  # noqa: E402
 from enterprise_data_quality_platform_spark.queries import all_queries  # noqa: E402
 from enterprise_data_quality_platform_spark.session import get_spark  # noqa: E402
 
@@ -38,6 +40,18 @@ def plan_of(spark, name: str) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def solo_results(tables, checks) -> list:
+    """Each check run alone on a frame its footers cannot answer: one job
+    per data check and no footer decisions, the reference every shared
+    factor and footer answer of ``run_suite`` must equal."""
+    results = []
+    for check in checks:
+        own = tables.get(check.table)
+        scan = {} if own is None else {check.table: own.filter(F.lit(True))}
+        results += run_suite({**tables, **scan}, [check])
+    return results
 
 
 @pytest.fixture

@@ -27,6 +27,8 @@ from enterprise_data_quality_platform_spark.checks.runner import (
 )
 from enterprise_data_quality_platform_spark.sources.writers import write_violations
 
+from conftest import solo_results
+
 AUTHORIZED_REGIONS = ("North America", "Europe", "Asia Pacific")
 
 
@@ -254,7 +256,7 @@ def test_correlation_approx_agrees_with_exact(spark):
     assert abs(approx.slope - exact.slope) <= 1e-9 * abs(exact.slope)
 
 
-# -------------------------------------------- round-6 GE gallery stragglers
+# ------------------ GE gallery checks: dateutil dates, LIKE patterns, pair sets
 
 
 def test_dateutil_parseable_check(spark):
@@ -375,13 +377,13 @@ def test_new_check_types_ge_round_trip():
                 assert got == v
 
 
-# ------------------------------------------------- round-7 ADVICE hardening
+# ------------- their edge cases: bad parameters, NULL pairs, non-ISO dates
 
 
 def test_like_pattern_list_empty_patterns_is_clear_error(spark):
-    """ADVICE r6: an empty patterns list must fail with a clear
-    ValueError, not an opaque IndexError. The runner's per-check
-    isolation surfaces it as an error result carrying the message."""
+    """An empty patterns list must fail with a clear ValueError, not an
+    opaque IndexError. The runner's per-check isolation surfaces it as an
+    error result carrying the message."""
     df = spark.createDataFrame([("x",)], "s string")
     results = run_suite(
         {"t": df},
@@ -399,8 +401,8 @@ def test_like_pattern_list_empty_patterns_is_clear_error(spark):
 
 
 def test_pair_in_set_ignore_row_if_modes(spark):
-    """ADVICE r6: GE's default ignore_row_if='both_values_are_missing'
-    EVALUATES one-NULL rows (they violate — a half-NULL pair is never in
+    """GE's default ignore_row_if='both_values_are_missing' EVALUATES
+    one-NULL rows (they violate — a half-NULL pair is never in
     the set); the repo default 'either_value_is_missing' skips them."""
     df = spark.createDataFrame(
         [("A", "F"), ("A", "O"), (None, "F"), ("A", None), (None, None)],
@@ -445,8 +447,8 @@ def test_pair_in_set_ignore_row_if_modes(spark):
 
 
 def test_dateutil_parseable_non_iso_formats(spark):
-    """ADVICE r6: common non-ISO dateutil formats (US slash dates, month
-    names, bare year) now parse; genuinely non-date strings still fail."""
+    """The check accepts what dateutil parses: common non-ISO formats (US
+    slash dates, month names, bare year) pass; non-date strings fail."""
     df = spark.createDataFrame(
         [
             ("03/15/2024",),
@@ -469,10 +471,9 @@ def test_dateutil_parseable_non_iso_formats(spark):
 
 
 def test_correlation_split_sums_match_numpy(spark, tmp_path):
-    """Property pin for the r7 split-sum rewrite: on randomized money/qty
-    frames the split-sum Pearson r and slope match numpy's float64
-    computation to 1e-9 relative — the exactness of the BIGINT moment
-    sums is what makes the closed form engine-portable."""
+    """On randomized money/qty frames the split-sum Pearson r and slope
+    match numpy's float64 computation to 1e-9 relative — the exactness of
+    the BIGINT moment sums is what makes the closed form engine-portable."""
     import numpy as np
 
     from enterprise_data_quality_platform_spark.queries.dq import dq_correlation
@@ -559,7 +560,7 @@ def test_unique_packed_counter_matches_plain_plan(spark):
 # ---------------------------------------------------------------------------
 # Suite planning (checks.runner.plan_suite): one groupBy factor per table
 # with a categorical check, footer-decided checks, pooled samples. Every
-# fused answer must equal the fuse=False path, which runs one job per check
+# fused answer must equal ``solo_results``, which runs one job per check
 # and never reads footers.
 # ---------------------------------------------------------------------------
 
@@ -607,7 +608,7 @@ def test_categorical_table_is_one_grouped_factor(spark):
         ("t.agg", 1),
     ]
     fused = run_suite({"t": df}, suite(True))
-    assert _outcome(fused) == _outcome(run_suite({"t": df}, suite(True), fuse=False))
+    assert _outcome(fused) == _outcome(solo_results({"t": df}, suite(True)))
     inline = run_suite({"t": df}, suite(False))
     strip = lambda rs: [(r.check_name, r.status, r.violations, r.total) for r in rs]  # noqa: E731
     assert strip(fused) == strip(inline)
@@ -711,7 +712,7 @@ def test_footer_decided_checks_equal_the_scan(spark, tmp_path, case):
     tables, decided = _footer_case(spark, tmp_path, case)
     assert set(plan_suite(tables, _FOOTER_CHECKS).decided) == decided
     fused = run_suite(tables, _FOOTER_CHECKS)
-    assert _outcome(fused) == _outcome(run_suite(tables, _FOOTER_CHECKS, fuse=False))
+    assert _outcome(fused) == _outcome(solo_results(tables, _FOOTER_CHECKS))
     by_name = {r.check_name: r for r in fused}
     if case == "nan":
         assert by_name["x range"].status == "fail"  # NaN sorts above 1.0
@@ -726,7 +727,7 @@ def test_plan_suite_builds_no_frame(spark, tmp_path, monkeypatch):
     ``DataFrame.agg``/``groupBy``/``join`` raising it still plans an agg
     factor, a grouped factor and an own-shape factor and decides only the
     schema and footer checks. The frames are built when the suite runs, and
-    the run equals ``fuse=False``."""
+    the run equals ``solo_results``."""
     from enterprise_data_quality_platform_spark.checks.runner import plan_suite
 
     tables, footer_decided = _footer_case(spark, tmp_path, "clean")
@@ -750,7 +751,7 @@ def test_plan_suite_builds_no_frame(spark, tmp_path, monkeypatch):
     assert set(plan.decided) == footer_decided | {7}
     assert sorted(f.name for f in plan.factors) == ["t.agg", "t.c6", "t.grouped"]
     fused = run_suite(tables, checks)
-    assert _outcome(fused) == _outcome(run_suite(tables, checks, fuse=False))
+    assert _outcome(fused) == _outcome(solo_results(tables, checks))
     assert {r.check_name: r.status for r in fused}["k in u"] == "fail"
 
 
@@ -829,7 +830,7 @@ def _every_type_tables(spark):
 def test_every_check_type_plans_without_a_job(spark):
     """``plan_suite`` answers the schema checks and gives every check with
     its own plan shape its own factor, running no job; the pooled results
-    equal the ``fuse=False`` ones and each case passes or fails as built."""
+    equal ``solo_results`` and each case passes or fails as built."""
     from enterprise_data_quality_platform_spark.checks.definitions import (
         SCHEMA_CHECK_TYPES,
     )
@@ -854,7 +855,7 @@ def test_every_check_type_plans_without_a_job(spark):
     assert len(plan.factors) == len(own_shape) + 1  # + the fused not_null
 
     results = run_suite(tables, checks)
-    assert _outcome(results) == _outcome(run_suite(tables, checks, fuse=False))
+    assert _outcome(results) == _outcome(solo_results(tables, checks))
     for r in results:
         want = "fail" if r.check_name.endswith(" fail") else "pass"
         assert r.status == want, (r.check_name, r.status, r.error_message)
@@ -875,8 +876,8 @@ def test_missing_other_table_errors_alone(spark):
         Check("rows ok", "row_count_equal_other_table", "t",
               params={"other_table": "u"}),
     ]
-    for fuse in (True, False):
-        got = {r.check_name: r for r in run_suite(tables, checks, fuse=fuse)}
+    for results in (run_suite(tables, checks), solo_results(tables, checks)):
+        got = {r.check_name: r for r in results}
         assert [got[c.name].status for c in checks] == ["pass", "error", "error", "pass"]
         assert "ghost" in got["ri ghost"].error_message
         assert "ghost" in got["rows ghost"].error_message

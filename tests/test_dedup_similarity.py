@@ -1,6 +1,8 @@
 """Dedup + similarity correctness (SURVEY.md §5.2.5): LSH methods are
-validated against their exact counterparts (recall), and dedup operators
-against hand-built duplicates and property checks (idempotence)."""
+validated against their exact counterparts (recall), dedup operators
+against hand-built duplicates and property checks (idempotence), and the
+span and embedding audits (``queries/dedup_ops.py``,
+``queries/embeddings.py``) against crafted corpora."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ from enterprise_data_quality_platform_spark.dedup import (
 from enterprise_data_quality_platform_spark.dedup.jaccard import containment_pairs
 from enterprise_data_quality_platform_spark.queries import dedup_ops
 from enterprise_data_quality_platform_spark.queries import embeddings as em
+from enterprise_data_quality_platform_spark.queries import text as tx
 from enterprise_data_quality_platform_spark.similarity import (
     brute_force_topk,
     lsh_ann_topk,
@@ -511,22 +514,251 @@ def test_semantic_dedup_recall_vs_brute_force(spark):
     assert recalls[3] > recalls[1]  # multiprobe genuinely buys recall
 
 
-def test_packed_score_division_is_exact(spark):
-    """kept_score_e4 = packed div 1e12 must use integer division: packed
-    exceeds 2^53, where the float quotient rounds 9999 up to 10000 for
-    small doc_ids. Mirrors dedup_keep_best_quality's select."""
-    B = 1000000000000
-    rows = [
-        Row(packed=9999 * B + (B - 1)),  # score 9999, doc_id 1 — the trap
-        Row(packed=10000 * B + (B - 5)),
-        Row(packed=0 * B + (B - 7)),
-    ]
-    df = spark.createDataFrame(rows)
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _emb(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+
+def test_packed_score_division_is_exact(spark, crafted_tables):
+    """dedup_keep_best_quality packs ``score_e4 * 10^12 + (10^12 - doc_id)``
+    into one BIGINT. For score 9999 and a small doc_id the packed value
+    exceeds 2^53, where a float quotient rounds the kept score up to
+    10000; the integer division must return it exactly."""
+    # 200 tokens, one '.', 10,000 chars, no stopwords: score 0.9999
+    text = " ".join(["a" * 49] * 200) + "."
+    crafted_tables(tx, _docs(spark, [(1, text), (2, text)]))
     got = [
-        (r["score"], r["doc_id"])
-        for r in df.select(
-            F.expr(f"packed div {B}").alias("score"),
-            (F.lit(B) - F.col("packed") % F.lit(B)).cast("long").alias("doc_id"),
-        ).collect()
+        (r.n_docs, r.kept_doc_id, r.kept_score_e4)
+        for r in tx.dedup_keep_best_quality(spark, "unused").collect()
     ]
-    assert got == [(9999, 1), (10000, 5), (0, 7)]
+    assert got == [(2, 1, 9999)]
+
+
+def test_span_memorization_cross_doc_only(spark, crafted_tables):
+    """A 32-char span repeated across two docs is reported; the same span
+    repeated twice inside ONE doc is not (self-repetition is
+    text_repetition_stats' business)."""
+    shared = "A" * 32  # aligned at pos 1 in both docs
+    rows = [
+        (1, shared + " tail one ........."),
+        (2, shared + " other tail ......."),
+        # doc 3 repeats its own 32-prefix at stride-aligned pos 33 but no
+        # other doc shares it -> excluded by n_docs > 1
+        (3, "B" * 32 + "B" * 32),
+    ]
+    crafted_tables(dedup_ops, _docs(spark, rows))
+    got = {
+        r.span: (r.n_docs, r.n_occurrences)
+        for r in dedup_ops.dedup_span_memorization(spark, "unused").collect()
+    }
+    assert got[shared] == (2, 2)
+    assert all(not s.startswith("B") for s in got)
+
+
+def test_span_memorization_counts_multi_occurrence(spark, crafted_tables):
+    """n_occurrences sums ALL stride-aligned occurrences across the
+    matching docs, including repeats within a doc once the span is
+    cross-doc."""
+    # 32 DISTINCT chars: stride windows that straddle the copy boundary
+    # (positions 9/17/25) are rotations, not equal to s — only the two
+    # aligned copies in doc 1 and the one in doc 2 count.
+    s = "abcdefghijklmnopqrstuvwxyz012345"
+    rows = [
+        (1, s + s),  # positions 1 and 33 (both ≡ 1 mod 8) -> 2 occurrences
+        (2, s + " x"),
+    ]
+    crafted_tables(dedup_ops, _docs(spark, rows))
+    got = {
+        r.span: (r.n_docs, r.n_occurrences)
+        for r in dedup_ops.dedup_span_memorization(spark, "unused").collect()
+    }
+    assert got[s] == (2, 3)
+
+
+def test_span_memorization_short_docs_skipped(spark, crafted_tables):
+    rows = [(1, "short"), (2, "short")]
+    crafted_tables(dedup_ops, _docs(spark, rows))
+    assert dedup_ops.dedup_span_memorization(spark, "unused").count() == 0
+
+
+def test_span_memorization_plan(spark):
+    """Two-level aggregate (no Expand) + TakeOrderedAndProject top-k."""
+    plan = plan_of(spark, "dedup_span_memorization")
+    assert "Expand" not in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_centroid_outliers_ranks_farthest_first(spark, crafted_tables):
+    """Three tight members + one flipped vector: the flipped one is the
+    rank-1 outlier with centroid_cos far below the tight members'."""
+    rows = [
+        (1, [1.0, 0.0], 0),
+        (2, [0.9, 0.1], 0),
+        (3, [1.0, 0.1], 0),
+        (4, [-1.0, 0.0], 0),  # opposes the centroid
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_centroid_outliers(spark, "unused").collect()
+    assert [r.vec_id for r in out if r.outlier_rank == 1] == [4]
+    by_rank = sorted(out, key=lambda r: r.outlier_rank)
+    assert by_rank[0].centroid_cos < 0 < by_rank[-1].centroid_cos
+
+
+def test_centroid_outliers_per_label_and_capped(spark, crafted_tables):
+    """Ranking restarts per label and emits at most 5 rows per label."""
+    rows = [(i, [1.0, float(i) / 100.0], 0) for i in range(1, 8)] + [
+        (100 + i, [0.0, 1.0 + i / 100.0], 1) for i in range(1, 4)
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_centroid_outliers(spark, "unused").collect()
+    n_by_label = {}
+    for r in out:
+        n_by_label[r.label] = n_by_label.get(r.label, 0) + 1
+    assert n_by_label == {0: 5, 1: 3}
+    assert {r.outlier_rank for r in out if r.label == 0} == {1, 2, 3, 4, 5}
+
+
+def test_centroid_outliers_agrees_with_label_centroid_min(spark, crafted_tables):
+    """The rank-1 outlier's cosine per label equals embed_label_centroid's
+    min_cohesion (shared partials, two consumers)."""
+    rows = [
+        (1, [1.0, 0.2, 0.1], 0),
+        (2, [0.8, 0.3, 0.0], 0),
+        (3, [-0.5, 1.0, 0.4], 0),
+        (4, [0.1, 0.9, 0.9], 1),
+        (5, [0.2, 1.0, 0.8], 1),
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    mins = {
+        r.label: r.min_cohesion
+        for r in em.embed_label_centroid(spark, "unused").collect()
+    }
+    worst = {
+        r.label: r.centroid_cos
+        for r in em.embed_centroid_outliers(spark, "unused").collect()
+        if r.outlier_rank == 1
+    }
+    assert worst == mins
+
+
+def test_label_confusion_identical_and_orthogonal(spark, crafted_tables):
+    """Two labels pointing the same way read ~1.0; orthogonal labels read
+    ~0.0; the matrix is upper-triangular (label_a < label_b)."""
+    rows = [
+        (1, [1.0, 0.0], 0),
+        (2, [0.9, 0.0], 0),
+        (3, [0.5, 0.0], 1),  # same direction as label 0
+        (4, [0.0, 1.0], 2),  # orthogonal
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    out = {
+        (r.label_a, r.label_b): r.centroid_cos
+        for r in em.embed_label_confusion(spark, "unused").collect()
+    }
+    assert set(out) == {(0, 1), (0, 2), (1, 2)}
+    assert out[(0, 1)] == pytest.approx(1.0, abs=1e-4)
+    assert out[(0, 2)] == pytest.approx(0.0, abs=1e-4)
+    assert out[(1, 2)] == pytest.approx(0.0, abs=1e-4)
+
+
+def test_label_confusion_count_invariant(spark, crafted_tables):
+    """Cosine between centroids ignores member counts: duplicating every
+    member of one label leaves the matrix unchanged (the 1/n factors
+    cancel — the property that lets the op run on component SUMS)."""
+    base = [
+        (1, [1.0, 0.3], 0),
+        (2, [0.7, 0.5], 0),
+        (3, [0.2, 1.0], 1),
+    ]
+    dup = base + [(10 + i, v, lb) for i, (_, v, lb) in enumerate(base) if lb == 0]
+    crafted_tables(em, _emb(spark, base))
+    one = {
+        (r.label_a, r.label_b): r.centroid_cos
+        for r in em.embed_label_confusion(spark, "unused").collect()
+    }
+    crafted_tables(em, _emb(spark, dup))
+    two = {
+        (r.label_a, r.label_b): r.centroid_cos
+        for r in em.embed_label_confusion(spark, "unused").collect()
+    }
+    for k in one:
+        assert one[k] == pytest.approx(two[k], abs=2e-6)
+
+
+def test_label_confusion_reuses_centroid_exchange(spark):
+    """The self-join's broadcast side must reuse the probe side's centroid
+    shuffle (identical pruning on both aliases) — a separate norms
+    aggregate used to re-run the corpus posexplode (3 scans); the
+    diagonal-window form runs it once (AQE runtime decision, so read the
+    executed plan)."""
+    df = em.embed_label_confusion(spark, SF_SMALL)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in final
+
+
+def test_exact_dup_vectors_detects_quantized_duplicates(spark, crafted_tables):
+    rows = [
+        (1, [0.5, -0.25], 0),
+        (2, [0.5, -0.25], 0),          # exact dup of 1
+        (3, [0.5000000001, -0.25], 0),  # inside 1e-6 quantum -> dup of 1
+        (4, [0.5, -0.26], 0),           # differs at 1e-2 -> distinct
+        (5, [0.1, 0.1], 1),
+        (6, [0.1, 0.1], 1),             # second dup group
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (2, 5, 3)
+
+
+def test_exact_dup_vectors_clean_corpus_zeroes(spark, crafted_tables):
+    rows = [(1, [0.1, 0.2], 0), (2, [0.3, 0.4], 0)]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (0, 0, 0)
+
+
+def test_exact_dup_vectors_nonfinite_components_fingerprint(spark, crafted_tables):
+    """NaN/Inf/NULL components must map to sentinel
+    tokens, not ANSI-throw in the BIGINT quantizer or be silently dropped
+    by concat_ws — two vectors sharing the same non-finite pattern are
+    the SAME fingerprint; NULL vs 0.0 are DIFFERENT."""
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, [nan, 0.5], 0),
+        (2, [nan, 0.5], 0),      # dup of 1 (same NaN pattern)
+        (3, [inf, 0.5], 0),      # distinct: inf != nan token
+        (4, [-inf, 0.5], 0),     # distinct: sign preserved
+        (5, [None, 0.0], 0),     # null token, NOT dropped:
+        (6, [0.0, 0.0], 0),      # ...so this is NOT a dup of 5
+    ]
+    crafted_tables(em, _emb(spark, rows))
+    out = em.embed_exact_dup_vectors(spark, "unused").collect()[0]
+    assert (out.n_dup_groups, out.n_dup_vectors, out.largest_group) == (1, 2, 2)
+
+
+def test_label_centroid_cohesion_values(spark, crafted_tables):
+    rows = [
+        # label 0: identical vectors -> cohesion exactly 1
+        (1, [1.0, 0.0, 0.0], 0),
+        (2, [1.0, 0.0, 0.0], 0),
+        # label 1: orthogonal pair -> centroid [.5,.5,0], cos = 1/sqrt(2)
+        (3, [1.0, 0.0, 0.0], 1),
+        (4, [0.0, 1.0, 0.0], 1),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    crafted_tables(em, df)
+    got = {r.label: r for r in em.embed_label_centroid(spark, "unused").collect()}
+    assert got[0].n_vectors == 2
+    assert got[0].avg_cohesion == pytest.approx(1.0, abs=1e-4)
+    assert got[1].avg_cohesion == pytest.approx(1 / math.sqrt(2), abs=1e-4)
+    assert got[1].min_cohesion == pytest.approx(1 / math.sqrt(2), abs=1e-4)
+
+
+def test_label_centroid_broadcasts_centroids(spark):
+    plan = plan_of(spark, "embed_label_centroid")
+    assert "BroadcastHashJoin" in plan  # centroid frame is size-constant
+    assert "NestedLoop" not in plan

@@ -103,3 +103,44 @@ def test_freq_sketch_never_underestimates(spark):
         assert r.cms_estimate >= r.exact_count  # CMS invariant
         # eps=0.001 of N(>=1000 at sf0.001) -> tiny overestimate budget
         assert r.cms_estimate - r.exact_count <= max(10, total)
+
+
+def test_fd_check_counts_majority_violations(spark, crafted_tables):
+    rows = [
+        (1, "x"), (1, "x"), (1, "y"),  # key 1: majority x, 1 violating row
+        (2, "z"), (2, "z"),            # key 2: clean
+    ]
+    df = spark.createDataFrame(rows, "o_custkey long, o_orderpriority string")
+    crafted_tables(dq, df)
+    row = dq.dq_fd_check(spark, "unused").collect()[0]
+    assert (row.n_keys, row.violating_keys, row.violating_rows) == (2, 1, 1)
+    assert row.fd_strength == pytest.approx(4 / 5, abs=1e-6)
+
+
+def test_fd_check_no_expand(spark):
+    """Two-level aggregate, not count_distinct: no Expand row duplication."""
+    plan = plan_of(spark, "dq_fd_check")
+    assert "Expand" not in plan
+
+
+def test_benford_digit_extraction_and_shares(spark, sf_dir):
+    rows = dq.dq_benford(spark, sf_dir).collect()
+    digits = [r.digit for r in rows]
+    assert digits == sorted(digits) and set(digits) <= set("123456789")
+    assert abs(sum(r.share for r in rows) - 1.0) < 1e-9
+    for r in rows:
+        assert r.deviation == pytest.approx(r.share - r.benford_expected)
+
+
+def test_correlation_exact_on_linear_data(spark, crafted_tables):
+    """y = 3x exactly -> r == 1.0, slope == 3.0 bit-exact (all moments are
+    exact decimals; the closed form divides identical quantities)."""
+    df = spark.createDataFrame(
+        [(float(i), float(3 * i)) for i in range(1, 101)],
+        "l_quantity double, l_extendedprice double",
+    )
+    crafted_tables(dq, df)
+    row = dq.dq_correlation(spark, "unused").first()
+    assert row.n == 100
+    assert row.pearson_r == 1.0
+    assert row.slope == 3.0

@@ -221,3 +221,140 @@ def test_zorder_locality_no_udf(spark):
     plan = plan_of(spark, "events_zorder_locality")
     assert "Python" not in plan  # bit math stays in codegen
     assert "Window" not in plan
+
+
+def _snap(spark, rows):
+    return spark.createDataFrame(rows, "key long, cents long, status string")
+
+
+def test_snapshot_diff_classifies_all_four_classes(spark):
+    old = _snap(spark, [(1, 100, "O"), (2, 200, "F"), (3, 300, "O")])
+    new = _snap(spark, [(2, 200, "F"), (3, 333, "O"), (4, 400, "P")])
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
+
+
+def test_snapshot_diff_null_value_is_not_equal_to_literal(spark):
+    """NULL in a compared column must differ from the string 'null' and
+    must compare equal to NULL on the other side."""
+    old = _snap(spark, [(1, None, "x"), (2, 5, None)])
+    new = _snap(spark, [(1, None, "x"), (2, 5, "null")])
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "unchanged", 2: "changed"}
+
+
+def test_snapshot_diff_value_swap_between_columns_is_changed(spark):
+    """xxhash64 SKIPS null inputs, so without the per-column isnull flags
+    of the native fingerprint, a value moving between two columns —
+    (x, NULL) -> (NULL, x) — would hash identically and classify
+    'unchanged'."""
+    old = _snap(spark, [(1, 7, None)])
+    new = spark.createDataFrame(
+        [(1, None, "7")], "key long, cents long, status string"
+    )
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "changed"}
+
+
+def test_snapshot_diff_map_columns_supported(spark):
+    """MapType is the one type xxhash64 rejects — top-level map columns
+    are canonicalised as array_sort(map_entries(col)) and hashed natively
+    (pinned so the native-fingerprint rewrite can never silently drop map
+    support)."""
+    old = spark.createDataFrame(
+        [(1, {"a": 1}), (2, {"b": 2})], "key long, attrs map<string,int>"
+    )
+    new = spark.createDataFrame(
+        [(1, {"a": 1}), (2, {"b": 3})], "key long, attrs map<string,int>"
+    )
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "unchanged", 2: "changed"}
+
+
+def test_snapshot_diff_map_entry_order_insensitive(spark):
+    """Two logically-equal maps built in DIFFERENT entry orders must
+    classify 'unchanged' (a string-cast fallback stringifies entries in
+    internal order, so map_concat vs parquet-round-trip orderings would
+    spuriously classify 'changed')."""
+    old = spark.range(1).select(
+        F.col("id").alias("key"),
+        F.create_map(
+            F.lit("a"), F.lit(1), F.lit("b"), F.lit(2), F.lit("c"), F.lit(3)
+        ).alias("attrs"),
+    )
+    new = spark.range(1).select(
+        F.col("id").alias("key"),
+        F.create_map(
+            F.lit("c"), F.lit(3), F.lit("a"), F.lit(1), F.lit("b"), F.lit(2)
+        ).alias("attrs"),
+    )
+    got = diff_snapshots(old, new, keys=["key"]).collect()
+    assert [r.change_type for r in got] == ["unchanged"]
+    # and a real value change under reordered entries still surfaces
+    new2 = spark.range(1).select(
+        F.col("id").alias("key"),
+        F.create_map(
+            F.lit("c"), F.lit(3), F.lit("a"), F.lit(9), F.lit("b"), F.lit(2)
+        ).alias("attrs"),
+    )
+    got2 = diff_snapshots(old, new2, keys=["key"]).collect()
+    assert [r.change_type for r in got2] == ["changed"]
+
+
+def test_snapshot_diff_null_map_vs_empty_map(spark):
+    """NULL map and empty map must not collide: array_sort(map_entries(
+    NULL)) is NULL (xxhash64 skips it) — the isnull flag carries the
+    distinction, same scheme as scalar columns."""
+    old = spark.createDataFrame(
+        [(1, None), (2, {})], "key long, attrs map<string,int>"
+    )
+    new = spark.createDataFrame(
+        [(1, {}), (2, {})], "key long, attrs map<string,int>"
+    )
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "changed", 2: "unchanged"}
+
+
+def test_snapshot_diff_nested_map_does_not_crash(spark):
+    """xxhash64 rejects MapType RECURSIVELY — an
+    array<map<..>> compare column must take the string-cast sentinel
+    branch, not fail analysis."""
+    old = spark.createDataFrame(
+        [(1, [{"a": 1}]), (2, [{"b": 2}])],
+        "key long, tags array<map<string,int>>",
+    )
+    new = spark.createDataFrame(
+        [(1, [{"a": 1}]), (2, [{"b": 99}])],
+        "key long, tags array<map<string,int>>",
+    )
+    got = {
+        r.key: r.change_type
+        for r in diff_snapshots(old, new, keys=["key"]).collect()
+    }
+    assert got == {1: "unchanged", 2: "changed"}
+
+
+def test_snapshot_summary_counts(spark):
+    old = _snap(spark, [(i, i * 10, "O") for i in range(10)])
+    new = _snap(
+        spark,
+        [(i, i * 10 + (1 if i % 3 == 0 else 0), "O") for i in range(2, 12)],
+    )
+    got = {r.change_type: r.n for r in diff_summary(old, new, ["key"]).collect()}
+    # keys 0,1 removed; 10,11 added; of 2..9: 3,6,9 changed -> 3; rest 5
+    assert got == {"added": 2, "removed": 2, "changed": 3, "unchanged": 5}

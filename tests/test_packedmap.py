@@ -6,11 +6,11 @@ The load-bearing properties: exact inner-join semantics (absent key ⇒
 drop; negative keys recover via the two's-complement slot identity),
 loud dim-side guards for duplicate keys and out-of-domain codes, and —
 critically — the guard fires EVEN WHEN the violation drops every probe
-row (the AQE empty-relation propagation hole found in round 8: a
-result-side guard join is eliminated before its stage materializes when
-the aggregate above it is empty). Distinct and per-key counts answer
-exactly, and never raise, on every crafted key domain, including keys
-repeated past a 7-bit (127) and a 15-bit (32767) slot."""
+row (AQE's empty-relation propagation eliminates a result-side guard
+join before its stage materializes when the aggregate above it is
+empty). Distinct and per-key counts answer exactly, and never raise, on
+every crafted key domain, including keys repeated past a 7-bit (127) and
+a 15-bit (32767) slot."""
 
 from __future__ import annotations
 
@@ -71,9 +71,9 @@ def test_null_code_raises(spark):
     """A NULL code row must raise, not silently drop the key: bit_or /
     min / max all IGNORE NULLs, so before the _ccnt==_cnt check the word
     passed the guard while the slot stayed 0 — the probe dropped the key
-    where the plain join would have kept it with a NULL value (ADVICE
-    r8 medium). The word also holds a healthy non-NULL neighbor so the
-    occupancy/range checks alone cannot catch it."""
+    where the plain join would have kept it with a NULL value. The word
+    also holds a healthy non-NULL neighbor so the occupancy/range checks
+    alone cannot catch it."""
     df = spark.createDataFrame([(1, 5), (2, None)], "k long, v long")
     pmap = packed_code_map(
         df, "k", F.col("v"), slot_bits=8, guard_message="pm: bad domain"
@@ -86,7 +86,7 @@ def test_null_code_raises(spark):
 def test_words_fit_broadcast_falls_back_to_static_threshold(spark, sf_dir):
     """When the adaptive broadcast threshold is UNSET, Spark falls back
     to spark.sql.autoBroadcastJoinThreshold — the gate must read that
-    fallback, not assume the 64MB default (ADVICE r8): with the static
+    fallback, not assume the 64MB default: with the static
     conf at -1 (broadcasts off) the gate must return False. Sizes written
     with a unit ("67108864b", Spark's own printed form, and "64m") parse
     as Spark parses them."""

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from enterprise_data_quality_platform_spark.queries import all_queries
 
-from conftest import SF_SMALL, plan_of
+from conftest import SF_SMALL, plan_of, solo_results
 
 SPECS = all_queries()
 
@@ -49,7 +49,7 @@ def test_suite_fusion_reduces_actions(spark):
     the row count and the null-free not-null; one groupBy answers orders'
     categorical checks) and stays under a pinned job count, counted through
     the caller's job group, which the runner's pool threads inherit. Its
-    results, violation samples included, equal the fuse=False path (one job
+    results, violation samples included, equal ``solo_results`` (one job
     per check, no footers)."""
     from enterprise_data_quality_platform_spark.checks.runner import (
         plan_suite,
@@ -79,7 +79,7 @@ def test_suite_fusion_reduces_actions(spark):
     ]
     fused, fused_jobs = in_group("suite-fused", lambda: run_suite(tables, _SUITE))
     unfused, unfused_jobs = in_group(
-        "suite-unfused", lambda: run_suite(tables, _SUITE, fuse=False)
+        "suite-unfused", lambda: solo_results(tables, _SUITE)
     )
     strip = lambda rs: [  # noqa: E731
         (r.check_name, r.status, r.violations, r.total, r.observed) for r in rs

@@ -28,6 +28,35 @@ from enterprise_data_quality_platform_spark.streaming import (
 from conftest import SF_SMALL
 
 
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),  # watermarks need LTZ
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+def _write_events(path, ids, ts="2024-06-01 10:00:00", **cols):
+    """Write events ``ids`` as one parquet file of ``EVENTS_SCHEMA``. ``ts``
+    and each of ``cols`` (``user_id``, ``event_type``, ``value``) is either
+    one value per event or one value for all of them."""
+    pd.DataFrame(
+        {
+            "event_id": ids,
+            "ts": pd.to_datetime(ts),
+            "user_id": 1,
+            "event_type": "view",
+            "value": 1.0,
+            "props": "{}",
+            **cols,
+        }
+    ).astype({"ts": "datetime64[us]"}).to_parquet(path)
+
+
 def _run_to_memory(stream_df, name: str, output_mode: str = "append"):
     q = (
         stream_df.writeStream.format("memory")
@@ -180,25 +209,15 @@ def test_watermark_drops_late_rows(spark):
     (eventTimeWatermarkForLateEvents lags one batch), so the drop is
     observable from the second batch after the watermark advanced — hence
     three micro-batches: advance, (grace), too-late."""
-    def write(path, ids, tss):
-        pd.DataFrame(
-            {
-                "event_id": ids,
-                "ts": pd.to_datetime(tss),
-                "user_id": [1] * len(ids),
-                "event_type": ["view"] * len(ids),
-                "value": [1.0] * len(ids),
-                "props": ["{}"] * len(ids),
-            }
-        ).astype({"ts": "datetime64[us]"}).to_parquet(path)
-
     with tempfile.TemporaryDirectory(prefix="edqp-late-") as src:
         # batch 0: recent rows push the watermark to 11:50
-        write(f"{src}/a.parquet", [1, 2], ["2024-06-01 10:00:00", "2024-06-01 12:00:00"])
+        _write_events(
+            f"{src}/a.parquet", [1, 2], ["2024-06-01 10:00:00", "2024-06-01 12:00:00"]
+        )
         # batch 1: grace batch (late filter still at the old watermark)
-        write(f"{src}/b.parquet", [3], ["2024-06-01 12:30:00"])
+        _write_events(f"{src}/b.parquet", [3], ["2024-06-01 12:30:00"])
         # batch 2: hours-late row — late filter now at 11:50 → dropped
-        write(f"{src}/c.parquet", [4], ["2024-06-01 07:00:00"])
+        _write_events(f"{src}/c.parquet", [4], ["2024-06-01 07:00:00"])
 
         # the file source orders batches by modification time
         import os
@@ -208,18 +227,8 @@ def test_watermark_drops_late_rows(spark):
         for i, f in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
             os.utime(f"{src}/{f}", (now - 60 + i * 20, now - 60 + i * 20))
 
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.TimestampType()),  # watermark needs LTZ
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -377,17 +386,9 @@ def test_incident_tracker_state_carries_across_micro_batches(spark):
 
     src = tempfile.mkdtemp(prefix="edqp-xbatch-")
 
-    def write(name, rows):
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pd.to_datetime([r[1] for r in rows]).astype("datetime64[us]"),
-                "user_id": [1] * len(rows),
-                "event_type": ["error"] * len(rows),
-                "value": [r[2] for r in rows],
-                "props": ["{}"] * len(rows),
-            }
-        ).to_parquet(f"{src}/{name}")
+    def write(name, rows):  # rows: (event_id, ts, value)
+        ids, tss, values = map(list, zip(*rows))
+        _write_events(f"{src}/{name}", ids, tss, event_type="error", value=values)
 
     # batch 0: trigger (200 > 150) and stay open
     write("a.parquet", [(1, "2024-01-01 00:00:00", 200.0),
@@ -401,10 +402,7 @@ def test_incident_tracker_state_carries_across_micro_batches(spark):
     os.utime(f"{src}/b.parquet", (now - 30, now - 30))
 
     stream_df = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -428,39 +426,21 @@ def test_watermark_append_mode_emits_only_finalized_windows(spark):
 
     src = tempfile.mkdtemp(prefix="edqp-append-")
 
-    def write(name, ids, tss):
-        pd.DataFrame(
-            {
-                "event_id": ids,
-                "ts": pd.to_datetime(tss).astype("datetime64[us]"),
-                "user_id": [1] * len(ids),
-                "event_type": ["view"] * len(ids),
-                "value": [1.0] * len(ids),
-                "props": ["{}"] * len(ids),
-            }
-        ).to_parquet(f"{src}/{name}")
-
     # batch 0: two rows in the 10:00 window
-    write("a.parquet", [1, 2], ["2024-06-01 10:05:00", "2024-06-01 10:20:00"])
+    _write_events(
+        f"{src}/a.parquet", [1, 2], ["2024-06-01 10:05:00", "2024-06-01 10:20:00"]
+    )
     # batch 1: watermark jumps past 11:00 (12:00 - 10min) → 10:00 window
     # finalizes WITH the in-grace row 3 that arrives in the same batch
-    write("b.parquet", [3, 4], ["2024-06-01 10:40:00", "2024-06-01 12:00:00"])
+    _write_events(
+        f"{src}/b.parquet", [3, 4], ["2024-06-01 10:40:00", "2024-06-01 12:00:00"]
+    )
     now = time.time()
     os.utime(f"{src}/a.parquet", (now - 60, now - 60))
     os.utime(f"{src}/b.parquet", (now - 30, now - 30))
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -517,25 +497,14 @@ def test_incident_tracker_hysteresis(spark):
         (4, 180, 160.0),
     ]
     src = tempfile.mkdtemp(prefix="edqp-inc-src-")
-    pdf = pd.DataFrame(
-        {
-            "event_id": [r[0] for r in rows],
-            "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=r[1]) for r in rows],
-            "user_id": [1] * len(rows),
-            "event_type": ["error"] * len(rows),
-            "value": [r[2] for r in rows],
-            "props": ["{}"] * len(rows),
-        }
+    _write_events(
+        f"{src}/batch.parquet",
+        [r[0] for r in rows],
+        [pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=r[1]) for r in rows],
+        event_type="error",
+        value=[r[2] for r in rows],
     )
-    stream_df = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(src)
-    )
-    # pandas defaults to nanos; Spark's `timestamp` wants micros
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(f"{src}/batch.parquet")
+    stream_df = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
     out = streaming_incident_tracker(
         stream_df, threshold=150.0, resolve_below=100.0
     )
@@ -584,17 +553,9 @@ def test_click_purchase_pairs_interval_semantics(spark):
     and a purchase BEFORE the click never matches."""
     import os
 
-    def write(path, rows):
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pd.to_datetime([r[1] for r in rows]),
-                "user_id": [r[2] for r in rows],
-                "event_type": [r[3] for r in rows],
-                "value": [1.0] * len(rows),
-                "props": ["{}"] * len(rows),
-            }
-        ).astype({"ts": "datetime64[us]"}).to_parquet(path)
+    def write(path, rows):  # rows: (event_id, ts, user_id, event_type)
+        ids, tss, users, types = map(list, zip(*rows))
+        _write_events(path, ids, tss, user_id=users, event_type=types)
 
     from enterprise_data_quality_platform_spark.streaming import (
         streaming_click_purchase_pairs,
@@ -612,17 +573,7 @@ def test_click_purchase_pairs_interval_semantics(spark):
                 (6, "2024-06-01 10:00:00", 3, "click"),
             ],
         )
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.TimestampType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
-        stream = spark.readStream.schema(schema).parquet(src)
+        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
         _run_to_memory(
             streaming_click_purchase_pairs(stream), "ssj_semantics_test"
         )
@@ -672,31 +623,12 @@ def test_streaming_upsert_sink_keeps_latest_per_key(spark, tmp_path):
 
     os.makedirs(src)
 
-    def write(name, rows):
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pd.to_datetime([r[1] for r in rows]),
-                "user_id": [r[2] for r in rows],
-                "event_type": ["view"] * len(rows),
-                "value": [float(r[3]) for r in rows],
-                "props": ["{}"] * len(rows),
-            }
-        ).astype({"ts": "datetime64[us]"}).to_parquet(f"{src}/{name}")
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    def write(name, rows):  # rows: (event_id, ts, user_id, value)
+        ids, tss, users, values = map(list, zip(*rows))
+        _write_events(f"{src}/{name}", ids, tss, user_id=users, value=values)
 
     def run():
-        stream = spark.readStream.schema(schema).parquet(src)
+        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
         streaming_upsert_sink(
             stream, spark, out, keys=["user_id"], checkpoint_dir=ckpt
         )
@@ -729,27 +661,8 @@ def test_streaming_upsert_sink_tie_breaks_on_event_id(spark, tmp_path):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    pd.DataFrame(
-        {
-            "event_id": [9, 4],
-            "ts": pd.to_datetime(["2024-06-01 10:00:00"] * 2),
-            "user_id": [1, 1],
-            "event_type": ["view", "view"],
-            "value": [111.0, 222.0],
-            "props": ["{}", "{}"],
-        }
-    ).astype({"ts": "datetime64[us]"}).to_parquet(f"{src}/a.parquet")
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(src)
+    _write_events(f"{src}/a.parquet", [9, 4], value=[111.0, 222.0])
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
     out = str(tmp_path / "state")
     streaming_upsert_sink(stream, spark, out, keys=["user_id"])
     rows = spark.read.parquet(out).collect()
@@ -764,39 +677,18 @@ def test_append_mode_emits_only_watermark_finalized_windows(spark):
     import os
     import time as _time
 
-    def write(path, ids, tss):
-        pd.DataFrame(
-            {
-                "event_id": ids,
-                "ts": pd.to_datetime(tss),
-                "user_id": [1] * len(ids),
-                "event_type": ["view"] * len(ids),
-                "value": [1.0] * len(ids),
-                "props": ["{}"] * len(ids),
-            }
-        ).astype({"ts": "datetime64[us]"}).to_parquet(path)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
     def run(mode):
         with tempfile.TemporaryDirectory(prefix="edqp-emit-") as src:
-            write(f"{src}/a.parquet", [1, 2], ["2024-06-01 10:15:00", "2024-06-01 10:20:00"])
-            write(f"{src}/b.parquet", [3], ["2024-06-01 12:00:00"])
-            write(f"{src}/c.parquet", [4], ["2024-06-01 13:05:00"])
+            _write_events(
+                f"{src}/a.parquet", [1, 2], ["2024-06-01 10:15:00", "2024-06-01 10:20:00"]
+            )
+            _write_events(f"{src}/b.parquet", [3], ["2024-06-01 12:00:00"])
+            _write_events(f"{src}/c.parquet", [4], ["2024-06-01 13:05:00"])
             now = _time.time()
             for i, f in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
                 os.utime(f"{src}/{f}", (now - 60 + i * 20, now - 60 + i * 20))
             stream = (
-                spark.readStream.schema(schema)
+                spark.readStream.schema(EVENTS_SCHEMA)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
@@ -848,28 +740,10 @@ def test_stream_stream_left_outer_null_emission(spark):
         streaming_click_conversion_outer,
     )
 
-    def write(path, rows):  # rows: (event_id, ts, type)
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": pd.to_datetime([r[1] for r in rows]),
-                "user_id": [1] * len(rows),
-                "event_type": [r[2] for r in rows],
-                "value": [1.0] * len(rows),
-                "props": ["{}"] * len(rows),
-            }
-        ).astype({"ts": "datetime64[us]"}).to_parquet(path)
+    def write(path, rows):  # rows: (event_id, ts, event_type)
+        ids, tss, types = map(list, zip(*rows))
+        _write_events(path, ids, tss, event_type=types)
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     with tempfile.TemporaryDirectory(prefix="edqp-outer-") as src:
         # batch 0: converted click + its purchase; and an orphan click
         write(
@@ -891,7 +765,7 @@ def test_stream_stream_left_outer_null_emission(spark):
         for i, f in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
             os.utime(f"{src}/{f}", (now - 60 + i * 20, now - 60 + i * 20))
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -958,28 +832,17 @@ def _emission_run(spark, mode, group_cols, window_col_name):
     import os
     import time as _time
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-
-    def write(path, ids, tss):
-        pd.DataFrame(
-            {"event_id": ids, "ts": pd.to_datetime(tss), "user_id": [1] * len(ids)}
-        ).astype({"ts": "datetime64[us]"}).to_parquet(path)
-
     with tempfile.TemporaryDirectory(prefix="edqp-emit2-") as src:
-        write(f"{src}/a.parquet", [1, 2], ["2024-06-01 10:15:00", "2024-06-01 10:20:00"])
-        write(f"{src}/b.parquet", [3], ["2024-06-01 12:00:00"])
-        write(f"{src}/c.parquet", [4], ["2024-06-01 13:05:00"])
+        _write_events(
+            f"{src}/a.parquet", [1, 2], ["2024-06-01 10:15:00", "2024-06-01 10:20:00"]
+        )
+        _write_events(f"{src}/b.parquet", [3], ["2024-06-01 12:00:00"])
+        _write_events(f"{src}/c.parquet", [4], ["2024-06-01 13:05:00"])
         now = _time.time()
         for i, f in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
             os.utime(f"{src}/{f}", (now - 60 + i * 20, now - 60 + i * 20))
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -1056,31 +919,6 @@ def test_session_window_append_emission_and_update_rejected(spark):
 
     with pytest.raises(AnalysisException, match="STREAMING_OUTPUT_MODE"):
         _emission_run(spark, "update", cols, "session_window")
-
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def _write_events(path, ids, ts0="2024-06-01 10:00:00"):
-    pd.DataFrame(
-        {
-            "event_id": ids,
-            "ts": pd.to_datetime([ts0] * len(ids)),
-            "user_id": [1] * len(ids),
-            "event_type": ["view"] * len(ids),
-            "value": [1.0] * len(ids),
-            "props": ["{}"] * len(ids),
-        }
-    ).astype({"ts": "datetime64[us]"}).to_parquet(path)
 
 
 def test_restart_processes_only_new_files(spark):

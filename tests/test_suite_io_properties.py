@@ -21,7 +21,7 @@ from enterprise_data_quality_platform_spark.checks.suite_io import (
 )
 from enterprise_data_quality_platform_spark.queries.dq import _SUITE
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, solo_results
 
 
 def test_suite_json_round_trip():
@@ -158,8 +158,8 @@ def test_fused_equals_unfused(spark):
         n: table(spark, SF_SMALL, n)
         for n in ("lineitem", "orders", "nation", "customer")
     }
-    fused = run_suite(tables, _SUITE, fuse=True)
-    unfused = run_suite(tables, _SUITE, fuse=False)
+    fused = run_suite(tables, _SUITE)
+    unfused = solo_results(tables, _SUITE)
     assert [(r.check_name, r.status, r.violations) for r in fused] == [
         (r.check_name, r.status, r.violations) for r in unfused
     ]

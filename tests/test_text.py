@@ -50,3 +50,38 @@ def test_perplexity_proxy_reuses_token_pass(spark):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert len(re.findall(r"\(\d+\) ReusedExchange", plan)) >= 2
+
+
+def test_zipf_fit_perfect_power_law(spark, crafted_tables):
+    """A corpus built so freq(rank) = C * rank^-1 exactly fits slope -1."""
+    # token 'w{r}' appears floor(120/r) times -> ln freq ~ ln 120 - ln r
+    words = []
+    for r in range(1, 9):
+        words += [f"w{r:02d}"] * (120 // r)
+    rows = [(1, " ".join(words))]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    crafted_tables(tx, df)
+    out = tx.text_zipf_fit(spark, "unused").collect()[0]
+    assert out.n_ranks == 8
+    # floor(120/r) deviates from 120/r by <1 count; slope lands near -1
+    assert out.zipf_slope == pytest.approx(-1.0, abs=0.05)
+
+
+def test_zipf_fit_uniform_corpus_slope_zero(spark, crafted_tables):
+    """Equal frequencies -> slope exactly 0 (templated/degenerate text)."""
+    rows = [(1, "aa bb cc dd " * 10)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    crafted_tables(tx, df)
+    out = tx.text_zipf_fit(spark, "unused").collect()[0]
+    assert out.n_ranks == 4
+    assert out.zipf_slope == 0.0
+
+
+def test_zipf_fit_single_token_null_slope(spark, crafted_tables):
+    """One distinct token -> OLS denominator 0 -> NULL, not a throw
+    (ANSI div-by-zero guard)."""
+    df = spark.createDataFrame([(1, "only only only")], "doc_id long, text string")
+    crafted_tables(tx, df)
+    out = tx.text_zipf_fit(spark, "unused").collect()[0]
+    assert out.n_ranks == 1
+    assert out.zipf_slope is None
